@@ -1,8 +1,10 @@
 package graft.ckpt
 
-import org.apache.hadoop.fs.Path
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.io.ParquetFooters
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Stage-level checkpointing with lineage + per-partition metrics
   * (SURVEY.md §2.9 ST2-ST3, §7.4.6).
@@ -12,30 +14,33 @@ import org.apache.spark.sql.functions._
   *
   *   - each stage owns `<root>/<name>`; if a prior run committed it
   *     (parquet `_SUCCESS` + `_manifest.json` present, with a MATCHING
-  *     input fingerprint) the stage is SKIPPED and its output is read
-  *     back — resume is therefore per-stage, and within a stage
-  *     per-partition via parquet task commits. A manifest whose recorded
-  *     fingerprint differs from the caller's (inputs or parameters
-  *     changed since the commit) forces a recompute instead of silently
-  *     returning stale data.
+  *     input fingerprint and a recorded schema) the stage is SKIPPED
+  *     and its output is read back with the recorded schema — resume is
+  *     therefore per-stage, and within a stage per-partition via
+  *     parquet task commits. A manifest whose recorded fingerprint
+  *     differs from the caller's (inputs or parameters changed since
+  *     the commit), or that records no schema, forces a recompute
+  *     instead of silently returning stale data.
   *   - commit protocol: write to `<dir>.tmp`, then atomic rename — a
   *     killed run never leaves a half-visible stage
   *   - every commit writes `_manifest.json` (underscore prefix so
-  *     spark.read.parquet ignores it): lineage (named inputs), input
-  *     fingerprint, row count, partition count, wall ms, rows/sec, and
-  *     per-partition row counts (the "triples/partition, mentions/sec"
-  *     metrics of the north rule)
+  *     spark.read.parquet ignores it) with the fields `stage`,
+  *     `fingerprint` (the caller's input fingerprint), `rows`, `wall_ms`
+  *     (compute + parquet commit), `rows_per_sec`, `lineage` (named
+  *     inputs), `per_partition` and `schema` (the stage's schema as the
+  *     parquet source reads it back, as a JSON object). `per_partition`
+  *     holds one `{"partition", "rows"}` entry per write task that left
+  *     a part file — the partition of the frame that produced the rows,
+  *     i.e. the "triples/partition" metric of the north rule — read
+  *     from the part files' footers, as is `rows`.
+  *
+  * A commit schedules only the jobs of its parquet write, and a resume
+  * none: the read-back needs no schema inference and the metrics need
+  * no re-scan.
   */
 object Checkpoint {
 
-  /** minimal JSON string escaping for interpolated values. */
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private val mapper = new ObjectMapper()
 
   final case class StageStats(
       name: String,
@@ -56,70 +61,77 @@ object Checkpoint {
       lineageInputs: Seq[String],
       fingerprint: String = "")(compute: => DataFrame): (DataFrame, StageStats) = {
     val dir = new Path(root, name)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest = new Path(dir, "_manifest.json")
-    val success = new Path(dir, "_SUCCESS")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dir.getFileSystem(conf)
 
-    if (fs.exists(manifest) && fs.exists(success) &&
-        readManifestFingerprint(fs, manifest).contains(esc(fingerprint))) {
-      val df = spark.read.parquet(dir.toString)
-      (df, StageStats(name, -1L, df.rdd.getNumPartitions, 0L, skipped = true))
-    } else {
-      val t0 = System.nanoTime()
-      val df = compute
-      val tmp = new Path(root, name + ".tmp")
-      fs.delete(tmp, true)
-      df.write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(dir, true)
-      if (!fs.rename(tmp, dir))
-        throw new IllegalStateException(s"commit rename failed for $name")
-      val out = spark.read.parquet(dir.toString)
-
-      // per-partition lineage metrics (one extra cheap job at commit time)
-      val pp = out
-        .groupBy(spark_partition_id().as("partition"))
-        .agg(count(lit(1)).as("rows"))
-        .orderBy("partition")
-        .collect()
-      val perPartition = pp
-        .map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-        .mkString("[", ",", "]")
-      val total = pp.map(_.getLong(1)).sum
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      val rowsPerSec = if (wallMs > 0) total * 1000.0 / wallMs else 0.0
-      val lineage =
-        lineageInputs.map(s => "\"" + esc(s) + "\"").mkString("[", ",", "]")
-      val json =
-        s"""{"stage":"${esc(name)}","fingerprint":"${esc(fingerprint)}",""" +
-          s""""rows":$total,"wall_ms":$wallMs,""" +
-          s""""rows_per_sec":$rowsPerSec,"lineage":$lineage,""" +
-          s""""per_partition":$perPartition}"""
-      val os = fs.create(manifest, true)
-      os.write(json.getBytes("UTF-8"))
-      os.close()
-      (out, StageStats(name, total, out.rdd.getNumPartitions, wallMs,
-        skipped = false))
+    committedSchema(fs, dir, fingerprint) match {
+      case Some(schema) =>
+        val df = spark.read.schema(schema).parquet(dir.toString)
+        (df, StageStats(name, -1L, df.rdd.getNumPartitions, 0L, skipped = true))
+      case None =>
+        val t0 = System.nanoTime()
+        val df = compute
+        val tmp = new Path(root, name + ".tmp")
+        fs.delete(tmp, true)
+        df.write.mode("overwrite").parquet(tmp.toString)
+        fs.delete(dir, true)
+        if (!fs.rename(tmp, dir))
+          throw new IllegalStateException(s"commit rename failed for $name")
+        val schema = asRead(df.schema).asInstanceOf[StructType]
+        val perTask = ParquetFooters.rowsPerTask(conf, dir)
+        val total = perTask.map(_._2).sum
+        val wallMs = (System.nanoTime() - t0) / 1000000
+        val m = mapper.createObjectNode()
+          .put("stage", name)
+          .put("fingerprint", fingerprint)
+          .put("rows", total)
+          .put("wall_ms", wallMs)
+          .put("rows_per_sec", if (wallMs > 0) total * 1000.0 / wallMs else 0.0)
+        val lineage = m.putArray("lineage")
+        lineageInputs.foreach(lineage.add)
+        val pp = m.putArray("per_partition")
+        perTask.foreach { case (p, n) =>
+          pp.addObject().put("partition", p).put("rows", n)
+        }
+        m.set[JsonNode]("schema", mapper.readTree(schema.json))
+        val os = fs.create(new Path(dir, "_manifest.json"), true)
+        try os.write(mapper.writeValueAsBytes(m)) finally os.close()
+        val out = spark.read.schema(schema).parquet(dir.toString)
+        (out, StageStats(name, total, out.rdd.getNumPartitions, wallMs,
+          skipped = false))
     }
   }
 
-  /** escaped fingerprint value recorded in a committed manifest, or
-    * None if unreadable / absent (treated as a mismatch -> recompute).
+  /** the schema a committed stage recorded, if its fingerprint matches;
+    * None when `_SUCCESS` or the manifest is missing, or the manifest is
+    * unreadable, records another fingerprint or no schema (all treated
+    * as a mismatch -> recompute).
     */
-  private def readManifestFingerprint(
-      fs: org.apache.hadoop.fs.FileSystem, manifest: Path): Option[String] =
+  private def committedSchema(
+      fs: FileSystem, dir: Path, fingerprint: String): Option[StructType] =
     try {
-      val in = fs.open(manifest)
-      val out = new java.io.ByteArrayOutputStream()
-      try {
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-      } finally in.close()
-      val s = new String(out.toByteArray, "UTF-8")
-      val m = """"fingerprint":"((?:[^"\\]|\\.)*)"""".r
-        .findFirstMatchIn(s)
-      m.map(_.group(1))
+      if (!fs.exists(new Path(dir, "_SUCCESS"))) None
+      else {
+        val in = fs.open(new Path(dir, "_manifest.json"))
+        val m = try mapper.readTree(in) finally in.close()
+        val schema = m.path("schema")
+        if (m.path("fingerprint").asText(null) != fingerprint ||
+            !schema.isObject) None
+        else Some(DataType.fromJson(schema.toString).asInstanceOf[StructType])
+      }
     } catch { case _: Exception => None }
+
+  /** `t` as Spark's parquet source reads it back: every field, array
+    * element and map value nullable.
+    */
+  private def asRead(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asRead(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asRead(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(asRead(m.keyType), asRead(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   def wasCommitted(spark: SparkSession, root: String, name: String): Boolean = {
     val dir = new Path(root, name)

@@ -2,7 +2,6 @@ package graft.io
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Iceberg-semantics table IO on plain Parquet (SURVEY.md §7.4.1).
   *
@@ -17,6 +16,9 @@ import org.apache.spark.sql.functions._
   *     partition spec, row count, lineage, and parent snapshot — readers
   *     resolve the latest committed metadata and never observe a
   *     half-written snapshot
+  *   - the row count is read from the committed part files' footers
+  *     (every `partitionBy` subdirectory), so a write schedules only the
+  *     jobs of its parquet write
   *   - time travel: `read(dir, asOf = Some(n))`
   *
   * The KG pipeline materializes node/edge tables through this interface.
@@ -57,7 +59,8 @@ object TableIO {
     if (!f.rename(tmp, snapDir))
       throw new IllegalStateException(s"snapshot rename failed: $snapDir")
 
-    val rows = spark.read.parquet(snapDir.toString).count()
+    val rows = ParquetFooters.rowsPerTask(
+      spark.sparkContext.hadoopConfiguration, snapDir).map(_._2).sum
     val parent = if (version == 1) "null" else (version - 1).toString
     val json =
       s"""{"format_version":1,"snapshot":$version,"parent":$parent,""" +

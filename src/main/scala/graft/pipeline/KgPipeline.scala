@@ -11,6 +11,7 @@ import graft.schema._
 import graft.triple.TripleExtract
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{array, avg, col, concat, count, lit, min}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** End-to-end KG construction (SURVEY.md §7.2, north rule):
   *
@@ -156,6 +157,8 @@ object KgPipeline {
     // the index is committed as an `entity_index` stage and LOADED back
     // on resume (the build is skipped on a matching fingerprint); the
     // collect is driver-sized by design — this is the broadcast index.
+    // It is sorted on the driver in Spark's string order (UTF-8 bytes),
+    // so the load is the collect's one job, with no range-sort jobs.
     val index: IndexedSeq[(String, Array[Float])] = checkpointRoot match {
       case Some(_) =>
         val idxDf = stage("entity_index", Seq("entities")) {
@@ -164,8 +167,9 @@ object KgPipeline {
             .map { case (id, v) => (id, v.toSeq) }
             .toDF("entity_id", "vec")
         }
-        idxDf.orderBy("entity_id").collect()
+        idxDf.collect()
           .map(r => (r.getString(0), r.getSeq[Float](1).toArray))
+          .sortBy(e => UTF8String.fromString(e._1))
           .toIndexedSeq
       case None => EntityLink.buildIndex(entities)
     }

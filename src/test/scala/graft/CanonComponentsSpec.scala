@@ -147,4 +147,46 @@ class CanonComponentsSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(ok == Map("e1" -> "e1", "e2" -> "e1"))
   }
+
+  test("canonicalMap(Seq) rejects duplicate and null entity_id on both " +
+    "branches with canonicalMapDf's IllegalArgumentException") {
+    import graft.schema.Entity
+    val dup = Seq(Entity("e1", "streamer", Nil),
+      Entity("e2", "unrelatedword", Nil), Entity("e1", "streamers", Nil))
+    val nul = Seq(Entity(null, "streamer", Nil),
+      Entity("e2", "unrelatedword", Nil), Entity(null, "streamers", Nil))
+    // local branch (default cutoff) and distributed branch (cutoff 0)
+    for (localMax <- Seq(Canonicalize.LocalCanonMaxEntities, 0)) {
+      val d = intercept[IllegalArgumentException] {
+        Canonicalize.canonicalMap(spark, dup, 0.5, localMax)
+      }
+      assert(d.getMessage.contains("duplicate entity_id"))
+      assert(d.getMessage.contains("e1"))
+      // a duplicated null id used to surface as an NPE from the sort of
+      // the duplicate list
+      val n = intercept[IllegalArgumentException] {
+        Canonicalize.canonicalMap(spark, nul, 0.5, localMax)
+      }
+      assert(n.getMessage.contains("2 null entity_id"))
+      val one = intercept[IllegalArgumentException] {
+        Canonicalize.canonicalMap(spark, nul.take(2), 0.5, localMax)
+      }
+      assert(one.getMessage.contains("1 null entity_id"))
+    }
+  }
+
+  test("canonicalMapDf local path rejects null entity_id, single or " +
+    "duplicated, with an IllegalArgumentException") {
+    import spark.implicits._
+    val rows = Seq[(String, Seq[String])](
+      (null, Seq("streamer")), ("e2", Seq("unrelatedword")),
+      (null, Seq("streamers")))
+    for ((input, n) <- Seq(rows -> 2, rows.take(2) -> 1)) {
+      val ex = intercept[IllegalArgumentException] {
+        Canonicalize.canonicalMapDf(spark,
+          input.toDF("entity_id", "surfaces"), 0.5)
+      }
+      assert(ex.getMessage.contains(s"$n null entity_id"))
+    }
+  }
 }

@@ -1,10 +1,15 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.ckpt.Checkpoint
 import graft.gen.TranscriptGen
+import graft.io.TableIO
 import graft.pipeline.KgPipeline
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Resumability gate (north rule: "resumable from per-partition
   * checkpoints with lineage + metrics written alongside each commit";
@@ -227,5 +232,104 @@ class CheckpointSpec extends AnyFunSuite {
       minLinkScore = 0.99)
     assert(second.stats.forall(!_.skipped),
       s"stale reuse: ${second.stats.filter(_.skipped).map(_.name)}")
+  }
+
+  private val mapper = new ObjectMapper()
+  private def manifestPath(root: String, stage: String) =
+    Paths.get(root, stage, "_manifest.json")
+  private def manifest(root: String, stage: String): ObjectNode =
+    mapper.readTree(Files.readAllBytes(manifestPath(root, stage)))
+      .asInstanceOf[ObjectNode]
+
+  test("a stage commit schedules only its parquet write's jobs; a resume " +
+    "schedules none") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft_ckpt_jobs").toString
+    // a shuffle in the plan, so the write is more than one job
+    val df = spark.range(0, 1000, 1, 4).toDF("id")
+      .groupBy((col("id") % 7).as("k")).count()
+    val (_, bare) = JobCount(spark)(df.write.parquet(s"$root/bare"))
+    val ((_, st), commit) = JobCount(spark)(
+      Checkpoint.stage(spark, root, "s", Seq("in"), "fp")(df))
+    assert(!st.skipped && st.rows == 7)
+    assert(bare > 0 && commit == bare,
+      s"commit scheduled $commit jobs, the bare write $bare")
+    val ((out, st2), resume) = JobCount(spark)(
+      Checkpoint.stage(spark, root, "s", Seq("in"), "fp")(
+        fail("a resume must not recompute")))
+    assert(st2.skipped)
+    assert(resume == 0, s"resume scheduled $resume jobs")
+    assert(out.count() == 7)
+  }
+
+  test("TableIO.write schedules only its parquet write's jobs") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_tableio_jobs").toString
+    val df = Seq(("a", "uses", "b"), ("b", "calls", "c"), ("c", "uses", "d"))
+      .toDF("src", "pred", "dst").repartition(2)
+    val (_, bare) = JobCount(spark)(
+      df.write.partitionBy("pred").parquet(s"$dir/bare"))
+    val (v, write) = JobCount(spark)(
+      TableIO.write(spark, df, s"$dir/t", Seq("pred")))
+    assert(v == 1)
+    assert(bare > 0 && write == bare,
+      s"TableIO.write scheduled $write jobs, the bare write $bare")
+  }
+
+  test("manifest rows, per_partition and schema agree with the committed " +
+    "parquet for every pipeline stage") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_ckpt_meta").toString
+    val turns = TranscriptGen.transcripts(spark, nConvs = 10,
+      turnsPerConv = 4, hotTurns = 0, partitions = 2).toDF()
+    val result = KgPipeline.run(spark, turns, checkpointRoot = Some(root),
+      shufflePartitions = 2, gazetteerFastPathMax = 0)
+    assert(result.stats.map(_.name).contains("entity_index"))
+    result.stats.foreach { st =>
+      val m = manifest(root, st.name)
+      val out = spark.read.parquet(s"$root/${st.name}")
+      val pp = m.get("per_partition").elements.asScala.toSeq
+      val tasks = pp.map(_.get("partition").asInt)
+      assert(tasks == tasks.distinct.sorted, s"${st.name}: $tasks")
+      val n = out.count()
+      assert(m.get("rows").asLong == n && st.rows == n &&
+        pp.map(_.get("rows").asLong).sum == n, st.name)
+      assert(DataType.fromJson(m.get("schema").toString) == out.schema,
+        st.name)
+    }
+    assert(DataType.fromJson(manifest(root, "entity_index").get("schema")
+      .toString) == StructType(Seq(StructField("entity_id", StringType),
+        StructField("vec", ArrayType(FloatType)))))
+  }
+
+  test("the recorded schema and fingerprint survive JSON escaping") {
+    // a quote, a backslash and a non-BMP character
+    val name = "q\"b\\s\uD83D\uDE00"
+    val root = Files.createTempDirectory("graft_ckpt_esc").toString
+    val df = spark.range(3).toDF(name)
+    val (_, st) = Checkpoint.stage(spark, root, "s", Seq(name), name)(df)
+    assert(!st.skipped)
+    assert(DataType.fromJson(manifest(root, "s").get("schema").toString) ==
+      spark.read.parquet(s"$root/s").schema)
+    val (out, st2) = Checkpoint.stage(spark, root, "s", Seq(name), name)(
+      fail("a resume must not recompute"))
+    assert(st2.skipped)
+    assert(out.columns.toSeq == Seq(name) && out.count() == 3)
+  }
+
+  test("a manifest without a recorded schema gets its stage recomputed") {
+    val root = Files.createTempDirectory("graft_ckpt_noschema").toString
+    Checkpoint.stage(spark, root, "s", Seq("in"), "fp")(
+      spark.range(5).toDF("id"))
+    val m = manifest(root, "s")
+    m.remove("schema")
+    Files.write(manifestPath(root, "s"), mapper.writeValueAsBytes(m))
+    val (out, st) = Checkpoint.stage(spark, root, "s", Seq("in"), "fp")(
+      spark.range(4).toDF("id"))
+    assert(!st.skipped && out.count() == 4)
+    assert(manifest(root, "s").get("schema").isObject)
+    val (_, st2) = Checkpoint.stage(spark, root, "s", Seq("in"), "fp")(
+      fail("a resume must not recompute"))
+    assert(st2.skipped)
   }
 }

@@ -78,4 +78,25 @@ class TableIOSpec extends AnyFunSuite {
     val iceberg: KgTableFormat = new IcebergTableFormat
     assert(iceberg != null)
   }
+
+  test("metadata rows are right for a partitioned table and an empty one") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val dir = Files.createTempDirectory("graft_tableio5").toString
+    def rows(table: String): Long =
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(TableIO.metadata(spark, table)).get("rows").asLong
+    val edges = Seq(("a", "uses", "b"), ("b", "calls", "c"),
+      ("c", "uses", "d"), ("d", "owns", "e"))
+      .toDF("src", "pred", "dst").repartition(3)
+    TableIO.write(spark, edges, s"$dir/p", Seq("pred"))
+    assert(rows(s"$dir/p") == 4)
+    assert(TableIO.read(spark, s"$dir/p").count() == 4)
+    val empty = edges.filter(lit(false))
+    TableIO.write(spark, empty, s"$dir/e")
+    assert(rows(s"$dir/e") == 0)
+    assert(TableIO.read(spark, s"$dir/e").count() == 0)
+    TableIO.write(spark, empty, s"$dir/ep", Seq("pred"))
+    assert(rows(s"$dir/ep") == 0)
+  }
 }
