@@ -36,16 +36,20 @@ import org.apache.spark.sql.types._
   *
   * A commit schedules only the jobs of its parquet write, and a resume
   * none: the read-back needs no schema inference and the metrics need
-  * no re-scan.
+  * no re-scan. Neither plans the read-back frame: the caller's first
+  * action does.
   */
 object Checkpoint {
 
   private val mapper = new ObjectMapper()
 
+  /** What one `stage` call did: the committed `rows` and `wallMs` (as
+    * in the manifest), or `skipped` with rows -1 and wallMs 0 when the
+    * stage was resumed.
+    */
   final case class StageStats(
       name: String,
       rows: Long,
-      partitions: Int,
       wallMs: Long,
       skipped: Boolean)
 
@@ -66,8 +70,8 @@ object Checkpoint {
 
     committedSchema(fs, dir, fingerprint) match {
       case Some(schema) =>
-        val df = spark.read.schema(schema).parquet(dir.toString)
-        (df, StageStats(name, -1L, df.rdd.getNumPartitions, 0L, skipped = true))
+        (spark.read.schema(schema).parquet(dir.toString),
+          StageStats(name, -1L, 0L, skipped = true))
       case None =>
         val t0 = System.nanoTime()
         val df = compute
@@ -77,7 +81,7 @@ object Checkpoint {
         fs.delete(dir, true)
         if (!fs.rename(tmp, dir))
           throw new IllegalStateException(s"commit rename failed for $name")
-        val schema = asRead(df.schema).asInstanceOf[StructType]
+        val schema = ParquetFooters.asRead(df.schema)
         val perTask = ParquetFooters.rowsPerTask(conf, dir)
         val total = perTask.map(_._2).sum
         val wallMs = (System.nanoTime() - t0) / 1000000
@@ -96,9 +100,8 @@ object Checkpoint {
         m.set[JsonNode]("schema", mapper.readTree(schema.json))
         val os = fs.create(new Path(dir, "_manifest.json"), true)
         try os.write(mapper.writeValueAsBytes(m)) finally os.close()
-        val out = spark.read.schema(schema).parquet(dir.toString)
-        (out, StageStats(name, total, out.rdd.getNumPartitions, wallMs,
-          skipped = false))
+        (spark.read.schema(schema).parquet(dir.toString),
+          StageStats(name, total, wallMs, skipped = false))
     }
   }
 
@@ -120,18 +123,6 @@ object Checkpoint {
         else Some(DataType.fromJson(schema.toString).asInstanceOf[StructType])
       }
     } catch { case _: Exception => None }
-
-  /** `t` as Spark's parquet source reads it back: every field, array
-    * element and map value nullable.
-    */
-  private def asRead(t: DataType): DataType = t match {
-    case s: StructType => StructType(s.fields.map(f =>
-      f.copy(dataType = asRead(f.dataType), nullable = true)))
-    case a: ArrayType => ArrayType(asRead(a.elementType), containsNull = true)
-    case m: MapType =>
-      MapType(asRead(m.keyType), asRead(m.valueType), valueContainsNull = true)
-    case other => other
-  }
 
   def wasCommitted(spark: SparkSession, root: String, name: String): Boolean = {
     val dir = new Path(root, name)

@@ -18,7 +18,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     half-written snapshot
   *   - the row count is read from the committed part files' footers
   *     (every `partitionBy` subdirectory), so a write schedules only the
-  *     jobs of its parquet write
+  *     jobs of its parquet write, and its driver adds one footer read
+  *     per part file ([[ParquetFooters]])
   *   - time travel: `read(dir, asOf = Some(n))`
   *
   * The KG pipeline materializes node/edge tables through this interface.

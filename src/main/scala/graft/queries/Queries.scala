@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.io.ParquetFooters
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,13 @@ import org.apache.spark.sql.functions._
   */
 object Queries {
 
-  private[queries] def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** table `name` of `dir`, read with the schema taken from its footer
+    * on the driver, so the read schedules no schema-inference job
+    */
+  private[queries] def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(ParquetFooters.schema(spark, path)).parquet(path)
+  }
 
   def all: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.all ++ TextQueries.all ++ DedupQueries.all ++

@@ -85,6 +85,24 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("jaccard dispatch above the doc cutoff pulls no rows to the " +
+    "driver; both sides return the same pairs") {
+    val df = corpus()
+    val sets = df.select(col("doc_id"), Dedup.shingles(col("text")).as("s"))
+    def pairs(d: DataFrame): Set[(Long, Long)] =
+      d.select("src", "dst").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def collects(sites: Seq[String]) = sites.filter(_.startsWith("collect "))
+    val (inline, inlineSites) = JobCount.callSites(spark)(
+      Dedup.jaccardPairsOnSets(sets, "doc_id", "s", 0.5))
+    val (staged, stagedSites) = JobCount.callSites(spark)(
+      Dedup.jaccardPairsOnSets(sets, "doc_id", "s", 0.5, inlineMaxDocs = 1))
+    // the detector sees the inline side's collect of the doc rows
+    assert(collects(inlineSites).size == 1, inlineSites)
+    assert(collects(stagedSites).isEmpty, stagedSites)
+    assert(pairs(inline) == pairs(staged) && pairs(inline).nonEmpty)
+  }
+
   test("jaccardPairStats: verified count == jaccardPairs row count, " +
     "candidates >= verified, and candidates shrink as t rises") {
     val df = corpus()
