@@ -146,127 +146,60 @@ object Canonicalize {
       .select(col("src"), col("dst"))
   }
 
-  /** Connected components by iterative min-label propagation
-    * (driver-controlled DataFrame loop, SURVEY.md §4.3.3), lineage cut per
-    * round via the pluggable `cut` strategy (SURVEY.md §7.4.7): the
-    * sandbox default is localCheckpoint; a cluster run passes
-    * [[graft.plans.LineageCut.Reliable]] (checkpoint dir set) so an
-    * executor loss mid-loop recovers from durable storage instead of
-    * failing the whole job. Converges in O(component diameter) rounds —
-    * alias clusters have diameter <= 2-3. The iteration cap FAILS
-    * LOUDLY: a graph whose diameter exceeds `maxIter` (possible for
-    * corpus-derived open vocabularies with chains of near-duplicate
-    * spellings a-b-c-...) throws instead of returning silently partial
-    * labels; such graphs belong on [[connectedComponentsFast]]
-    * (O(log n) rounds), which [[canonicalMapDf]] uses.
-    *
-    * Returns (entity_id, canonical_id = min id in component).
-    */
-  def connectedComponents(
-      spark: SparkSession,
-      vertices: DataFrame, // (entity_id)
-      edges: DataFrame, // (src, dst)
-      maxIter: Int = 25,
-      cut: graft.plans.LineageCut = graft.plans.LineageCut.Default)
-      : DataFrame = {
-    // pre-partition + pre-sort the loop-invariant symmetric edge table
-    // by the join key once — see connectedComponentsFastWithRounds
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sym = cut.cut(edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(parts, col("dst"))
-      .sortWithinPartitions(col("dst")))
-
-    var labels = cut.cut(vertices
-      .select(col("entity_id"), col("entity_id").as("canonical_id")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // l'(v) = min(l(v), min over neighbors u of l(u)), via aggregate +
-      // left join + least rather than union + re-aggregate: the
-      // aggregation input is the join result alone (not join ∪ labels),
-      // and a Union of a checkpointed-lineage labels frame with a frame
-      // derived FROM it trips Spark's union constraint rewrite
-      // (AttributeMap key-not-found on LogicalRDD origin constraints
-      // referencing pruned attributes — observed with a
-      // localCheckpoint()ed entity table as canonicalMapDf input)
-      val neighborMin = sym
-        .join(labels, sym("dst") === labels("entity_id"))
-        .groupBy(sym("src").as("entity_id"))
-        .agg(min(col("canonical_id")).as("__nbr_min"))
-      val next = cut.cut(labels
-        .join(neighborMin, Seq("entity_id"), "left")
-        // least skips NULLs: an isolated vertex keeps its own label
-        .select(col("entity_id"),
-          least(col("canonical_id"), col("__nbr_min")).as("canonical_id")))
-      val changed = next.alias("n")
-        .join(labels.alias("o"), Seq("entity_id"))
-        .filter(col("n.canonical_id") =!= col("o.canonical_id"))
-        .limit(1).count()
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter min-label " +
-          "rounds (component diameter exceeds the cap); the partial " +
-          "labels would be a silently WRONG canonical map. Use " +
-          "connectedComponentsFast (pointer-jumping, O(log n) rounds) " +
-          "for high-diameter graphs, or raise maxIter.")
-    labels
-  }
-
   /** Connected components by min-label propagation WITH POINTER JUMPING
-    * (label shortcutting): each round does (A) one neighbor-min
-    * propagation — identical to [[connectedComponents]]'s round — then
-    * (B) one label shortcut l(v) <- l(l(v)), so the min label of a
-    * component travels along label CHAINS as well as edges and the loop
-    * converges in O(log diameter) rounds instead of O(diameter) — a
-    * length-10^6 near-duplicate spelling chain needs ~20 rounds, not
-    * 10^6 (each round is 2 shuffle joins + 1 aggregation; the reference
-    * analog — topic_modeling.py:129-151's iterative merge loop — is the
-    * same shape without the shortcut).
+    * (label shortcutting; driver-controlled DataFrame loop, SURVEY.md
+    * §4.3.3): each round does (A) one neighbor-min propagation
+    * l'(v) = min(l(v), min over neighbors u of l(u)), then (B) one label
+    * shortcut l(v) <- l(l(v)), so the min label of a component travels
+    * along label CHAINS as well as edges and the loop converges in
+    * O(log diameter) rounds — plain min-label propagation needs
+    * O(diameter) — a length-10^6 near-duplicate spelling chain needs ~20
+    * rounds, not 10^6 (each round is 2 shuffle joins + 1 aggregation;
+    * the reference analog — topic_modeling.py:129-151's iterative merge
+    * loop — is the same shape without the shortcut).
     *
-    * Invariants (parity with the min-label loop pinned in
-    * GraphXFallbackSpec/CanonComponentsSpec): every label a vertex ever
+    * Each round's labels are cut via the pluggable `cut` strategy
+    * (SURVEY.md §7.4.7): the sandbox default is localCheckpoint; a
+    * cluster run passes [[graft.plans.LineageCut.Reliable]] (checkpoint
+    * dir set) so an executor loss mid-loop recovers from durable storage
+    * instead of failing the whole job. The iteration cap FAILS LOUDLY:
+    * a graph that does not converge within `maxIter` rounds throws
+    * instead of returning silently partial labels.
+    *
+    * Invariants (parity with local union-find and GraphX pinned in
+    * CanonComponentsSpec/GraphXFallbackSpec): every label a vertex ever
     * holds is the id of a vertex in ITS component (propagation moves
     * labels along edges; shortcutting along label chains, both
     * component-preserving), labels only decrease, and at a fixed point
     * every edge joins equal labels — so the fixed point is exactly
     * (entity_id, min id in component).
     */
-  def connectedComponentsFast(
+  def connectedComponents(
       spark: SparkSession,
       vertices: DataFrame, // (entity_id)
       edges: DataFrame, // (src, dst)
       maxIter: Int = 50,
       cut: graft.plans.LineageCut = graft.plans.LineageCut.Default)
       : DataFrame =
-    connectedComponentsFastWithRounds(
-      spark, vertices, edges, maxIter, cut)._1
+    connectedComponentsWithRounds(spark, vertices, edges, maxIter, cut)._1
 
-  /** [[connectedComponentsFast]] + the number of rounds it took to
-    * converge (the O(log diameter) bound is spec-asserted on a chain
-    * graph; package-visible for that spec).
+  /** [[connectedComponents]] + the number of rounds it took to converge
+    * (the O(log diameter) bound is spec-asserted on a chain graph;
+    * package-visible for that spec).
     */
-  private[graft] def connectedComponentsFastWithRounds(
+  private[graft] def connectedComponentsWithRounds(
       spark: SparkSession,
       vertices: DataFrame,
       edges: DataFrame,
       maxIter: Int = 50,
-      cut: graft.plans.LineageCut = graft.plans.LineageCut.Default,
-      /** dev hook (CcProbe A/B): disable the string->long rank
-        * encoding; results are identical either way
-        */
-      encodeIds: Boolean = true)
+      cut: graft.plans.LineageCut = graft.plans.LineageCut.Default)
       : (DataFrame, Int) = {
     // ---- round-6 physical preparation, semantics unchanged ----
     // (1) STRING vertex ids are rank-encoded to dense longs for the
     // loop. Catalyst has no mutable agg buffer for min(string), so
     // every round's neighbor-min aggregation planned as SortAggregate
     // — TWO sorts (partial + final) of the edge-scale join output per
-    // round (observed in the executed plan, tools/CcPlanProbe).
+    // round (observed in the executed plan, OPTIMIZATION_r06.md §7).
     // GlobalRank's rank over entity_id ASC preserves the string order
     // exactly, so min(rank) == rank(min(string)) and the decoded fixed
     // point is identical; on longs the aggregation is a HashAggregate
@@ -285,7 +218,7 @@ object Canonicalize {
     // shuffle setting, the same deployment knob every other exchange
     // uses.
     val parts = spark.sessionState.conf.numShufflePartitions
-    val encode = encodeIds && vertices.schema.head.dataType ==
+    val encode = vertices.schema.head.dataType ==
       org.apache.spark.sql.types.StringType
     val ranked = if (encode) {
       cut.cut(graft.plans.GlobalRank.withGlobalRowNumber(
@@ -314,9 +247,14 @@ object Canonicalize {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      // (A) propagate: l'(v) = min(l(v), min over neighbors u of l(u));
-      // aggregate + left join + least, not union + re-aggregate (see
-      // connectedComponents for the union-constraint-rewrite rationale)
+      // (A) propagate: l'(v) = min(l(v), min over neighbors u of l(u)),
+      // via aggregate + left join + least rather than union +
+      // re-aggregate: the aggregation input is the join result alone
+      // (not join ∪ labels), and a Union of a checkpointed-lineage
+      // labels frame with a frame derived FROM it trips Spark's union
+      // constraint rewrite (AttributeMap key-not-found on LogicalRDD
+      // origin constraints referencing pruned attributes — observed
+      // with a localCheckpoint()ed entity table as canonicalMapDf input)
       val neighborMin = sym
         .join(labels, sym("dst") === labels("entity_id"))
         .groupBy(sym("src").as("entity_id"))
@@ -365,7 +303,7 @@ object Canonicalize {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponentsFast did not converge in $maxIter " +
+        s"connectedComponents did not converge in $maxIter " +
           "pointer-jumping rounds — at O(log n) rounds this indicates " +
           "a graph far beyond the cap (2^" + maxIter + " diameter) or " +
           "a non-deterministic edge input; refusing to return partial " +
@@ -403,8 +341,8 @@ object Canonicalize {
     * KgPipelineSpec on a threshold-straddling adversarial vocabulary).
     * The distributed path is forced in tests via localMaxEntities = 0.
     *
-    * Cutoff measured with graft.tools.CanonCrossover (local[4], alias
-    * vocabulary with ~n/5 merge clusters): driver-local all-pairs costs
+    * Cutoff measured by timing both sides (local[4], alias vocabulary
+    * with ~n/5 merge clusters): driver-local all-pairs costs
     * ~1-3 s at n=1000 and ~5-6 s at n=2000 (single-threaded n^2/2 set
     * intersections), while the distributed path's floor is its several
     * fixed-latency jobs (~2-5 s quiet-host). Past ~2k entities the
@@ -429,7 +367,7 @@ object Canonicalize {
 
   /** Driver-local exact all-pairs jaccard + union-find over collected
     * (entity_id, surfaces) rows — the physical small-input fast path
-    * shared by both canonicalMap entry points.
+    * of [[canonicalMapDf]].
     */
   private def localAllPairsMap(
       surf: Seq[(String, Seq[String])],
@@ -476,22 +414,23 @@ object Canonicalize {
         "distributed-edge-local-uf")
     } else {
       // pointer-jumping CC: the open path's component diameter is
-      // unbounded (chains of near-duplicate spellings), so the
-      // O(diameter) min-label loop is wrong here — it would either
-      // throw at maxIter or pay diameter-many shuffle rounds
-      (connectedComponentsFast(spark, ids, edges, cut = cut),
+      // unbounded (chains of near-duplicate spellings), so it needs the
+      // O(log diameter) round bound, not diameter-many shuffle rounds
+      (connectedComponents(spark, ids, edges, cut = cut),
         "distributed-cc")
     }
   }
 
   /** Full canonicalization: Seq[Entity] -> (entity_id, canonical_id).
-    * The closed-vocabulary entry point (gazetteer contract); below
-    * `localMaxEntities` it runs entirely driver-side with ZERO Spark
-    * jobs. For corpus-derived OPEN entity tables use [[canonicalMapDf]]
-    * — same semantics, no driver-side Seq. CONTRACT: `entity_id` is
-    * non-null and unique; the Seq is already on the driver, so both
-    * branches check it before dispatch (zero jobs) and throw the same
-    * IllegalArgumentException as [[canonicalMapDf]]'s local path.
+    * The closed-vocabulary entry point (gazetteer contract): the Seq
+    * becomes a LocalRelation and goes through [[canonicalMapDf]]'s one
+    * dispatch. Below `localMaxEntities` that runs with ZERO Spark jobs
+    * (the probe's `limit` over a LocalRelation is a local scan).
+    * CONTRACT: `entity_id` is non-null and unique; the Seq is already
+    * on the driver, so it is checked before dispatch (zero jobs) with
+    * the same IllegalArgumentException as [[canonicalMapDf]]'s local
+    * path — the only check above the cutoff, where the distributed
+    * branch checks nothing.
     */
   def canonicalMap(
       spark: SparkSession,
@@ -501,12 +440,8 @@ object Canonicalize {
     import spark.implicits._
     val surf = entities.map(e => (e.entity_id, e.canonical +: e.aliases))
     requireValidIds(surf.map(_._1), "canonicalMap")
-    if (entities.size <= localMaxEntities)
-      localAllPairsMap(surf, jaccardThreshold).toSeq
-        .toDF("entity_id", "canonical_id")
-    else
-      distributedCanonicalMap(spark, surf.toDF("entity_id", "surfaces"),
-        jaccardThreshold, graft.plans.LineageCut.Default)._1
+    canonicalMapDf(spark, surf.toDF("entity_id", "surfaces"),
+      jaccardThreshold, localMaxEntities)
   }
 
   /** [[canonicalMapDf]]'s result plus the physical path it took —

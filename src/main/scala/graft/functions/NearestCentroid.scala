@@ -9,15 +9,15 @@ import org.apache.spark.sql.types._
 /** Native Catalyst expression: argmin-by-squared-L2 cluster assignment
   * against a centroid matrix carried as a codegen REFERENCE OBJECT.
   *
-  * The literal-expression assignment (KMeansCluster.assignExprLiteral:
-  * `array_min(array(k structs of d-literal zip_with))`) materializes
+  * A literal-expression assignment
+  * (`array_min(array(k structs of d-literal zip_with))`) materializes
   * k*d literals into the generated Java — a few hundred centroids x a
   * few hundred dims blows past the JVM's 64KB method / constant-pool
   * limits — and its per-centroid `aggregate(zip_with(...))` distances
   * are higher-order functions that Catalyst evaluates INTERPRETED
   * (round 6: measured ~30% slower per Lloyd's iteration even at
-  * k=4/d=64, so this loop expression is now the only production path;
-  * the literal form remains as KMeansSpec's parity oracle). Here the
+  * k=4/d=64, so this loop expression is the only production path;
+  * the literal form lives on as KMeansSpec's parity oracle). Here the
   * centroids ride as ONE `double[][]` reference in the generated class
   * (ctx.addReferenceObj — the same mechanism broadcast scalar state
   * uses), and the generated code is a fixed-size nested loop

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   *
   * `array_intersect` builds a hash set per row — measured as the
   * dominant cost of jaccard verification over ~10M candidate pairs
-  * (graft.tools.JaccardProfile). A merge scan over pre-sorted arrays
+  * (q_dedup_jaccard at t=0.1). A merge scan over pre-sorted arrays
   * (one `sort_array` per DOCUMENT, amortized over all its pairs)
   * whole-stage-codegens to a branchy primitive loop with zero
   * allocation. CONTRACT: both inputs sorted ascending in UTF8 binary

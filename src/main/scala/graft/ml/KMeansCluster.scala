@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.DecimalType
   *   - seeded deterministic init: the k rows with the smallest
   *     md5("km:" ++ id) (hash-ranked ids — reproducible in any engine
   *     with md5, unlike sklearn's random init);
-  *   - assignment: centroids are k broadcast LITERALS (k*d doubles),
-  *     argmin over an array of (distance, cluster) structs — pure
-  *     codegen column expressions, no join, no shuffle;
+  *   - assignment: the k*d centroid matrix rides as ONE codegen
+  *     reference object (functions.NearestCentroid), argmin over the
+  *     rounded distances in a nested loop — no join, no shuffle;
   *   - update: posexplode to (cluster, dim) cells, per-cell
   *     DECIMAL-routed mean — partial aggregation makes the shuffle
   *     k*d rows per task; k*d rows reach the driver (a driver-sized
@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.DecimalType
   *     order-independent — raw double sums differ across engines and
   *     across Spark task orders), then /count in double, round 6;
   *   - assignment argmin on round(dist, 6) with cluster id as the
-  *     tiebreak (zip_with/aggregate sums run in array order in both
-  *     engines — the same contract the cosine queries pin bit-equal).
+  *     tiebreak (distance sums run in array order in both engines —
+  *     the same contract the cosine queries pin bit-equal).
   *
   * At 10^12 rows each iteration is one scan + one tiny aggregation —
   * the canonical distributed Lloyd's plan; callers persist the input
@@ -71,12 +71,6 @@ object KMeansCluster {
       lit("k-means: ragged embedding length "), size(q).cast("string"),
       lit(s", expected $d"))))
 
-  /** squared L2 distance of quantized vector `q` to literal centroid. */
-  private def dist2(q: Column, centroid: Array[Double]): Column =
-    aggregate(
-      zip_with(q, typedLit(centroid.toSeq), (x, c) => (x - c) * (x - c)),
-      lit(0.0), (acc, x) => acc + x)
-
   /** Seeded initial centroids: embeddings of the k smallest
     * md5("km:" ++ id) rows (id as tiebreak); cluster j = j-th in that
     * order.
@@ -105,7 +99,7 @@ object KMeansCluster {
       cache: Boolean,
       cut: graft.plans.LineageCut = graft.plans.LineageCut.Default)
       : DataFrame = {
-    // NOT spread (round-6 A/B, MicroProbe): repartitioning the working
+    // NOT spread (round-6 A/B): repartitioning the working
     // set to session width made every Lloyd's job a wide job whose
     // scheduling overhead (~0.25 s per 32-task job on this sandbox)
     // exceeded the single-split compute it parallelized — the query
@@ -152,36 +146,21 @@ object KMeansCluster {
     fitOnPts(prepare(df, id, vec, cache, cut), k, iters)
   }
 
-  /** argmin of squared L2 distance over the centroids — ALWAYS the
+  /** argmin of squared L2 distance over the centroids: the
     * reference-object loop expression (functions.NearestCentroid, one
     * codegen'd nested loop whose generated-code size is independent of
-    * k*d). Round 6: the loop path measured ~30% faster per Lloyd's
-    * iteration than the literal-struct argmin even at the bench's
-    * k=4/d=64 (KmeansProbe, 0.17-0.20 s vs 0.24-0.34 s steady-state)
-    * — the literal path's per-centroid `aggregate(zip_with(...))`
+    * k*d). Round 6: the loop measured ~30% faster per Lloyd's
+    * iteration than a literal-struct argmin even at the bench's
+    * k=4/d=64 (0.17-0.20 s vs 0.24-0.34 s steady-state, in-session
+    * A/B) — the literal form's per-centroid `aggregate(zip_with(...))`
     * distances are higher-order functions, which Catalyst evaluates
     * INTERPRETED (CodegenFallback) with a fresh 64-element array
-    * allocation per centroid per row. The former k*d <= 2048 literal
-    * dispatch is gone; [[assignExprLiteral]] remains as the
-    * independently-derived parity oracle KMeansSpec pins the loop
-    * expression against (identical accumulation order, rounding,
-    * tiebreak — byte-identical assignments at k=128 and at k=4).
+    * allocation per centroid per row. The literal form survives only
+    * as KMeansSpec's independently-derived parity oracle (identical
+    * accumulation order, rounding, tiebreak — byte-identical
+    * assignments at k=128 and at k=4).
     */
   def assignExpr(q: Column, centroids: Array[Array[Double]]): Column =
-    assignExprLoop(q, centroids)
-
-  /** literal-centroid parity oracle: array_min of (rounded distance,
-    * cluster id) structs — struct ordering gives the id tiebreak.
-    */
-  def assignExprLiteral(q: Column, centroids: Array[Array[Double]]): Column =
-    array_min(array(centroids.zipWithIndex.map { case (c, j) =>
-      struct(round(dist2(q, c), 6).as("d"), lit(j).as("j"))
-    }: _*)).getField("j")
-
-  /** reference-object path: one codegen'd nested loop, constant
-    * generated-code size at any k*d (functions.NearestCentroid).
-    */
-  def assignExprLoop(q: Column, centroids: Array[Array[Double]]): Column =
     graft.functions.NearestCentroid.nearest_centroid(q, centroids)
 
   /** (id, cluster) assignment after `iters` Lloyd's rounds. The final

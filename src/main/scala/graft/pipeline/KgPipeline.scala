@@ -16,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** End-to-end KG construction (SURVEY.md §7.2, north rule):
   *
   *   turns --mention detect--> spans --pooled-scorer link + pattern
-  *   pairing--> triples --LSH canon + connected components--> relabeled
-  *   triples --> node/edge tables (TableIO snapshots via materialize)
+  *   pairing--> triples --exact-jaccard canon + connected components-->
+  *   relabeled triples --> node/edge tables (TableIO snapshots via
+  *   materialize)
   *
   * All stages are Dataset/DataFrame + Catalyst (no RDD API); the only
   * imperative region is the pooled scorer inside `mapPartitions`

@@ -33,7 +33,8 @@ import org.apache.spark.storage.StorageLevel
   * returns) so loop-convergence checks and `count()` probes downstream
   * observe identical execution behavior regardless of strategy;
   * results are byte-identical by construction (LineageCutSpec pins
-  * connectedComponents and jaccardPairs equal across strategies).
+  * Canonicalize.connectedComponents and jaccardPairs equal across all
+  * three strategies).
   */
 sealed trait LineageCut {
   def cut(df: DataFrame): DataFrame

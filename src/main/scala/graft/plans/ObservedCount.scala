@@ -11,11 +11,11 @@ import org.apache.spark.sql.functions._
   * Usage: `val (frame, n) = ObservedCount.attach(df, cut)(expr)` —
   * the observation node rides BELOW the cut, so whatever action the
   * LineageCut strategy runs to materialize the frame (localCheckpoint,
-  * checkpoint, persist+count — all verified to deliver metrics in
-  * tools/ObserveProbe) also delivers the count; `n()` polls the async
-  * listener briefly and FALLS BACK to a plain `count()` on the cut
-  * frame if delivery does not arrive (an unknown cut strategy can
-  * never produce a wrong count — only a slower one).
+  * checkpoint, persist+count — each verified in round 6 to deliver
+  * observed metrics on this Spark version) also delivers the count;
+  * `n()` polls the async listener briefly and FALLS BACK to a plain
+  * `count()` on the cut frame if delivery does not arrive (an unknown
+  * cut strategy can never produce a wrong count — only a slower one).
   */
 object ObservedCount {
 

@@ -80,7 +80,7 @@ object DedupQueries {
       val docs = t(s, d, "documents")
       val edges = graft.dedup.Dedup.jaccardPairs(docs,
         "doc_id", "text", 0.7).select($"src", $"dst")
-      graft.canon.Canonicalize.connectedComponentsFast(s,
+      graft.canon.Canonicalize.connectedComponents(s,
           docs.select($"doc_id".as("entity_id")), edges)
         .orderBy($"entity_id")
     }),

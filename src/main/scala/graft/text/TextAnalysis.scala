@@ -83,7 +83,7 @@ object TextAnalysis {
     */
   def cTfIdf(
       df: DataFrame, cls: String, text: String, topK: Int): DataFrame = {
-    // NOT spread (round-6 A/B, CtfidfProbe): parallelizing the tokenize
+    // NOT spread (round-6 A/B): parallelizing the tokenize
     // behind an extra exchange measured SLOWER than the single-split
     // scan at bench scale (0.82-0.89 s vs 0.55-0.63 with the cut alone)
     // — the per-row work is too light to pay for an exchange plus

@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected-components convergence contracts (VERDICT r4 tasks #2/#3):
   *
-  *   - the O(diameter) min-label loop must FAIL LOUDLY when a component's
-  *     diameter exceeds maxIter — a silently partial label set is a
-  *     WRONG canonical map (open corpus-derived vocabularies can chain
-  *     near-duplicate spellings to arbitrary diameter);
-  *   - the pointer-jumping variant must produce the identical map and
-  *     converge in O(log n) rounds on exactly those graphs.
+  *   - the pointer-jumping loop must FAIL LOUDLY when it hits its round
+  *     cap — a silently partial label set is a WRONG canonical map
+  *     (open corpus-derived vocabularies can chain near-duplicate
+  *     spellings to arbitrary diameter);
+  *   - it must produce the local union-find map and converge in
+  *     O(log n) rounds on exactly those graphs.
   */
 class CanonComponentsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -26,12 +26,13 @@ class CanonComponentsSpec extends AnyFunSuite {
     (ids.toDF("entity_id"), edges.toDF("src", "dst"))
   }
 
-  test("min-label CC throws on a chain longer than maxIter instead of " +
-    "returning silently partial labels") {
+  test("pointer-jumping CC throws on a chain longer than its round cap " +
+    "instead of returning silently partial labels") {
     val (ids, es) = chain(12)
     val (v, e) = toDf(ids, es)
+    // 2 rounds cannot carry c0000's label down an 11-edge chain
     val ex = intercept[IllegalStateException] {
-      Canonicalize.connectedComponents(spark, v, e, maxIter = 5)
+      Canonicalize.connectedComponents(spark, v, e, maxIter = 2)
     }
     assert(ex.getMessage.contains("did not converge"))
     // the same graph under a sufficient cap still converges exactly
@@ -41,19 +42,19 @@ class CanonComponentsSpec extends AnyFunSuite {
   }
 
   test("pointer-jumping CC solves a length-64 chain in <= ceil(log2 n) " +
-    "+ 2 rounds, where min-label would need 63") {
+    "+ 2 rounds, where plain label propagation would need 63") {
     val (ids, es) = chain(64)
     val (v, e) = toDf(ids, es)
     val (labels, rounds) = Canonicalize
-      .connectedComponentsFastWithRounds(spark, v, e)
+      .connectedComponentsWithRounds(spark, v, e)
     val got = labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == ids.map(_ -> ids.head).toMap)
     val bound = math.ceil(math.log(64) / math.log(2)).toInt + 2
     assert(rounds <= bound, s"took $rounds rounds, bound $bound")
   }
 
-  test("pointer-jumping CC == min-label CC == local union-find on " +
-    "seeded random graphs (including isolated vertices)") {
+  test("pointer-jumping CC == local union-find on seeded random graphs " +
+    "(including isolated vertices)") {
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 3) {
       val n = 40 + trial * 10
@@ -63,13 +64,9 @@ class CanonComponentsSpec extends AnyFunSuite {
       }.filter { case (a, b) => a != b }
       val (v, e) = toDf(ids, edges)
       val expected = Canonicalize.localUnionFind(ids, edges)
-      val fast = Canonicalize.connectedComponentsFast(spark, v, e)
+      val got = Canonicalize.connectedComponents(spark, v, e)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(fast == expected, s"trial $trial: fast != local union-find")
-      val minLabel = Canonicalize.connectedComponents(spark, v, e,
-          maxIter = n)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(minLabel == expected, s"trial $trial: min-label != local")
+      assert(got == expected, s"trial $trial: CC != local union-find")
     }
   }
 
@@ -83,12 +80,12 @@ class CanonComponentsSpec extends AnyFunSuite {
     // LogicalRDD (exactly what a resumable pipeline hands in):
     // LogicalRDD origin constraints can reference pruned attributes,
     // and Spark's Union constraint rewrite looks every attribute up
-    // without a contains-check (reproduced at 16k entities via
-    // graft.tools.CanonTime; whether the stale constraint appears
+    // without a contains-check (reproduced at 16k entities on the
+    // kg_open_large vocabulary; whether the stale constraint appears
     // depends on the concrete lineage). The loop now builds no Union
     // node at all — aggregate + left join + least — so the failure
     // mode is structurally impossible; this pins the
-    // checkpointed-input contract on both CC variants.
+    // checkpointed-input contract.
     val surf = Seq(
       ("e1", Seq("streamer")), ("e2", Seq("streamers")),
       ("e3", Seq("unrelatedword")))
@@ -102,21 +99,19 @@ class CanonComponentsSpec extends AnyFunSuite {
       df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val expected = Map("e1" -> "e1", "e2" -> "e1", "e3" -> "e3")
     assert(labelsOf(
-      Canonicalize.connectedComponentsFast(spark, ids, edges)) == expected)
-    assert(labelsOf(
       Canonicalize.connectedComponents(spark, ids, edges)) == expected)
   }
 
   test("pointer-jumping CC under Reliable lineage cut equals the default") {
     val (ids, es) = chain(20)
     val (v, e) = toDf(ids, es)
-    val local = Canonicalize.connectedComponentsFast(spark, v, e)
+    val local = Canonicalize.connectedComponents(spark, v, e)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ccfast_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
-      val reliable = Canonicalize.connectedComponentsFast(spark, v, e,
+      val reliable = Canonicalize.connectedComponents(spark, v, e,
           cut = graft.plans.LineageCut.Reliable)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(reliable == local)
@@ -173,6 +168,19 @@ class CanonComponentsSpec extends AnyFunSuite {
       }
       assert(one.getMessage.contains("1 null entity_id"))
     }
+  }
+
+  test("canonicalMap(Seq) on the closed vocabulary schedules 0 Spark " +
+    "jobs once warm") {
+    val entities = graft.gen.Vocab.entities
+    assert(entities.size <= Canonicalize.LocalCanonMaxEntities)
+    // the first call pays one-time class loading and codegen
+    Canonicalize.canonicalMap(spark, entities).collect()
+    val (rows, jobs) = JobCount(spark)(
+      Canonicalize.canonicalMap(spark, entities).collect())
+    assert(jobs == 0, s"closed canonicalization scheduled $jobs jobs")
+    assert(rows.map(_.getString(0)).sorted.toSeq ==
+      entities.map(_.entity_id).sorted)
   }
 
   test("canonicalMapDf local path rejects null entity_id, single or " +

@@ -1,6 +1,9 @@
 package graft
 
 import graft.ml.KMeansCluster
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{aggregate, array, array_min, lit,
+  round, struct, typedLit, zip_with}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Deterministic Lloyd's k-means (reference clustering.py:8-31):
@@ -10,6 +13,23 @@ class KMeansSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private val Dim = 8
+
+  /** squared L2 distance of quantized vector `q` to literal centroid. */
+  private def dist2(q: Column, centroid: Array[Double]): Column =
+    aggregate(
+      zip_with(q, typedLit(centroid.toSeq), (x, c) => (x - c) * (x - c)),
+      lit(0.0), (acc, x) => acc + x)
+
+  /** Literal-centroid parity oracle for KMeansCluster.assignExpr,
+    * derived independently of functions.NearestCentroid: array_min of
+    * (rounded distance, cluster id) structs — struct ordering gives the
+    * id tiebreak.
+    */
+  private def assignExprLiteral(q: Column,
+      centroids: Array[Array[Double]]): Column =
+    array_min(array(centroids.zipWithIndex.map { case (c, j) =>
+      struct(round(dist2(q, c), 6).as("d"), lit(j).as("j"))
+    }: _*)).getField("j")
 
   /** 3 well-separated blobs (centers 6 apart, sigma 0.3). */
   private def blobs(parts: Int) = {
@@ -132,8 +152,8 @@ class KMeansSpec extends AnyFunSuite {
     def run(c: org.apache.spark.sql.Column) =
       df.select(col("vec_id"), c.as("cl")).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val lit = run(KMeansCluster.assignExprLiteral(col("q"), cents))
-    val loop = run(KMeansCluster.assignExprLoop(col("q"), cents))
+    val lit = run(assignExprLiteral(col("q"), cents))
+    val loop = run(KMeansCluster.assignExpr(col("q"), cents))
     assert(lit == loop)
     assert(lit(1000L) == 0, "midpoint tie must resolve to cluster 0")
     // coverage: the fixture actually lands points across many clusters
@@ -168,8 +188,8 @@ class KMeansSpec extends AnyFunSuite {
     def run(c: org.apache.spark.sql.Column) =
       df.select(col("vec_id"), c.as("cl")).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val lit = run(KMeansCluster.assignExprLiteral(col("q"), cents))
-    val loop = run(KMeansCluster.assignExprLoop(col("q"), cents))
+    val lit = run(assignExprLiteral(col("q"), cents))
+    val loop = run(KMeansCluster.assignExpr(col("q"), cents))
     assert(lit == loop, s"dispatch-cutoff behavior flip: lit=$lit loop=$loop")
     assert(lit == Map(1L -> 1, 2L -> 0, 3L -> 0, 4L -> 0))
   }
