@@ -1,8 +1,8 @@
 package graft.extract
 
 import graft.link.EntityLink
+import graft.mention.MentionDetect.OpenPrefix
 import graft.schema.{Entity, Triple}
-import graft.score.Embed
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Per-turn extraction: overlap resolution + entity linking + predicate
@@ -13,19 +13,22 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   * Input rows are per-turn span groups produced by
   * MentionDetect.spanCandidates (Catalyst side: tokenize, candidate
-  * explode, broadcast gazetteer join, groupBy collect). This stage owns
-  * the sequential per-turn semantics, kept byte-compatible with
-  * graft.oracle.ReferenceOracle:
+  * explode, broadcast gazetteer join, optional open-shape spans,
+  * groupBy collect). This stage owns the sequential per-turn semantics,
+  * kept byte-compatible with graft.oracle.ReferenceOracle:
   *
   *   1. bigram-wins overlap resolution over gazetteer matches
   *   2. cosine top-1 linking against the broadcast candidate index
-  *      (per-partition memoized scorer)
+  *      (per-partition memoized scorer); an open span links to its own
+  *      `open:<token>` id at score 1.0
   *   3. consecutive linked mentions + first predicate trigger in the gap
   *      -> (subj, pred, obj, min score)
   */
 object TurnExtract {
 
-  /** One candidate span: a gazetteer mention or a predicate trigger. */
+  /** One candidate span: a gazetteer mention, an open mention
+    * (surface `open:<token>`), or a predicate trigger.
+    */
   final case class Span(
       token_pos: Int,
       token_len: Int,
@@ -88,13 +91,7 @@ object TurnExtract {
       allSpans: Seq[Span],
       scorer: EntityLink.Scorer,
       preds: Map[String, String],
-      rec: Recorder,
-      // already-linked OPEN provisional mentions (token_pos, token_len,
-      // entity_id, score) — merged with the scored gazetteer mentions
-      // by token position (positions are disjoint: the open shape
-      // requires digits, gazetteer surfaces are all-letter, mirroring
-      // ReferenceOracle.openTriples' independent scans)
-      openLinked: Seq[(Int, Int, String, Double)] = Nil)
+      rec: Recorder)
       : Iterator[Triple] = {
     rec.turns += 1
     val spans = allSpans.sortBy(s => (s.token_pos, s.token_len))
@@ -106,14 +103,14 @@ object TurnExtract {
       (s.token_len == 2 || !covered.contains(s.token_pos)))
     val predSpans = spans.filter(!_.is_mention)
 
-    val closedLinked = mentions.flatMap { m =>
-      scorer.link(m.surface).map { case (id, score) =>
+    // an OPEN span's surface is already its provisional entity id,
+    // linked to itself at score 1.0 (MentionDetect.OpenPrefix)
+    val linked = mentions.flatMap { m =>
+      (if (m.surface.startsWith(OpenPrefix)) Some((m.surface, 1.0))
+       else scorer.link(m.surface)).map { case (id, score) =>
         (m.token_pos, m.token_len, id, score)
       }
     }
-    val linked =
-      if (openLinked.isEmpty) closedLinked
-      else (closedLinked ++ openLinked).sortBy(_._1)
     rec.mentions += linked.size
     linked.sliding(2).flatMap {
       case Seq((pos1, len1, id1, s1), (pos2, _, id2, s2)) =>
@@ -165,13 +162,13 @@ object TurnExtract {
     * streaming Dataset in append mode. Uses the shared plain-Scala
     * tokenizer spec (graft.text.TextOps.tokenizeString).
     *
-    * `openShapePattern` (the OPEN fused fast path, KgPipeline.runOpen):
-    * when set, every token matching the pattern that is not a token of
-    * any gazetteer surface additionally becomes a pre-linked
-    * provisional mention `open:<token>` with score 1.0 — shape
-    * detection and open linking fold into the SAME pooled pass instead
-    * of composing three more shuffling operators (the per-triple cost
-    * that made the r4 kg_open datapoint ~6x the closed fast path).
+    * `openShapePattern` (the OPEN fast path, KgPipeline.runOpen): when
+    * set, every token matching the pattern that is not a token of any
+    * gazetteer surface additionally becomes an open mention span
+    * `open:<token>`, linked to itself at score 1.0 — the same spans
+    * MentionDetect.spanCandidates adds for the same pattern above the
+    * gazetteer cutoff, so shape detection and open linking stay inside
+    * this one pooled pass.
     */
   def timedTriplesFromTurns(
       spark: SparkSession,
@@ -212,7 +209,6 @@ object TurnExtract {
       it.flatMap { t =>
         val toks = graft.text.TextOps.tokenizeString(t.text)
         val spans = Seq.newBuilder[Span]
-        val open = Seq.newBuilder[(Int, Int, String, Double)]
         var i = 0
         while (i < toks.length) {
           if (gazUni.contains(toks(i)))
@@ -224,18 +220,17 @@ object TurnExtract {
             if (gazBi.contains(bg))
               spans += Span(i, 2, bg, is_mention = true)
           }
-          // find(), not matches(): the composed branch's openMentions
-          // uses rlike (substring FIND) — with the default anchored
-          // OpenShapePattern the two agree, but a caller-supplied
-          // unanchored pattern must yield the same triples on both
-          // sides of gazetteerFastPathMax (r5 ADVICE)
+          // find(), not matches(): spanCandidates' open spans come from
+          // MentionDetect.openMentions' rlike (substring FIND) — with the
+          // default anchored OpenShapePattern the two agree, but a
+          // caller-supplied unanchored pattern must yield the same
+          // triples on both sides of gazetteerFastPathMax
           if (openRe != null && openRe.matcher(toks(i)).find() &&
               !gazToks.contains(toks(i)))
-            open += ((i, 1, "open:" + toks(i), 1.0))
+            spans += Span(i, 1, OpenPrefix + toks(i), is_mention = true)
           i += 1
         }
-        extract(t.conv_id, t.turn_idx, spans.result(), scorer, preds, rec,
-            open.result())
+        extract(t.conv_id, t.turn_idx, spans.result(), scorer, preds, rec)
           .map(tr => TimedTriple(tr.conv_id, tr.turn_idx, tr.subj, tr.pred,
             tr.obj, tr.score, t.ts))
       } ++ rec.sentinel

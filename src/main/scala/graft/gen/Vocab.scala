@@ -1,5 +1,6 @@
 package graft.gen
 
+import graft.mention.MentionDetect
 import graft.schema.Entity
 
 /** Closed entity/predicate vocabulary for the deterministic transcript
@@ -39,11 +40,7 @@ object Vocab {
     * Reference analog: TextMatcher entity file
     * (word_sense_multimodal_pipeline.py:187-191).
     */
-  val gazetteer: IndexedSeq[String] =
-    entities.flatMap(e => e.canonical +: e.aliases)
-      .map(_.toLowerCase).distinct.sorted
-      // 2-token max: mention detection enumerates unigrams + bigrams
-      .filter(_.split(" ").length <= 2)
+  val gazetteer: IndexedSeq[String] = MentionDetect.gazetteerOf(entities)
 
   /** predicate trigger token -> predicate label. */
   val predicates: Map[String, String] = Map(

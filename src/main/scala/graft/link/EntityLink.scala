@@ -1,8 +1,7 @@
 package graft.link
 
-import graft.schema.{Entity, LinkedMention, Mention}
+import graft.schema.Entity
 import graft.score.Embed
-import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Embedding-based entity-link scoring (SURVEY.md §3.1, §2.3 J3/J4).
   *
@@ -10,9 +9,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * in-memory corpus index, keep the best hit above threshold
   * (search_pipeline.py:73-88, 105-145). The reference reuses one pooled
   * inference session across batches (search_pipeline.py:192-194); the
-  * Spark-native equivalent is `mapPartitions` with scorer state
-  * instantiated once per partition against a broadcast candidate index —
-  * one executor-side object per task, zero per-row setup cost.
+  * Spark-native equivalent is the [[Scorer]], instantiated once per
+  * partition inside TurnExtract's `mapPartitions` against a broadcast
+  * candidate index — one executor-side object per task, zero per-row
+  * setup cost.
   *
   * Length-sorted batching (sentence_encoder.py:138-139,168) exists in the
   * reference to minimize transformer padding; with a hash scorer the
@@ -57,41 +57,4 @@ object EntityLink {
       removeIds: Set[String] = Set.empty): IndexedSeq[(String, Array[Float])] =
     (index.filterNot { case (id, _) => removeIds.contains(id) } ++
       buildIndex(add)).sortBy(_._1).distinctBy(_._1).toIndexedSeq
-
-  /** W1 (reference: length-sorted batching, sentence_encoder.py:138-139):
-    * cluster same-length surfaces within partitions so a real batched
-    * encoder pads minimally. Row order is irrelevant downstream — output
-    * order is restored by (conv_id, turn_idx, token_pos) keys (W2).
-    */
-  def lengthSorted(mentions: Dataset[Mention]): Dataset[Mention] = {
-    import org.apache.spark.sql.functions.{col, length}
-    import mentions.sparkSession.implicits._
-    mentions.toDF()
-      .sortWithinPartitions(length(col("surface")))
-      .as[Mention]
-  }
-
-  /** Linking runs over length-sorted partitions (W1): a real batched
-    * transformer encoder sees same-length surfaces adjacently and pads
-    * minimally; with the hash scorer it is a free within-partition sort
-    * (no shuffle) plus the memo cache. Output order is restored
-    * downstream by (conv_id, turn_idx, token_pos) keys (W2).
-    */
-  def link(
-      spark: SparkSession,
-      mentions: Dataset[Mention],
-      entities: Seq[Entity],
-      minScore: Double): Dataset[LinkedMention] = {
-    import spark.implicits._
-    val bcIndex = spark.sparkContext.broadcast(buildIndex(entities))
-    lengthSorted(mentions).mapPartitions { it =>
-      val scorer = new Scorer(bcIndex.value, minScore)
-      it.flatMap { m =>
-        scorer.link(m.surface).map { case (id, score) =>
-          LinkedMention(m.conv_id, m.turn_idx, m.token_pos, m.token_len,
-            m.surface, id, score)
-        }
-      }
-    }
-  }
 }

@@ -1,6 +1,6 @@
 package graft.mention
 
-import graft.schema.Mention
+import graft.schema.{Entity, Mention}
 import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,10 +15,21 @@ import org.apache.spark.sql.functions._
   * no UDFs; everything stays inside whole-stage codegen until the
   * broadcast join.
   *
-  * Overlap rule (deterministic, mirrored by the oracle): a bigram match
+  * Overlap rule (deterministic, applied per turn by
+  * graft.extract.TurnExtract, mirrored by the oracle): a bigram match
   * wins over any unigram match at either of its two positions.
   */
 object MentionDetect {
+
+  /** The gazetteer of an entity index: every canonical surface and
+    * alias, lowercased, distinct, sorted, at most 2 tokens (detection
+    * enumerates unigrams + bigrams only).
+    */
+  def gazetteerOf(entities: Seq[Entity]): IndexedSeq[String] =
+    entities.flatMap(e => e.canonical +: e.aliases)
+      .map(_.toLowerCase).distinct.sorted
+      .filter(_.split(" ").length <= 2)
+      .toIndexedSeq
 
   /** Per-turn span groups for the fused pipeline: candidate spans
     * (unigrams + bigrams) are matched against the broadcast gazetteer
@@ -28,6 +39,13 @@ object MentionDetect {
     * both a gazetteer surface and a predicate trigger yields one row of
     * each kind, matching the oracle's independent gap scan.
     *
+    * With `openShapePattern` set (KgPipeline.runOpen), the
+    * [[openMentions]] rows for that pattern join the groups as OPEN
+    * mention spans whose surface is their provisional entity id
+    * `open:<token>` (TurnExtract links them to themselves at score
+    * 1.0). An open token is never a gazetteer token, so no gazetteer
+    * span sits at its position.
+    *
     * Output: (conv_id, turn_idx,
     *          spans: array<struct<token_pos, token_len, surface,
     *          is_mention>>) — consumed by graft.extract.TurnExtract.
@@ -36,7 +54,8 @@ object MentionDetect {
       spark: SparkSession,
       turns: DataFrame,
       gazetteer: Seq[String],
-      predicates: Map[String, String]): DataFrame = {
+      predicates: Map[String, String],
+      openShapePattern: Option[String] = None): DataFrame = {
     import spark.implicits._
     val gaz = gazetteer.toDF("surface").withColumn("__gaz", lit(1))
     val predMap = typedlit(predicates)
@@ -54,7 +73,17 @@ object MentionDetect {
         when($"gm" && $"pm", array(lit(true), lit(false)))
           .when($"gm", array(lit(true)))
           .otherwise(array(lit(false)))).as("is_mention"))
-    expanded
+    val withOpen = openShapePattern.fold(expanded) { p =>
+      expanded.unionByName(openMentions(spark, turns, gazetteer, p)
+        .select($"conv_id", $"turn_idx", $"token_pos", $"token_len",
+          concat(lit(OpenPrefix), $"surface").as("surface"),
+          lit(true).as("is_mention")))
+    }
+    // groupBy, not a Window: over turn-partitioned input the aggregation
+    // needs no exchange and no sort, where a Window paid a per-group
+    // sort + WindowExec buffering for these tiny groups (stack-sampled
+    // hotspot)
+    withOpen
       .groupBy($"conv_id", $"turn_idx")
       .agg(collect_list(struct($"token_pos", $"token_len", $"surface",
         $"is_mention")).as("spans"))
@@ -102,6 +131,12 @@ object MentionDetect {
     */
   val OpenShapePattern = "^[a-z]+[0-9]{2,}$"
 
+  /** Surface and entity-id prefix of an OPEN (provisional) mention:
+    * `open:<token>`. Tokens are `[a-z0-9]+` (TextOps.normalized), so no
+    * gazetteer surface carries it.
+    */
+  val OpenPrefix = "open:"
+
   /** Shape-heuristic OPEN mention detection (SURVEY.md §4.3.2's open
     * entity set; reference analog: corpus-derived cluster/synset sets,
     * word_sense_pipeline.py:241-252 — entities come from the data, not
@@ -128,42 +163,5 @@ object MentionDetect {
       .select($"conv_id", $"turn_idx", $"token_pos",
         lit(1).as("token_len"), $"surface")
       .as[Mention]
-  }
-
-  /** turns(conv_id, turn_idx, text, ...) -> Dataset[Mention]. */
-  def mentions(
-      spark: SparkSession,
-      turns: DataFrame,
-      gazetteer: Seq[String]): Dataset[Mention] = {
-    import spark.implicits._
-
-    val gaz = gazetteer.toDF("surface")
-
-    val matched = candidateSpans(spark, turns)
-      .join(broadcast(gaz), Seq("surface"), "left_semi")
-
-    // bigram-wins overlap resolution: drop unigram matches whose position
-    // is covered by a bigram match in the same turn. Implemented as
-    // groupBy (conv, turn) + array filter + explode: when the input is
-    // already hash-partitioned by conv_id (KgPipeline's entry
-    // repartition) the aggregation needs NO exchange and NO sort —
-    // a Window here kept the partitioning too but paid a per-group
-    // sort + WindowExec buffering (stack-sampled hotspot); a self-join
-    // re-evaluated the candidate pipeline per branch (3x cost).
-    val out = matched
-      .groupBy($"conv_id", $"turn_idx")
-      .agg(collect_list(
-        struct($"token_pos", $"token_len", $"surface")).as("ms"))
-      .select($"conv_id", $"turn_idx",
-        explode(filter($"ms", m =>
-          m("token_len") === 2 ||
-            !exists($"ms", b => b("token_len") === 2 &&
-              (b("token_pos") === m("token_pos") ||
-                b("token_pos") === m("token_pos") - 1)))).as("m"))
-      .select($"conv_id", $"turn_idx",
-        $"m.token_pos", $"m.token_len", $"m.surface")
-
-    out.select($"conv_id", $"turn_idx", $"token_pos", $"token_len",
-      $"surface").as[Mention]
   }
 }

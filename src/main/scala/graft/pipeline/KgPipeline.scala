@@ -8,7 +8,6 @@ import graft.graph.Materialize
 import graft.link.EntityLink
 import graft.mention.MentionDetect
 import graft.schema._
-import graft.triple.TripleExtract
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{array, avg, col, concat, count, lit, min}
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,11 +22,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * All stages are Dataset/DataFrame + Catalyst (no RDD API); the only
   * imperative region is the pooled scorer inside `mapPartitions`
   * (TurnExtract), mirroring the reference's reused inference session
-  * (search_pipeline.py:192-194). Extraction picks between two physical
-  * paths by gazetteer size (see GazetteerFastPathMax); both are tested
-  * equivalent. Stage checkpointing, per-partition extraction metrics,
-  * and lineage manifests come from graft.ckpt.Checkpoint plus the
-  * CollectionAccumulator wired here.
+  * (search_pipeline.py:192-194). Extraction has exactly one plan per
+  * side of the gazetteer-size cutoff (see GazetteerFastPathMax), shared
+  * by [[run]] and [[runOpen]]: the per-row pass
+  * (TurnExtract.timedTriplesFromTurns) below it, the span-group plan
+  * (MentionDetect.spanCandidates + TurnExtract.triples) above it; both
+  * are tested equivalent. Stage checkpointing, per-partition extraction
+  * metrics, and lineage manifests come from graft.ckpt.Checkpoint plus
+  * the CollectionAccumulator wired here.
   */
 object KgPipeline {
 
@@ -68,24 +70,8 @@ object KgPipeline {
       predicates: Map[String, String] = Vocab.predicates,
       checkpointRoot: Option[String] = None,
       shufflePartitions: Int = 32,
-      gazetteerFastPathMax: Int = GazetteerFastPathMax,
-      // gazetteer defaults to the surfaces of the provided entity index
-      // (1-2 token phrases); pass explicitly to widen/narrow detection
-      gazetteer: Seq[String] = null,
-      // OPEN-entity-set canonicalization: a (entity_id, surfaces:
-      // array<string>) DataFrame (e.g. corpus-derived provisional
-      // entities) routed through the DataFrame-native
-      // Canonicalize.canonicalMapDf — no driver-side Seq on the canon
-      // path. Entities outside `entities` keep their own id as
-      // canonical unless merged. NOTE: not folded into the checkpoint
-      // fingerprint (it is data, not a parameter) — callers using
-      // checkpointRoot with a custom entity table follow the same
-      // one-root-per-corpus contract as the turns input.
-      entitySurfacesDf: Option[DataFrame] = None): Result = {
-    val gaz = Option(gazetteer).getOrElse(
-      entities.flatMap(e => e.canonical +: e.aliases)
-        .map(_.toLowerCase).distinct.sorted
-        .filter(_.split(" ").length <= 2))
+      gazetteerFastPathMax: Int = GazetteerFastPathMax): Result = {
+    val gaz = MentionDetect.gazetteerOf(entities)
     import spark.implicits._
 
     // North-rule physical contract: ONE explicit hash repartition at
@@ -188,10 +174,8 @@ object KgPipeline {
     } else {
       // scale path: Catalyst side (tokenize -> candidate explode ->
       // gazetteer JOIN -> per-turn span groups, no exchange past the
-      // entry repartition), then pooled-scorer resolution/link/pairing.
-      // The unfused operators (MentionDetect.mentions, EntityLink.link,
-      // TripleExtract.triples) also remain as standalone library
-      // operators; all paths asserted equivalent in KgPipelineSpec.
+      // entry repartition), then pooled-scorer resolution/link/pairing;
+      // asserted equal to the fast path in KgPipelineSpec
       val spans = stage("turn_spans", Seq("turns", "gazetteer")) {
         MentionDetect.spanCandidates(spark, turnsP, gaz, predicates)
       }
@@ -203,10 +187,7 @@ object KgPipeline {
     }).as[Triple]
 
     val canonMap = stage("canonical_map", Seq("entity_index")) {
-      entitySurfacesDf match {
-        case Some(df) => Canonicalize.canonicalMapDf(spark, df)
-        case None => Canonicalize.canonicalMap(spark, entities)
-      }
+      Canonicalize.canonicalMap(spark, entities)
     }
 
     // U-6: observed metrics ride the plan itself (zero extra jobs) —
@@ -214,14 +195,10 @@ object KgPipeline {
     // stats, complementing the in-task accumulator metrics above
     val tripleObs = new org.apache.spark.sql.Observation()
     val relabeled = stage("triples_canonical", Seq("triples", "canonical_map")) {
-      // closed path: the canonical map has exactly one row per entity
-      // (every entry point maps every id), so the relabel broadcast
-      // probe is free; a caller-supplied entity TABLE has unknown
-      // cardinality and keeps the parallel count probe
+      // the canonical map has exactly one row per entity (every id is
+      // mapped), so the relabel broadcast probe is free
       Materialize.relabel(spark, rawTriples, canonMap,
-        knownMapSize =
-          if (entitySurfacesDf.isEmpty) Some(entities.size.toLong)
-          else None).toDF()
+        knownMapSize = Some(entities.size.toLong)).toDF()
     }.as[Triple]
       .observe(tripleObs, count(lit(1)).as("triples"),
         min(col("score")).as("min_score"), avg(col("score")).as("avg_score"))
@@ -283,16 +260,16 @@ object KgPipeline {
     * near-identical spellings of the same open name (and open/closed
     * coreferences) merge by the same exact-jaccard semantics.
     *
-    * Physical dispatch mirrors [[run]]: while the gazetteer fits a
-    * per-executor Set (`gazetteerFastPathMax`), the whole extraction —
-    * gazetteer spans, shape detection, open linking, pairing — runs in
-    * ONE pooled shuffle-free mapPartitions pass
-    * (TurnExtract.timedTriplesFromTurns with openShapePattern), closing
-    * r4's ~6x per-triple gap vs the closed fast path. Above the knob
-    * it composes the standalone library operators
-    * (MentionDetect.mentions/openMentions, EntityLink.link,
-    * TripleExtract.triples); both paths are pinned equal in
-    * KgPipelineSpec and P/R-gated against ReferenceOracle.openTriples.
+    * Extraction takes [[run]]'s two plans with `shapePattern` passed
+    * through: while the gazetteer fits a per-executor Set
+    * (`gazetteerFastPathMax`), the whole extraction — gazetteer spans,
+    * shape detection, open linking, pairing — runs in ONE pooled
+    * shuffle-free mapPartitions pass (TurnExtract.timedTriplesFromTurns
+    * with openShapePattern); above it, the span-group plan
+    * (MentionDetect.spanCandidates with openShapePattern, then
+    * TurnExtract.triples). Open tokens ride both as `open:<token>`
+    * mention spans. Both paths are pinned equal in KgPipelineSpec and
+    * P/R-gated against ReferenceOracle.openTriples.
     *
     * Scale contracts (closed r4): iterative/reused frames cut via the
     * pluggable `cut` (a cluster run passes LineageCut.Reliable);
@@ -314,57 +291,36 @@ object KgPipeline {
       relabelBroadcastMax: Long = Materialize.RelabelBroadcastMaxEntities)
       : OpenResult = {
     import spark.implicits._
-    val gaz = entities.flatMap(e => e.canonical +: e.aliases)
-      .map(_.toLowerCase).distinct.sorted
-      .filter(_.split(" ").length <= 2)
+    val gaz = MentionDetect.gazetteerOf(entities)
     val turnsP = turns.repartition(shufflePartitions,
       turns("conv_id"), turns("turn_idx"))
 
-    val (rawTriples, openSurfSrc) =
-      if (gaz.size <= gazetteerFastPathMax) {
-        // fused fast path: detection + open linking + pairing in one
-        // pooled pass; the entity table still needs the distinct open
-        // surfaces — a Catalyst-only scan (tokenize -> explode -> rlike
-        // -> anti-join -> distinct), no scorer, no span grouping
-        val t = TurnExtract.timedTriplesFromTurns(spark, turnsP.as[Turn],
+    val rawTriples =
+      if (gaz.size <= gazetteerFastPathMax)
+        TurnExtract.timedTriplesFromTurns(spark, turnsP.as[Turn],
             gaz, entities, minLinkScore, predicates,
             openShapePattern = Some(shapePattern))
           .drop("ts").as[Triple]
-        // raw `turns`, not turnsP: the surface scan is a separate
-        // action, so a turnsP lineage would RE-EXECUTE the full-corpus
-        // entry repartition (shuffle deps are not reused across jobs);
-        // the output is partitioning-invariant and the distinct's own
-        // exchange moves only the matching tokens
-        val surf = MentionDetect.openMentions(spark, turns, gaz,
-          shapePattern).toDF().select($"surface").distinct()
-        (t, surf)
-      } else {
-        // staged scale path: composed standalone operators (a 1e8-surface
-        // gazetteer forces the join-based mention detection)
-        val closed = EntityLink.link(spark,
-          MentionDetect.mentions(spark, turnsP, gaz), entities, minLinkScore)
-        // raw `turns` for the same reason as the fused branch: mention
-        // rows carry their own (conv_id, turn_idx); TripleExtract
-        // repartitions the union itself
-        val open = cut.cut(MentionDetect
-          .openMentions(spark, turns, gaz, shapePattern)
-          .toDF()) // reused: linked union + entity table
-        val linkedOpen = open.select($"conv_id", $"turn_idx", $"token_pos",
-            $"token_len", $"surface",
-            concat(lit("open:"), $"surface").as("entity_id"),
-            lit(1.0).as("score"))
-          .as[LinkedMention]
-        (TripleExtract.triples(spark, turnsP,
-          closed.unionByName(linkedOpen), predicates, shufflePartitions),
-          open.select($"surface").distinct())
-      }
-
+      else
+        TurnExtract.triples(spark,
+          MentionDetect.spanCandidates(spark, turnsP, gaz, predicates,
+            Some(shapePattern)),
+          entities, minLinkScore, predicates)
+    // the entity table needs the distinct open surfaces — a
+    // Catalyst-only scan (tokenize -> explode -> rlike -> anti-join ->
+    // distinct), no scorer, no span grouping. Raw `turns`, not turnsP:
+    // the surface scan is a separate action, so a turnsP lineage would
+    // RE-EXECUTE the full-corpus entry repartition (shuffle deps are not
+    // reused across jobs); the output is partitioning-invariant and the
+    // distinct's own exchange moves only the matching tokens
+    val openSurf = MentionDetect.openMentions(spark, turns, gaz,
+        shapePattern).select($"surface").distinct()
+      .select(concat(lit(MentionDetect.OpenPrefix), $"surface")
+          .as("entity_id"),
+        array($"surface").as("surfaces"))
     val closedSurf = entities
       .map(e => (e.entity_id, e.canonical +: e.aliases))
       .toDF("entity_id", "surfaces")
-    val openSurf = openSurfSrc
-      .select(concat(lit("open:"), $"surface").as("entity_id"),
-        array($"surface").as("surfaces"))
     val canonRes = Canonicalize.canonicalMapDfTracked(spark,
       closedSurf.unionByName(openSurf), jaccardThreshold, cut = cut)
     // the map is consumed twice by relabel; on the local path it is

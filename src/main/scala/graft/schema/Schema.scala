@@ -34,18 +34,6 @@ final case class Mention(
     token_len: Int,
     surface: String)
 
-/** A mention linked to the candidate index by cosine top-1
-  * (reference: src/pipeline/search_pipeline.py:73-88).
-  */
-final case class LinkedMention(
-    conv_id: String,
-    turn_idx: Int,
-    token_pos: Int,
-    token_len: Int,
-    surface: String,
-    entity_id: String,
-    score: Double)
-
 /** (subj, pred, obj) extraction output; subj/obj are entity ids. */
 final case class Triple(
     conv_id: String,

@@ -125,7 +125,7 @@ class KMeansSpec extends AnyFunSuite {
   }
 
   test("literal and reference-object assignment paths are identical at " +
-    "k=128 (incl. exact and rounding ties); assignExpr dispatches by k*d") {
+    "k=128 (incl. exact and rounding ties)") {
     import org.apache.spark.sql.functions.col
     val d = 32
     val rnd = new scala.util.Random(99)

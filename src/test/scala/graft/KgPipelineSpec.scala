@@ -157,18 +157,9 @@ class KgPipelineSpec extends AnyFunSuite {
         jaccardThreshold = 0.3, localMaxEntities = Int.MaxValue)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(local == expected)
-    // wired into the pipeline: entitySurfacesDf routes canonical_map
-    // through the DataFrame path; triples must equal the default run
-    // (Vocab.entities' surface table produces the same canonical map)
-    val vocabSurf = Vocab.entities
-      .map(e => (e.entity_id, e.canonical +: e.aliases))
-      .toDF("entity_id", "surfaces")
-    def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
-    val viaDf = KgPipeline.run(spark, turns.toDF(), shufflePartitions = 4,
-      entitySurfacesDf = Some(vocabSurf)).triples.collect().map(key).toSet
-    val default = KgPipeline.run(spark, turns.toDF(), shufflePartitions = 4)
-      .triples.collect().map(key).toSet
-    assert(viaDf == default)
+    // end-to-end, KgPipeline.runOpen routes its entity table through
+    // canonicalMapDf; the open-entity tests below pin its map against
+    // the oracle on its local and its distributed branch
   }
 
   test("open-entity pipeline: provisional entities (shape-detected, " +
@@ -209,7 +200,7 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(gotCanon == canon)
   }
 
-  test("fused open fast path == composed operator chain in runOpen(), " +
+  test("fused open fast path == span-group plan in runOpen(), " +
     "and the relabel shuffle fallback (knob = 0) is identical and " +
     "hint-free") {
     import spark.implicits._
@@ -312,27 +303,6 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("fused per-turn extraction equals the unfused operator chain") {
-    import spark.implicits._
-    // unfused: MentionDetect.mentions -> EntityLink.link ->
-    // TripleExtract.triples (each a standalone library operator)
-    val mentions = graft.mention.MentionDetect.mentions(
-      spark, turns.toDF(), Vocab.gazetteer)
-    val linked = graft.link.EntityLink.link(
-      spark, mentions, Vocab.entities, Vocab.minLinkScore)
-    val unfused = graft.triple.TripleExtract.triples(
-      spark, turns.toDF(), linked, Vocab.predicates, 4).collect()
-    // fused: spanCandidates -> TurnExtract (the pipeline path)
-    val spans = graft.mention.MentionDetect.spanCandidates(
-      spark, turns.toDF(), Vocab.gazetteer, Vocab.predicates)
-    val fused = graft.extract.TurnExtract.triples(
-      spark, spans, Vocab.entities, Vocab.minLinkScore, Vocab.predicates)
-      .collect()
-    def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
-    assert(fused.map(key).toSet == unfused.map(key).toSet)
-    assert(fused.length == unfused.length)
-  }
-
   test("fast path (per-row) == staged path (Catalyst candidates) in run()") {
     def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
     val fast = KgPipeline.run(spark, turns.toDF(), shufflePartitions = 4)
@@ -341,6 +311,31 @@ class KgPipelineSpec extends AnyFunSuite {
       gazetteerFastPathMax = 0).triples.collect()
     assert(fast.map(key).toSet == staged.map(key).toSet)
     assert(fast.length == staged.length)
+  }
+
+  test("runOpen per-row == span-group under a caller-supplied unanchored " +
+    "shape pattern that also matches predicate triggers and fillers") {
+    import spark.implicits._
+    val openTurns = TranscriptGen.openTranscripts(spark, nConvs = 150,
+      turnsPerConv = 8, nBases = 6, partitions = 4).toDF()
+    // substring FIND on both sides: digits anywhere, "-es" triggers
+    // (uses, queries, updates) and "-ly" fillers all become open tokens
+    val pattern = "[0-9]{2}|es$|ly"
+    def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
+    val perRowRes = KgPipeline.runOpen(spark, openTurns,
+      shufflePartitions = 4, shapePattern = pattern)
+    val perRow = perRowRes.triples.collect()
+    val spanGroup = KgPipeline.runOpen(spark, openTurns,
+      shufflePartitions = 4, shapePattern = pattern,
+      gazetteerFastPathMax = 0).triples.collect()
+    assert(perRow.nonEmpty, "fixture produced no triples")
+    assert(perRow.map(key).toSet == spanGroup.map(key).toSet)
+    assert(perRow.length == spanGroup.length)
+    // the pattern must reach past the default anchored shape
+    val defaultShape = graft.mention.MentionDetect.OpenShapePattern.r
+    val open = perRowRes.openEntities.as[String].collect()
+    assert(open.exists(id => !defaultShape.matches(id.stripPrefix("open:"))),
+      s"no open entity outside the default shape: ${open.take(5).toSeq}")
   }
 
   test("hot conversation is present and yields triples (skew path)") {

@@ -84,15 +84,20 @@ class LineageCutSpec extends AnyFunSuite {
   test("runOpen under Reliable lineage cut equals the default (the open " +
     "pipeline is the cluster path — no hardcoded localCheckpoint left)") {
     import graft.schema.Triple
-    val turns = graft.gen.TranscriptGen.openTranscripts(spark,
-      nConvs = 60, turnsPerConv = 8, nBases = 4, partitions = 2).toDF()
+    // a vocabulary wide enough (> LocalCanonMaxEntities open names) that
+    // canonicalization takes its distributed branch, whose edge table
+    // and CC rounds are the frames that go through the cut strategy
+    val turns = graft.gen.TranscriptGen.openTranscriptsWide(spark,
+      nConvs = 1500, turnsPerConv = 8, nBases = 1200, partitions = 4)
+      .toDF().cache()
     def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
-    // composed path (gazetteerFastPathMax = 0) so the reused
-    // open-mentions frame actually goes through the cut strategy
-    def run(cut: LineageCut) =
-      graft.pipeline.KgPipeline.runOpen(spark, turns,
-          shufflePartitions = 2, gazetteerFastPathMax = 0, cut = cut)
-        .triples.collect().map(key).toSet
+    def run(cut: LineageCut) = {
+      val r = graft.pipeline.KgPipeline.runOpen(spark, turns,
+        shufflePartitions = 4, cut = cut)
+      assert(r.canonPath.startsWith("distributed"),
+        s"canon path was '${r.canonPath}' — fixture too small")
+      r.triples.collect().map(key).toSet
+    }
     val local = run(LineageCut.Local)
     assert(local.nonEmpty, "fixture produced no triples")
     withCheckpointDir {
@@ -103,6 +108,7 @@ class LineageCutSpec extends AnyFunSuite {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(fs.listStatus(p).nonEmpty, "no reliable checkpoint written")
     }
+    turns.unpersist()
   }
 
   test("k-means fit under Reliable equals the default strategy") {

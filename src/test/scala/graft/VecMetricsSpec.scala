@@ -67,18 +67,6 @@ class VecMetricsSpec extends AnyFunSuite {
     assert(hit.exists(_._1 == "ent_new"))
   }
 
-  test("W1: length-sorted batching clusters surface lengths per partition") {
-    import spark.implicits._
-    val mentions = Seq(
-      graft.schema.Mention("c", 0, 0, 1, "spark"),
-      graft.schema.Mention("c", 0, 2, 1, "a"),
-      graft.schema.Mention("c", 0, 4, 2, "apache spark"),
-      graft.schema.Mention("c", 0, 7, 1, "db")).toDS().repartition(1)
-    val sorted = EntityLink.lengthSorted(mentions).collect()
-      .map(_.surface.length).toSeq
-    assert(sorted == sorted.sorted)
-  }
-
   test("A10 spanMeanPool / A11 combineLayers agree with plain Scala") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
