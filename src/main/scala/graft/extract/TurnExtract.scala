@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * word_sense_multimodal_pipeline.py:239-277).
   *
   * Input rows are per-turn span groups produced by
-  * MentionDetect.spanCandidates (Catalyst side: tokenize, candidate
-  * explode, broadcast gazetteer join, optional open-shape spans,
+  * MentionDetect.spanCandidates (Catalyst side: tokenize, one row per
+  * token, broadcast gazetteer joins, optional open-shape spans,
   * groupBy collect). This stage owns the sequential per-turn semantics,
   * kept byte-compatible with graft.oracle.ReferenceOracle:
   *
@@ -220,8 +220,8 @@ object TurnExtract {
             if (gazBi.contains(bg))
               spans += Span(i, 2, bg, is_mention = true)
           }
-          // find(), not matches(): spanCandidates' open spans come from
-          // MentionDetect.openMentions' rlike (substring FIND) — with the
+          // find(), not matches(): spanCandidates' open flag is an rlike
+          // (substring FIND), as in MentionDetect.openMentions — with the
           // default anchored OpenShapePattern the two agree, but a
           // caller-supplied unanchored pattern must yield the same
           // triples on both sides of gazetteerFastPathMax

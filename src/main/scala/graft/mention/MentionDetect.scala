@@ -2,18 +2,18 @@ package graft.mention
 
 import graft.schema.{Entity, Mention}
 import graft.text.TextOps
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Gazetteer mention detection (SURVEY.md §2.2 P3-P5).
   *
   * Reference behavior: exploded-token POS/NER span filters
   * (word_sense_multimodal_pipeline.py:239-277) + TextMatcher gazetteer
-  * (:187-191). Spark-first design: candidate spans (unigrams + bigrams)
-  * are built per row with array HOFs — zero shuffles — then matched with a
-  * single broadcast hash join against the gazetteer. No window functions,
-  * no UDFs; everything stays inside whole-stage codegen until the
-  * broadcast join.
+  * (:187-191). Spark-first design: each turn is tokenized once and
+  * exploded into one row per token, carrying the unigram at that
+  * position and the bigram that starts there; broadcast hash joins
+  * against the gazetteer flag the matches. No window functions, no
+  * UDFs, no exchange past the caller's turn-level partitioning.
   *
   * Overlap rule (deterministic, applied per turn by
   * graft.extract.TurnExtract, mirrored by the oracle): a bigram match
@@ -31,20 +31,29 @@ object MentionDetect {
       .filter(_.split(" ").length <= 2)
       .toIndexedSeq
 
-  /** Per-turn span groups for the fused pipeline: candidate spans
-    * (unigrams + bigrams) are matched against the broadcast gazetteer
-    * (mention spans) and the predicate-trigger dictionary (pred spans),
-    * then grouped per (conv_id, turn_idx) — shuffle-free when the input
-    * is already hash-partitioned at turn granularity. A token that is
-    * both a gazetteer surface and a predicate trigger yields one row of
+  /** Per-turn span groups for the fused pipeline. Each token is one
+    * probe row: its unigram is matched against the broadcast gazetteer
+    * (mention span) and the predicate-trigger dictionary (pred span),
+    * the bigram starting at it against the gazetteer (mention span).
+    * Only rows with a match survive; their spans are exploded and
+    * grouped per (conv_id, turn_idx) — shuffle-free when the input is
+    * already hash-partitioned at turn granularity. A token that is both
+    * a gazetteer surface and a predicate trigger yields one span of
     * each kind, matching the oracle's independent gap scan.
     *
-    * With `openShapePattern` set (KgPipeline.runOpen), the
-    * [[openMentions]] rows for that pattern join the groups as OPEN
-    * mention spans whose surface is their provisional entity id
-    * `open:<token>` (TurnExtract links them to themselves at score
-    * 1.0). An open token is never a gazetteer token, so no gazetteer
-    * span sits at its position.
+    * The token array is a projected column exploded by the OUTER
+    * generator: a plain posexplode makes Catalyst infer a non-empty
+    * filter on it, substitute the tokenizer into that filter and push
+    * it below the caller's exchange, so every turn would be tokenized
+    * three times.
+    *
+    * With `openShapePattern` set (KgPipeline.runOpen), a unigram that
+    * matches the pattern and is not a token of any gazetteer surface
+    * ([[openMentions]]' rule) also yields an OPEN mention span whose
+    * surface is its provisional entity id `open:<token>` (TurnExtract
+    * links it to itself at score 1.0); the same probe row carries it,
+    * so the corpus is scanned once. An open token is never a
+    * gazetteer token, so no gazetteer span sits at its position.
     *
     * Output: (conv_id, turn_idx,
     *          spans: array<struct<token_pos, token_len, surface,
@@ -57,71 +66,48 @@ object MentionDetect {
       predicates: Map[String, String],
       openShapePattern: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val gaz = gazetteer.toDF("surface").withColumn("__gaz", lit(1))
-    val predMap = typedlit(predicates)
-    val flagged = candidateSpans(spark, turns)
-      .join(broadcast(gaz), Seq("surface"), "left")
-      .select($"conv_id", $"turn_idx", $"token_pos", $"token_len",
-        $"surface",
-        $"__gaz".isNotNull.as("gm"),
-        ($"token_len" === 1 && map_contains_key(predMap, $"surface"))
-          .as("pm"))
-      .filter($"gm" || $"pm")
-    val expanded = flagged.select(
-      $"conv_id", $"turn_idx", $"token_pos", $"token_len", $"surface",
-      explode(
-        when($"gm" && $"pm", array(lit(true), lit(false)))
-          .when($"gm", array(lit(true)))
-          .otherwise(array(lit(false)))).as("is_mention"))
-    val withOpen = openShapePattern.fold(expanded) { p =>
-      expanded.unionByName(openMentions(spark, turns, gazetteer, p)
-        .select($"conv_id", $"turn_idx", $"token_pos", $"token_len",
-          concat(lit(OpenPrefix), $"surface").as("surface"),
-          lit(true).as("is_mention")))
-    }
+    // one table for every probe: each gazetteer surface (flag true) and
+    // each token of one (false). The joins read equal local relations,
+    // so they share one broadcast (each broadcast costs a Spark job)
+    val gazSet = gazetteer.toSet
+    val dict = (gazSet ++ gazetteer.flatMap(_.split(" "))).toSeq
+      .map(s => (s, gazSet(s)))
+    def probe(key: String): DataFrame =
+      broadcast(dict.toDF(key, s"${key}_gaz"))
+    // get, not element_at: it is null past the last token, where ANSI
+    // element_at throws. A flag is null where its join found no row.
+    val probes = turns
+      .select($"conv_id", $"turn_idx", TextOps.tokens($"text").as("toks"))
+      .select($"conv_id", $"turn_idx", $"toks",
+        posexplode_outer($"toks").as(Seq("token_pos", "uni")))
+      .filter($"uni".isNotNull)
+      .select($"conv_id", $"turn_idx", $"token_pos", $"uni",
+        concat($"uni", lit(" "), get($"toks", $"token_pos" + 1)).as("bi"))
+      .join(probe("uni"), Seq("uni"), "left")
+      .join(probe("bi"), Seq("bi"), "left")
+    def span(len: Int, surface: Column, isMention: Boolean): Column =
+      struct($"token_pos", lit(len).as("token_len"), surface.as("surface"),
+        lit(isMention).as("is_mention"))
+    val matches = Seq(
+      coalesce($"uni_gaz", lit(false)) -> span(1, $"uni", isMention = true),
+      map_contains_key(typedlit(predicates), $"uni") ->
+        span(1, $"uni", isMention = false),
+      coalesce($"bi_gaz", lit(false)) -> span(2, $"bi", isMention = true)
+    ) ++ openShapePattern.map(p =>
+      ($"uni".rlike(p) && $"uni_gaz".isNull) ->
+        span(1, concat(lit(OpenPrefix), $"uni"), isMention = true))
     // groupBy, not a Window: over turn-partitioned input the aggregation
     // needs no exchange and no sort, where a Window paid a per-group
     // sort + WindowExec buffering for these tiny groups (stack-sampled
     // hotspot)
-    withOpen
+    probes
+      .filter(matches.map(_._1).reduce(_ || _))
+      .select($"conv_id", $"turn_idx",
+        explode(array(matches.map { case (f, s) => when(f, s) }: _*))
+          .as("span"))
+      .filter($"span".isNotNull)
       .groupBy($"conv_id", $"turn_idx")
-      .agg(collect_list(struct($"token_pos", $"token_len", $"surface",
-        $"is_mention")).as("spans"))
-  }
-
-  /** Candidate spans = unigrams ++ bigrams in ONE array, exploded by the
-    * codegen'd posexplode generator: element p < n is the unigram at
-    * token position p; element p >= n is the bigram starting at p - n
-    * (null-padded at the tail). The token array is let-bound so
-    * tokenization runs once per row (see TextOps.let); the only
-    * interpreted HOF left is one zip_with for the bigram strings —
-    * building (pos, len, surface) struct arrays per row instead measured
-    * ~2x slower at 32 threads.
-    */
-  private def candidateSpans(
-      spark: SparkSession,
-      turns: DataFrame): DataFrame = {
-    import spark.implicits._
-    val combined = TextOps.let(TextOps.tokens($"text")) { toks =>
-      val n = size(toks)
-      val shifted = concat(slice(toks, lit(2), greatest(n - 1, lit(0))),
-        array(lit(null).cast("string")))
-      val bigrams = zip_with(toks, shifted,
-        (a, b) => when(b.isNotNull, concat_ws(" ", a, b)))
-      concat(toks, bigrams)
-    }
-    turns
-      .withColumn("combined_spans", combined)
-      .select($"conv_id", $"turn_idx",
-        (size($"combined_spans") / 2).cast("int").as("n_toks"),
-        posexplode($"combined_spans"))
-      .withColumnRenamed("col", "surface")
-      .filter($"surface".isNotNull)
-      .select($"conv_id", $"turn_idx",
-        when($"pos" < $"n_toks", $"pos").otherwise($"pos" - $"n_toks")
-          .as("token_pos"),
-        when($"pos" < $"n_toks", 1).otherwise(2).as("token_len"),
-        $"surface")
+      .agg(collect_list($"span").as("spans"))
   }
 
   /** Default token shape for OPEN (non-gazetteer) entity detection:

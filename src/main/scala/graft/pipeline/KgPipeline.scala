@@ -172,10 +172,11 @@ object KgPipeline {
           .drop("ts")
       }
     } else {
-      // scale path: Catalyst side (tokenize -> candidate explode ->
-      // gazetteer JOIN -> per-turn span groups, no exchange past the
-      // entry repartition), then pooled-scorer resolution/link/pairing;
-      // asserted equal to the fast path in KgPipelineSpec
+      // scale path: Catalyst side (tokenize once -> one row per token
+      // -> gazetteer JOINs on its unigram and bigram -> per-turn span
+      // groups, no exchange past the entry repartition), then
+      // pooled-scorer resolution/link/pairing; asserted equal to the
+      // fast path in KgPipelineSpec
       val spans = stage("turn_spans", Seq("turns", "gazetteer")) {
         MentionDetect.spanCandidates(spark, turnsP, gaz, predicates)
       }

@@ -21,19 +21,6 @@ object TextOps {
     s.toLowerCase.replaceAll("[^a-z0-9]+", " ").trim
       .split(" ").filter(_.nonEmpty)
 
-  /** Expression-level let-binding: evaluates `value` ONCE per row and
-    * binds it as a lambda variable inside `body`.
-    *
-    * Catalyst does not common-subexpression-eliminate across nested
-    * higher-order-function lambdas, so an expensive subtree (e.g.
-    * regexp tokenization) referenced N times in a span-building
-    * expression is evaluated N times per row — measured 10x slowdown in
-    * mention detection. `transform(array(value), v => body(v))[1]` makes
-    * the binding explicit: the lambda variable is an attribute lookup.
-    */
-  def let(value: Column)(body: Column => Column): Column =
-    element_at(transform(array(value), v => body(v)), 1)
-
   /** Whitespace/punct normalization on a COPY of the text
     * (reference: remove_unnecessary_spaces, src/utils/utils.py:52-67).
     * Non-alnum RUNS collapse to one space so the downstream split can be

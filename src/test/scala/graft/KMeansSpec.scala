@@ -172,8 +172,7 @@ class KMeansSpec extends AnyFunSuite {
   }
 
   test("non-finite distances (squared-overflow Infinity, NaN) assign " +
-    "identically on the literal and reference-object paths — behavior " +
-    "must not flip at the dispatch cutoff") {
+    "identically on the literal and reference-object paths") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val d = 4

@@ -155,4 +155,46 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(!out2.exists(_.contains("BroadcastNestedLoopJoin")),
       s"hinted BNLJ wrongly flagged: $out2")
   }
+
+  test("span detection tokenizes each turn once, shuffles the corpus " +
+    "once and broadcasts the gazetteer once, closed and open") {
+    import graft.mention.MentionDetect
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import spark.implicits._
+    // a parquet scan under the entry repartition, as in a checkpointed
+    // run: the generators' own exchanges stay out of the shuffle count,
+    // and a filter pushed into a local relation would be folded away
+    val dir = java.nio.file.Files.createTempDirectory("graft_spans").toString
+    graft.gen.TranscriptGen
+      .transcripts(spark, nConvs = 30, turnsPerConv = 8, hotTurns = 40,
+        partitions = 2).toDF()
+      .unionByName(graft.gen.TranscriptGen
+        .openTranscripts(spark, nConvs = 30, turnsPerConv = 8, nBases = 4,
+          partitions = 2).toDF())
+      .write.mode("overwrite").parquet(dir)
+    val turns = spark.read.parquet(dir)
+      .repartition(4, $"conv_id", $"turn_idx")
+    val gaz = MentionDetect.gazetteerOf(graft.gen.Vocab.entities)
+    val helper = new AdaptiveSparkPlanHelper {}
+    for (open <- Seq(None, Some(MentionDetect.OpenShapePattern))) {
+      val df = MentionDetect.spanCandidates(spark, turns, gaz,
+        graft.gen.Vocab.predicates, open)
+      // the tokenizer's one regexp_replace, once: no inferred filter
+      // re-evaluates it (and under the exchange)
+      val regexes = df.queryExecution.sparkPlan.collect { case p =>
+        p.expressions.flatMap(_.collect { case r: RegExpReplace => r })
+      }.flatten
+      // one shuffle (the entry repartition) and one broadcast, which
+      // every gazetteer probe reuses: each broadcast is a Spark job
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val shuffles = helper.collect(plan) { case s: ShuffleExchangeExec => s }
+      val broadcasts =
+        helper.collect(plan) { case b: BroadcastExchangeExec => b }
+      assert((regexes.size, shuffles.size, broadcasts.size) == ((1, 1, 1)),
+        s"open=$open: (RegExpReplace, shuffle, broadcast) counts")
+    }
+  }
 }
