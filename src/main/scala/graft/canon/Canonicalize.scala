@@ -18,62 +18,14 @@ import org.apache.spark.sql.functions._
   *      identical result to all-pairs at any scale, never a cross join
   *   3. connected components -> canonical id = min entity_id in component
   *
-  * An OPT-IN MinHash/LSH banding generator (candidateEdgesLsh: K
-  * md5-permutation signatures, K/R bands, equal band -> candidate,
-  * exact verify) remains for callers trading recall (0.990 at s=0.5)
-  * for a cheaper join on pathologically self-similar vocabularies.
-  *
-  * Skew note (SURVEY.md §7.4.4): the LSH band-key equi-join is the
-  * salting point at scale — a degenerate band bucket (near-identical
-  * surface clusters) would hot-spot one reducer. Implemented: buckets
-  * above SaltBucketBound are split into SaltFactor^2 join cells
-  * (plans.Salting.saltedSelfJoinPairs, result-set identical), plus AQE
-  * skew-join splitting (enabled in session conf). The exact path's
-  * skew treatment is the prefix join's rare-first ordering itself (a
-  * ubiquitous shingle enters a doc's prefix only when nothing rarer
-  * exists) plus AQE.
+  * Skew note (SURVEY.md §7.4.4): the prefix join's rare-first ordering
+  * is the skew treatment (a ubiquitous shingle enters a doc's prefix
+  * only when nothing rarer exists), plus AQE skew-join splitting
+  * (enabled in session conf).
   */
 object Canonicalize {
 
-  /** LSH parameters for the OPT-IN banding path (candidateEdgesLsh).
-    * Candidate recall for a pair at true Jaccard s is
-    * 1 - (1 - s^BandRows)^(NumHashes/BandRows); with 32 hashes in 16
-    * bands of 2 that is 0.990 at s = 0.5 and 0.9992 at s = 0.6.
-    *
-    * Since round 3 the DEFAULT edge generator is EXACT: the
-    * prefix-filtered jaccard join (Dedup.jaccardPairsOnSets — the same
-    * scale-safe AllPairs/PPJoin plan the dedup operator uses), so the
-    * local all-pairs path and the distributed path produce identical
-    * edges by construction at ANY input size — no size-dependent
-    * semantics switch. LSH banding remains available for callers who
-    * explicitly trade recall (0.990 at s=0.5) for the cheaper
-    * signature join on corpora where even prefix-filtered candidate
-    * generation is too dense.
-    */
-  val NumHashes = 32
-  val BandRows = 2
-
-  /** (entity_id, surfaces array) -> exploded (entity_id, band) LSH keys.
-    * Signatures via explode + agg-min so each md5 is computed once in
-    * codegen — NumHashes nested array transforms re-expand the shingle
-    * tree per hash (measured 10x slower in the Dedup twin of this
-    * operator; matters at 32 hashes on corpus-extracted entity tables).
-    */
-  def bandKeys(entitySurfaces: DataFrame): DataFrame = {
-    val exploded = withShingles(entitySurfaces)
-      .select(col("entity_id"), explode(col("shingles")).as("g"))
-    val sig = exploded.groupBy(col("entity_id")).agg(
-      min(md5(concat(lit("0:"), col("g")).cast("binary"))).as("h0"),
-      (1 until NumHashes).map(k =>
-        min(md5(concat(lit(s"$k:"), col("g")).cast("binary"))).as(s"h$k")): _*)
-    val bands = (0 until NumHashes / BandRows).map { b =>
-      concat_ws("|", lit(b.toString) +:
-        (0 until BandRows).map(r => col(s"h${b * BandRows + r}")): _*)
-    }
-    sig.select(col("entity_id"), explode(array(bands: _*)).as("band"))
-  }
-
-  def withShingles(entitySurfaces: DataFrame): DataFrame =
+  private def withShingles(entitySurfaces: DataFrame): DataFrame =
     // spread BEFORE the gram projection: a corpus-derived surface table
     // typically arrives through a distinct whose output AQE coalesced
     // to ~1 partition, so the char-gram flatten + distinct (and every
@@ -83,14 +35,6 @@ object Canonicalize {
       .withColumn("shingles",
         array_distinct(flatten(transform(col("surfaces"),
           s => TextOps.charShingles(s, 3)))))
-
-  /** Degenerate band buckets (> this many entities) are salted into
-    * SaltFactor^2 join cells (plans.Salting.saltedSelfJoinPairs) — the
-    * north rule's "union-find over a salted self-join". Below the
-    * bound the plan is the plain band equi-join.
-    */
-  val SaltBucketBound = 4096
-  val SaltFactor = 8
 
   /** EXACT similarity edges between entities (src < dst): char-3-gram
     * surface shingles through the shared prefix-filtered jaccard join
@@ -108,43 +52,6 @@ object Canonicalize {
       withShingles(entitySurfaces).select(col("entity_id"), col("shingles")),
       "entity_id", "shingles", jaccardThreshold, cut)
       .select(col("src"), col("dst"))
-
-  /** OPT-IN approximate edges via MinHash/LSH banding + exact verify:
-    * recall 1-(1-s^BandRows)^(NumHashes/BandRows) per pair (0.990 at
-    * s=0.5) — cheaper than exact candidate generation on corpora whose
-    * surface sets are so self-similar that even prefix-filtered
-    * candidates are dense, at the cost of possibly missing
-    * at-threshold pairs.
-    */
-  def candidateEdgesLsh(
-      spark: SparkSession,
-      entitySurfaces: DataFrame,
-      jaccardThreshold: Double,
-      saltBucketBound: Int = SaltBucketBound,
-      saltFactor: Int = SaltFactor): DataFrame = {
-    val pairs = graft.plans.Salting.saltedSelfJoinPairs(
-      bandKeys(entitySurfaces), "entity_id", "band",
-      saltBucketBound, saltFactor)
-
-    // no explicit broadcast: the shingle table is one row per ENTITY —
-    // fine to broadcast for a closed vocabulary but an OOM trap for
-    // corpus-extracted entity tables (same reasoning as the jaccard
-    // rejoin); AQE picks broadcast when the side is actually small
-    val sh = withShingles(entitySurfaces)
-      .select(col("entity_id"), col("shingles"))
-    val shSrc = sh.select(col("entity_id").as("src"),
-      col("shingles").as("src_sh"))
-    val shDst = sh.select(col("entity_id").as("dst"),
-      col("shingles").as("dst_sh"))
-    pairs
-      .join(shSrc, "src")
-      .join(shDst, "dst")
-      .withColumn("jaccard",
-        size(array_intersect(col("src_sh"), col("dst_sh"))).cast("double") /
-          size(array_union(col("src_sh"), col("dst_sh"))))
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select(col("src"), col("dst"))
-  }
 
   /** Connected components by min-label propagation WITH POINTER JUMPING
     * (label shortcutting; driver-controlled DataFrame loop, SURVEY.md
@@ -259,10 +166,10 @@ object Canonicalize {
         .join(labels, sym("dst") === labels("entity_id"))
         .groupBy(sym("src").as("entity_id"))
         .agg(min(col("canonical_id")).as("__nbr_min"))
-      // the round's OLD label rides along so the convergence check can
-      // be OBSERVED during the cut's own materialization instead of
-      // scheduling a separate compare-join job per round (round 6; the
-      // projection above the observe drops it before the checkpoint)
+      // the round's OLD label rides along into the cut so the
+      // convergence check can be OBSERVED during the cut's own
+      // materialization instead of scheduling a separate compare-join
+      // job per round (round 6)
       val propagated = labels
         .join(neighborMin, Seq("entity_id"), "left")
         .select(col("entity_id"), col("canonical_id").as("__old"),
@@ -272,33 +179,20 @@ object Canonicalize {
       // from `vertices`) fixed instead of dropping the row
       val lookup = propagated.select(
         col("entity_id").as("__lid"), col("canonical_id").as("__lcan"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = cut.cut(propagated.alias("p")
-        .join(lookup, col("p.canonical_id") === col("__lid"), "left")
-        .select(col("p.entity_id"),
-          coalesce(col("__lcan"), col("p.canonical_id")).as("canonical_id"),
-          col("p.__old"))
-        .observe(obs, coalesce(sum(when(
-            col("canonical_id") =!= col("__old"), 1L)), lit(0L))
-          .cast("long").as("chg"))
-        .select(col("entity_id"), col("canonical_id")))
-      // async listener delivery; fall back to the compare join if the
-      // cut strategy's action did not surface the metric (correct
-      // under any strategy — only slower)
-      val changed = {
-        var i = 0
-        while (obs.future.value.isEmpty && i < 40) { Thread.sleep(25); i += 1 }
-        obs.future.value match {
-          case Some(scala.util.Success(row)) if !row.isNullAt(0) =>
-            row.getLong(0)
-          case _ => next.alias("n")
-            .join(labels.alias("o"), Seq("entity_id"))
-            .filter(col("n.canonical_id") =!= col("o.canonical_id"))
-            .limit(1).count()
-        }
-      }
-      labels = next
-      converged = changed == 0
+      // changed-label count via ObservedCount; its fallback job runs
+      // only if the cut strategy's action does not deliver the metric
+      val (next, changed) = graft.plans.ObservedCount.attach(
+        propagated.alias("p")
+          .join(lookup, col("p.canonical_id") === col("__lid"), "left")
+          .select(col("p.entity_id"),
+            coalesce(col("__lcan"), col("p.canonical_id")).as("canonical_id"),
+            col("p.__old")),
+        cut,
+        agg = coalesce(sum(when(col("canonical_id") =!= col("__old"), 1L)),
+          lit(0L)),
+        fallback = _.filter(col("canonical_id") =!= col("__old")).count())
+      labels = next.select(col("entity_id"), col("canonical_id"))
+      converged = changed() == 0
       iter += 1
     }
     if (!converged)
@@ -452,8 +346,11 @@ object Canonicalize {
     * connected components). The marker is bench/ops evidence that a
     * run actually exercised the intended branch (VERDICT r4: the open
     * path's scale branch previously had no at-scale witness).
+    * `localRows` is the map's row count when the local branch built it
+    * from rows already on the driver, else None.
     */
-  final case class CanonResult(map: DataFrame, path: String)
+  final case class CanonResult(map: DataFrame, path: String,
+      localRows: Option[Long])
 
   /** DataFrame-native canonicalization: (entity_id, surfaces:
     * array<string>) -> (entity_id, canonical_id), never materializing
@@ -524,7 +421,7 @@ object Canonicalize {
       // for the same (invalid) input
       requireValidIds(rows.map(_._1), "canonicalMapDf")
       CanonResult(localAllPairsMap(rows, jaccardThreshold).toSeq
-        .toDF("entity_id", "canonical_id"), "local")
+        .toDF("entity_id", "canonical_id"), "local", Some(rows.size.toLong))
     } else {
       // cut the entity table ONCE before the distributed branch fans
       // out (round 6): its lineage — for the open pipeline, a full
@@ -534,7 +431,7 @@ object Canonicalize {
       // bounded probe collect is the only execution it needs.
       val (map, path) = distributedCanonicalMap(spark,
         cut.cut(entitySurfaces), jaccardThreshold, cut)
-      CanonResult(map, path)
+      CanonResult(map, path, None)
     }
   }
 

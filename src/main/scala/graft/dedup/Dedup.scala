@@ -93,10 +93,8 @@ object Dedup {
         (0 until bandRows).map(r => col(s"h${b * bandRows + r}")): _*)
     }
     val keys = sigS.select(col(id), explode(array(bands: _*)).as("band"))
-    // materialize = false: keys is one cheap explode over the already-
-    // checkpointed sig; pinning a second copy costs more than re-derive
     val pairs = graft.plans.Salting.saltedSelfJoinPairs(
-      keys, id, "band", saltBucketBound, saltFactor, materialize = false)
+      keys, id, "band", saltBucketBound, saltFactor)
     val sigA = sig.select(col(id).as("src") +:
       (0 until numHashes).map(k => col(s"h$k").as(s"a$k")): _*)
     val sigB = sig.select(col(id).as("dst") +:
@@ -255,7 +253,7 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     // shingle arrays stored SORTED: one sort per document buys the
-    // merge-scan intersect (SortedIntersectSize) for every candidate
+    // merge-scan intersect (SortedIntersectAtLeast) for every candidate
     // pair the document participates in. array_distinct enforces the
     // set contract (idempotent for already-distinct callers, and the
     // sizes n feeding every filter must be SET sizes).
@@ -307,33 +305,71 @@ object Dedup {
     (docs, docCount, prefixes, prefixCount)
   }
 
+  /** The prefix equi-join condition over two aliased prefix tables `a`
+    * and `b` (id, n, pos, g): equal gram, id order, and two candidate
+    * filters from four ints, applied PER JOINED ROW inside the join so
+    * pruned rows never reach the pair shuffle:
+    *  - length: jaccard >= t forces |A∩B| >= t*max(|A|,|B|) and
+    *    |A∩B| <= min(|A|,|B|), so min < t*max rules the pair out
+    *    (same value for every row of a pair);
+    *  - positional (PPJoin): for the pair's globally SMALLEST common
+    *    prefix token g*, every common token sits at position >= pa in
+    *    A and >= pb in B (per-doc order agrees with the one global
+    *    order), so |A∩B| <= 1 + min(na-pa, nb-pb); a qualifying pair
+    *    needs |A∩B| >= ceil(t*(na+nb)/(1+t)) (jaccard algebra).
+    *    Applied per row this is EXACT: g*'s own row carries the pair's
+    *    LARGEST (na-pa, nb-pb), so a qualifying pair's minimal row
+    *    always survives, and later rows that get pruned only shrink
+    *    the shuffle — min(pos) over survivors is still g*'s position.
+    * Both carry the RELATIVE 1e-9 guard of prefixLen (erring looser is
+    * safe: verify is exact).
+    */
+  private def prefixJoinCond(id: String, threshold: Double): Column =
+    col("a.g") === col("b.g") && col(s"a.$id") < col(s"b.$id") &&
+      least(col("a.n"), col("b.n")).cast("double") >=
+        (lit(threshold) - lit(1e-9)) * greatest(col("a.n"), col("b.n")) &&
+      lit(1) + least(col("a.n") - col("a.pos"),
+        col("b.n") - col("b.pos")) >= overlapBound(threshold,
+          col("a.n"), col("b.n"))
+
+  /** ceil(t*(na+nb)/(1+t)), the least |A∩B| of a pair of set sizes
+    * (na, nb) with jaccard >= t, minus the RELATIVE 1e-9 guard: the
+    * product can land an FP epsilon ABOVE the exact value (e.g. 0.07*100
+    * = 7.000000000000001) and would drop a pair sitting exactly at the
+    * threshold.
+    */
+  private def overlapBound(threshold: Double, na: Column, nb: Column)
+      : Column =
+    ceil(lit(threshold / (1.0 + threshold)) * (na + nb)
+      - lit(1e-9) * (na + nb))
+
+  /** The exact verify tail shared by both plans: `common(need)` (a
+    * bounded merge scan, -1 below `need` = [[overlapBound]] of the
+    * pair's (na, nb)) evaluated once per row, then the precise jaccard
+    * filter. A qualifying pair has common >= the loosened bound, so it
+    * is never early-exited and its count is exact. EvalOnce: without it
+    * the common/jaccard filters are pushed into the preceding join's
+    * condition, where each of their THREE textual references to the
+    * merge scan is evaluated per candidate pair (observed in the r5
+    * plan of q_dedup_jaccard).
+    */
+  private def verified(pairs: DataFrame, threshold: Double)(
+      common: Column => Column): DataFrame =
+    pairs
+      .withColumn("common", graft.functions.EvalOnce.eval_once(common(
+        overlapBound(threshold, col("na"), col("nb")).cast("int"))))
+      .filter(col("common") >= 0)
+      .withColumn("jaccard",
+        col("common").cast("double") / (col("na") + col("nb") - col("common")))
+      .filter(col("jaccard") >= threshold)
+
   /** stages 4-5 of the STAGED plan (see [[jaccardPairs]]): prefix
-    * equi-join with in-join filters, then the pair-dedup aggregation —
-    * the LAZY filtered candidate-pair frame (src, dst, na, nb).
+    * equi-join with in-join filters ([[prefixJoinCond]]), then the
+    * pair-dedup aggregation — the LAZY filtered candidate-pair frame
+    * (src, dst, na, nb).
     */
   private def candidatePairs(
-      prefixes: DataFrame, id: String, threshold: Double): DataFrame = {
-    // Two candidate filters from four ints, applied PER JOINED ROW
-    // inside the join so pruned rows never reach the pair shuffle:
-    //  - length: jaccard >= t forces |A∩B| >= t*max(|A|,|B|) and
-    //    |A∩B| <= min(|A|,|B|), so min < t*max rules the pair out
-    //    (same value for every row of a pair);
-    //  - positional (PPJoin): for the pair's globally SMALLEST common
-    //    prefix token g*, every common token sits at position >= pa in
-    //    A and >= pb in B (per-doc order agrees with the one global
-    //    order), so |A∩B| <= 1 + min(na-pa, nb-pb); a qualifying pair
-    //    needs |A∩B| >= ceil(t*(na+nb)/(1+t)) (jaccard algebra).
-    //    Applied per row this is EXACT: g*'s own row carries the pair's
-    //    LARGEST (na-pa, nb-pb), so a qualifying pair's minimal row
-    //    always survives, and later rows that get pruned only shrink
-    //    the shuffle — min(pos) over survivors is still g*'s position.
-    // Both carry the RELATIVE 1e-9 guard of prefixLen: the RHS can land
-    // an FP epsilon ABOVE the exact value (e.g. 0.07*100 =
-    // 7.000000000000001) and would drop a pair sitting exactly at the
-    // threshold; erring looser is safe (verify is exact).
-    val rowOverlapBound =
-      ceil(lit(threshold / (1.0 + threshold)) * (col("a.n") + col("b.n"))
-        - lit(1e-9) * (col("a.n") + col("b.n")))
+      prefixes: DataFrame, id: String, threshold: Double): DataFrame =
     // few-keys/huge-groups postings -> shuffle_hash (SMJ pays sorts).
     // The pair groupBy replaces the old distinct() (same shuffle shape,
     // +int payload); min(pos) minima both land on g* (order-consistent
@@ -341,14 +377,9 @@ object Dedup {
     // sizes re-join is needed.
     prefixes.alias("a")
       .join(prefixes.alias("b").hint("shuffle_hash"),
-        col("a.g") === col("b.g") && col(s"a.$id") < col(s"b.$id") &&
-          least(col("a.n"), col("b.n")).cast("double") >=
-            (lit(threshold) - lit(1e-9)) * greatest(col("a.n"), col("b.n")) &&
-          lit(1) + least(col("a.n") - col("a.pos"),
-            col("b.n") - col("b.pos")) >= rowOverlapBound)
+        prefixJoinCond(id, threshold))
       .groupBy(col(s"a.$id").as("src"), col(s"b.$id").as("dst"))
       .agg(min(col("a.n")).as("na"), min(col("b.n")).as("nb"))
-  }
 
   /** INLINE-broadcast plan (round 6, guide §2.4/§3.1): the same prefix
     * equi-join and in-join integer filters as [[candidatePairs]], but
@@ -366,45 +397,27 @@ object Dedup {
     * attach-arrays-by-join variant was measured 2-4x SLOWER than the
     * staged plan because it materialized both shingle arrays into every
     * emitted row (and re-copied them through the second attach join).
-    * EvalOnce pins the scan to one evaluation (the common/jaccard
-    * filters otherwise merge into a join condition and evaluate it
-    * three times — observed in the r5 q_dedup_jaccard plan). The only
-    * shuffle left is the dedup aggregation over rows of VERIFIED pairs
-    * (11.5k of 9.97M candidates at t=0.1; 2.73M of 20.2M on the
-    * merge-dense entity vocabulary) instead of over every candidate
-    * pair. Result-identical to the staged plan: the in-join filters
-    * only prune (1e-9-guarded), each surviving row of a pair carries
-    * the pair's constant (na, nb), the bounded scan never early-exits a
-    * qualifying pair, and the final jaccard filter applies the
-    * identical double formula; duplicates (one row per shared prefix
-    * gram) collapse in the final aggregation.
+    * The only shuffle left is the dedup aggregation over rows of
+    * VERIFIED pairs (11.5k of 9.97M candidates at t=0.1; 2.73M of 20.2M
+    * on the merge-dense entity vocabulary) instead of over every
+    * candidate pair. Result-identical to the staged plan: the in-join
+    * filters only prune (1e-9-guarded), each surviving row of a pair
+    * carries the pair's constant (na, nb), the bounded scan never
+    * early-exits a qualifying pair, and the final jaccard filter
+    * applies the identical double formula; duplicates (one row per
+    * shared prefix gram) collapse in the final aggregation.
     */
   private def jaccardPairsInline(
       docRows: Array[org.apache.spark.sql.Row], prefixes: DataFrame,
       id: String, threshold: Double): DataFrame = {
     val sets = graft.functions.IntersectSets.fromRows(docRows)
-    val rowOverlapBound =
-      ceil(lit(threshold / (1.0 + threshold)) * (col("a.n") + col("b.n"))
-        - lit(1e-9) * (col("a.n") + col("b.n")))
-    val minOverlap =
-      ceil(lit(threshold / (1.0 + threshold)) * (col("na") + col("nb"))
-        - lit(1e-9) * (col("na") + col("nb")))
-    prefixes.alias("a")
-      .join(broadcast(prefixes.alias("b")),
-        col("a.g") === col("b.g") && col(s"a.$id") < col(s"b.$id") &&
-          least(col("a.n"), col("b.n")).cast("double") >=
-            (lit(threshold) - lit(1e-9)) * greatest(col("a.n"), col("b.n")) &&
-          lit(1) + least(col("a.n") - col("a.pos"),
-            col("b.n") - col("b.pos")) >= rowOverlapBound)
-      .select(col(s"a.$id").as("src"), col(s"b.$id").as("dst"),
-        col("a.n").as("na"), col("b.n").as("nb"))
-      .withColumn("common", graft.functions.EvalOnce.eval_once(
-        graft.functions.SortedIntersectLookupAtLeast.sorted_intersect_lookup(
-          col("src"), col("dst"), minOverlap.cast("int"), sets)))
-      .filter(col("common") >= 0)
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("na") + col("nb") - col("common")))
-      .filter(col("jaccard") >= threshold)
+    verified(
+      prefixes.alias("a")
+        .join(broadcast(prefixes.alias("b")), prefixJoinCond(id, threshold))
+        .select(col(s"a.$id").as("src"), col(s"b.$id").as("dst"),
+          col("a.n").as("na"), col("b.n").as("nb")),
+      threshold)(need => graft.functions.SortedIntersectLookupAtLeast
+        .sorted_intersect_lookup(col("src"), col("dst"), need, sets))
       .groupBy(col("src"), col("dst"))
       .agg(min(col("common")).cast("long").as("common"),
         min(col("jaccard")).as("jaccard"))
@@ -417,32 +430,18 @@ object Dedup {
   private def jaccardVerify(
       docs: DataFrame, candF: DataFrame, id: String,
       threshold: Double): DataFrame = {
-    val minOverlap =
-      ceil(lit(threshold / (1.0 + threshold)) * (col("na") + col("nb"))
-        - lit(1e-9) * (col("na") + col("nb")))
     // exact verify: BOUNDED merge-scan intersect over the pre-sorted
     // arrays (native codegen expression; array_intersect's per-row
-    // hash set was the dominant verification cost). The per-row
-    // `minOverlap` bound lets the scan stop as soon as the remaining
-    // elements cannot reach it — almost every surviving candidate on a
-    // dense low-threshold corpus fails by a wide margin. A qualifying
-    // pair has common >= ceil(t(na+nb)/(1+t)) >= the loosened bound,
-    // so it is never early-exited and its count is exact; the final
-    // jaccard filter then applies the precise threshold.
-    // EvalOnce: without it the common/jaccard filters are pushed into
-    // the (broadcast) attach-join condition, where each of their THREE
-    // textual references to the merge scan is evaluated per candidate
-    // pair (observed in the r5 plan of q_dedup_jaccard)
-    candF
-      .join(docs.select(col(id).as("src"), col("sh").as("sha")), "src")
-      .join(docs.select(col(id).as("dst"), col("sh").as("shb")), "dst")
-      .withColumn("common", graft.functions.EvalOnce.eval_once(
-        graft.functions.SortedIntersectSize.sorted_intersect_at_least(
-          col("sha"), col("shb"), minOverlap.cast("int"))))
-      .filter(col("common") >= 0)
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("na") + col("nb") - col("common")))
-      .filter(col("jaccard") >= threshold)
+    // hash set was the dominant verification cost). The per-row bound
+    // lets the scan stop as soon as the remaining elements cannot reach
+    // it — almost every surviving candidate on a dense low-threshold
+    // corpus fails by a wide margin.
+    verified(
+      candF
+        .join(docs.select(col(id).as("src"), col("sh").as("sha")), "src")
+        .join(docs.select(col(id).as("dst"), col("sh").as("shb")), "dst"),
+      threshold)(need => graft.functions.SortedIntersectAtLeast
+        .sorted_intersect_at_least(col("sha"), col("shb"), need))
       .select(col("src"), col("dst"),
         col("common").cast("long").as("common"), col("jaccard"))
   }

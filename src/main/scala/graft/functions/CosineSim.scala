@@ -26,9 +26,6 @@ case class CosineSim(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(dt: DataType) = dt match {

@@ -324,22 +324,16 @@ object KgPipeline {
       .toDF("entity_id", "surfaces")
     val canonRes = Canonicalize.canonicalMapDfTracked(spark,
       closedSurf.unionByName(openSurf), jaccardThreshold, cut = cut)
-    // the map is consumed twice by relabel; on the local path it is
-    // already an in-memory LocalRelation (size known from the plan),
-    // and on the distributed paths the size is OBSERVED during the
-    // map's own cut — relabel never schedules a separate probe job
-    val (canonMap, mapSize) =
-      if (canonRes.path == "local")
-        (canonRes.map,
-          Some(canonRes.map.queryExecution.optimizedPlan match {
-            case lr: org.apache.spark.sql.catalyst.plans.logical
-                .LocalRelation => lr.data.length.toLong
-            case _ => -1L
-          }).filter(_ >= 0))
-      else {
+    // the map is consumed twice by relabel; on the local path its size
+    // is the row count the local branch already holds, and on the
+    // distributed paths it is OBSERVED during the map's own cut —
+    // relabel never schedules a separate probe job
+    val (canonMap, mapSize) = canonRes.localRows match {
+      case Some(n) => (canonRes.map, Some(n))
+      case None =>
         val (m, n) = graft.plans.ObservedCount.attach(canonRes.map, cut)
         (m, Some(n()))
-      }
+    }
     OpenResult(
       Materialize.relabel(spark, rawTriples, canonMap, relabelBroadcastMax,
         knownMapSize = mapSize),

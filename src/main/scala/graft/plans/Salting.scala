@@ -32,33 +32,30 @@ object Salting {
   }
 
   /** Salted self-join pair generation over (id, key) rows — the
-    * degenerate-bucket treatment for LSH banding (north rule: "union-
-    * find over a salted self-join"). Emits every unordered id pair
-    * (src < dst) sharing a key. A key bucket of B rows yields B^2/2
-    * pairs inside ONE join key — one reducer task at cluster scale —
-    * so buckets larger than `bucketBound` are split into `saltFactor`
-    * cells by pmod(xxhash64(id), S): the A side replicates each row to
-    * cell keys (key, salt, j) for all j and the B side to (key, i,
-    * salt) for all i, so every (u, v) cell combination joins exactly
-    * once across S^2 independent keys of ~(B/S)^2 output each. Small
-    * buckets keep salt = 0 with no replication — the default plan (and
-    * the result set, asserted in DedupSpec) is unchanged.
+    * degenerate-bucket treatment for Dedup.lshCandidatePairs' band keys
+    * (north rule: "MinHash/LSH … over a salted self-join"). Emits
+    * every unordered id pair (src < dst) sharing a key. A key bucket of
+    * B rows yields B^2/2 pairs inside ONE join key — one reducer task at
+    * cluster scale — so buckets larger than `bucketBound` are split into
+    * `saltFactor` cells by pmod(xxhash64(id), S): the A side replicates
+    * each row to cell keys (key, salt, j) for all j and the B side to
+    * (key, i, salt) for all i, so every (u, v) cell combination joins
+    * exactly once across S^2 independent keys of ~(B/S)^2 output each.
+    * Small buckets keep salt = 0 with no replication — the default plan
+    * (and the result set, asserted in DedupSpec) is unchanged.
     *
-    * `materialize = false` skips the localCheckpoint when the caller's
-    * input is already one cheap projection away from a materialized
-    * frame (e.g. Dedup's band explode over checkpointed signatures) —
-    * re-deriving it per branch is cheaper than pinning a second copy.
+    * `keys` is read by three branches (bucket sizes, A side, B side) and
+    * is not materialized here: the caller passes a frame that is cheap
+    * to re-derive (Dedup's band explode over checkpointed signatures).
     */
   def saltedSelfJoinPairs(
       keys: DataFrame, idCol: String, keyCol: String,
-      bucketBound: Int, saltFactor: Int,
-      materialize: Boolean = true): DataFrame = {
-    val k = if (materialize) keys.localCheckpoint() else keys
+      bucketBound: Int, saltFactor: Int): DataFrame = {
     // oversized buckets only (few keys by construction) -> broadcast
-    val bigKeys = k.groupBy(col(keyCol)).count()
+    val bigKeys = keys.groupBy(col(keyCol)).count()
       .filter(col("count") > bucketBound)
       .select(col(keyCol), lit(true).as("__big"))
-    val salted = k.join(broadcast(bigKeys), Seq(keyCol), "left")
+    val salted = keys.join(broadcast(bigKeys), Seq(keyCol), "left")
       .withColumn("__salt", when(col("__big"),
         pmod(xxhash64(col(idCol)), lit(saltFactor)).cast("int"))
         .otherwise(0))

@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.text.TextOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline over `documents`:

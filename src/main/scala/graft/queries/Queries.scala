@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.io.ParquetFooters
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Driver-contract query registry (SURVEY.md §7.5): each entry is a
   * Spark-first implementation of one operator family from SURVEY.md §2,

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.{CosineSim, VecOps}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,37 +21,6 @@ object SimilarityQueries {
 
   val NumPlanes = 8
   private val OddHex = Seq("1", "3", "5", "7", "9", "b", "d", "f")
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** +/-1 coefficient for plane p, dimension i — md5("p:i") first hex
-    * digit parity; mirrored verbatim in the oracle SQL.
-    */
-  private def coef(p: Int, i: Int): Double =
-    if (OddHex.contains(md5hex(s"$p:$i").substring(0, 1))) 1.0 else -1.0
-
-  private def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** native codegen expression (graft.functions.CosineSim): measured
-    * ~4.5x over the interpreted HOF form on the brute-force scan,
-    * bit-identical values (same double accumulation order).
-    */
-  private def cosine(a: Column, b: Column): Column =
-    graft.functions.CosineSim.cosine_sim(a, b)
-
-  /** bucket id from NumPlanes sign bits. */
-  private def bucket(e: Column): Column =
-    (0 until NumPlanes).map { p =>
-      val coefs = Array.tabulate(64)(i => coef(p, i))
-      when(aggregate(
-        zip_with(e, lit(coefs), (v, c) => v.cast("double") * c),
-        lit(0.0), (acc, x) => acc + x) >= 0, 1L << p).otherwise(0L)
-    }.reduce(_ + _)
 
   def all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // brute-force cosine top-3 per query vector: broadcast the small
@@ -109,14 +79,14 @@ object SimilarityQueries {
       val scored = emb.crossJoin(broadcast(q))
         .filter($"vec_id" =!= $"query_id")
         .select($"query_id", $"vec_id".as("neighbor_id"), $"qe", $"embedding",
-          round(cosine($"qe", $"embedding"), 6).as("cos_sim"))
+          round(CosineSim.cosine_sim($"qe", $"embedding"), 6).as("cos_sim"))
       val w1 = Window.partitionBy($"query_id")
         .orderBy($"cos_sim".desc, $"neighbor_id")
       val stage1 = scored.withColumn("r1", row_number().over(w1))
         .filter($"r1" <= 10)
       val l2sq = round(
-        dot($"qe", $"qe") + dot($"embedding", $"embedding") -
-          lit(2.0) * dot($"qe", $"embedding"), 6)
+        VecOps.dot($"qe", $"qe") + VecOps.dot($"embedding", $"embedding") -
+          lit(2.0) * VecOps.dot($"qe", $"embedding"), 6)
       val w2 = Window.partitionBy($"query_id")
         .orderBy($"l2_sq".asc, $"neighbor_id")
       stage1.withColumn("l2_sq", l2sq)
@@ -140,7 +110,8 @@ object SimilarityQueries {
       val tgt = emb.filter($"vec_id" % 2 === 1)
         .select(expr("vec_id div 2").as("tp"), $"embedding".as("te"))
       val m = tgt.crossJoin(broadcast(src))
-        .select($"sp", $"tp", round(cosine($"se", $"te"), 6).as("cos"))
+        .select($"sp", $"tp",
+          round(CosineSim.cosine_sim($"se", $"te"), 6).as("cos"))
         .localCheckpoint()
       def acc(partCol: String, otherCol: String, name: String) = {
         val w = Window.partitionBy(col(partCol))
@@ -170,12 +141,12 @@ object SimilarityQueries {
             array_sort(collect_list(struct($"vec_id", $"embedding"))),
             e => e.getField("embedding")).as("tok"))
         .filter($"n" === 4)
-      val pooled = graft.functions.VecOps.spanMeanPool($"tok", lit(1), lit(2))
-      val summed = graft.functions.VecOps.combineLayers($"tok", "sum")
+      val pooled = VecOps.spanMeanPool($"tok", lit(1), lit(2))
+      val summed = VecOps.combineLayers($"tok", "sum")
       grouped.select($"gid", $"n",
-          round(graft.functions.VecOps.dot(pooled, pooled), 6)
+          round(VecOps.dot(pooled, pooled), 6)
             .as("span_norm2"),
-          round(graft.functions.VecOps.dot(summed, summed), 6)
+          round(VecOps.dot(summed, summed), 6)
             .as("sum_norm2"))
         .orderBy($"gid")
     }),
@@ -185,7 +156,7 @@ object SimilarityQueries {
       import s.implicits._
       t(s, d, "embeddings")
         .select($"label",
-          round(dot($"embedding", $"embedding"), 6).as("norm2"))
+          round(VecOps.dot($"embedding", $"embedding"), 6).as("norm2"))
         .groupBy($"label")
         .agg(count(lit(1)).as("n"),
           min($"norm2").as("min_norm2"),
@@ -195,15 +166,6 @@ object SimilarityQueries {
   )
 
   private val oddSql = OddHex.map(h => s"'$h'").mkString("(", ",", ")")
-
-  /** DuckDB bucket formula — identical md5-parity coefficients. */
-  private val bucketSql: String =
-    (0 until NumPlanes).map { p =>
-      s"""(CASE WHEN list_sum(list_transform(range(1, 65),
-         i -> __e[i] * (CASE WHEN substr(md5('$p:' || (i - 1)), 1, 1)
-           IN $oddSql THEN 1.0 ELSE -1.0 END))) >= 0
-         THEN ${1L << p} ELSE 0 END)"""
-    }.mkString(" + ")
 
   /** band-b bucket over planes [b*r, (b+1)*r) with LOCAL bit positions —
     * mirrors Similarity.bandBuckets.
@@ -216,6 +178,9 @@ object SimilarityQueries {
            IN $oddSql THEN 1.0 ELSE -1.0 END))) >= 0
          THEN ${1L << p} ELSE 0 END)"""
     }.mkString(" + ")
+
+  /** DuckDB bucket formula: the single band of NumPlanes planes. */
+  private val bucketSql: String = bandBucketSql(0, NumPlanes)
 
   private val cosSql =
     """ROUND(list_dot_product(a.__e, q.__e) /

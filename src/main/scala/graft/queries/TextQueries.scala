@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators (SURVEY.md §2.8 + the training-data-pipeline

@@ -26,19 +26,39 @@ object Similarity {
     if (OddHex.contains(md5hex(s"$plane:$dim").substring(0, 1))) 1.0 else -1.0
 
   /** Sign-bucket id over `numPlanes` hyperplanes for a `dims`-dim
-    * vector. Round 6: the per-plane projection is the codegen
+    * vector: the single-band case of [[bandBuckets]] (planes
+    * [0, numPlanes), bit p = plane p).
+    */
+  def lshBucket(e: Column, numPlanes: Int, dims: Int): Column =
+    signBucket(e, 0, numPlanes, dims)
+
+  /** Sign bits of planes [first, first + numPlanes), bit p = plane
+    * first + p. Round 6: the per-plane projection is the codegen
     * [[graft.functions.DotConst]] expression — the former
     * `aggregate(zip_with(...))` HOF pair per plane was interpreted
     * (CodegenFallback) and allocated an intermediate array per plane
     * per row; DotConst is bit-identical by construction (same
     * accumulation order, same null semantics — see its scaladoc).
     */
-  def lshBucket(e: Column, numPlanes: Int, dims: Int): Column =
+  private def signBucket(e: Column, first: Int, numPlanes: Int,
+      dims: Int): Column =
     (0 until numPlanes).map { p =>
-      val coefs = Array.tabulate(dims)(i => coef(p, i))
+      val coefs = Array.tabulate(dims)(i => coef(first + p, i))
       when(graft.functions.DotConst.dot_const(e, coefs) >= 0, 1L << p)
         .otherwise(0L)
     }.reduce(_ + _)
+
+  /** The shared rank-and-cut tail: per query, the k best (query_id,
+    * neighbor_id, cos_sim) rows by cos_sim desc, ties by neighbor_id.
+    */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos_sim").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        col("cos_sim"))
+  }
 
   /** Brute-force cosine top-k: broadcast the (small) query side, scan
     * candidates once (reference: search_pipeline.py:73-88).
@@ -56,12 +76,7 @@ object Similarity {
       .filter(col(id) =!= col("query_id"))
       .select(col("query_id"), col(id).as("neighbor_id"),
         round(CosineSim.cosine_sim(col("__qe"), col(vec)), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("cos_sim"))
+    topKPerQuery(scored, k)
   }
 
   /** Per-band sign buckets: band b hashes planes
@@ -72,14 +87,8 @@ object Similarity {
   def bandBuckets(e: Column, planesPerBand: Int, numBands: Int,
       dims: Int): Column =
     array((0 until numBands).map { b =>
-      val bucket = (0 until planesPerBand).map { p =>
-        val plane = b * planesPerBand + p
-        val coefs = Array.tabulate(dims)(i => coef(plane, i))
-        // codegen projection — see lshBucket
-        when(graft.functions.DotConst.dot_const(e, coefs) >= 0, 1L << p)
-          .otherwise(0L)
-      }.reduce(_ + _)
-      struct(lit(b).as("band"), bucket.as("bucket"))
+      struct(lit(b).as("band"),
+        signBucket(e, b * planesPerBand, planesPerBand, dims).as("bucket"))
     }: _*)
 
   /** Multi-band OR-construction LSH top-k — the RECOMMENDED scale path.
@@ -123,12 +132,7 @@ object Similarity {
       .join(broadcast(q), "query_id")
       .select(col("query_id"), col("neighbor_id"),
         round(CosineSim.cosine_sim(col("__qe"), col("__ce")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("cos_sim"))
+    topKPerQuery(scored, k)
   }
 
   /** recall@k of an approximate top-k result vs the exact one: fraction
@@ -161,11 +165,6 @@ object Similarity {
       .filter(col(id) =!= col("query_id"))
       .select(col("query_id"), col(id).as("neighbor_id"),
         round(CosineSim.cosine_sim(col("__qe"), col(vec)), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("cos_sim"))
+    topKPerQuery(scored, k)
   }
 }

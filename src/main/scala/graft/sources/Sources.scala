@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Source loaders (SURVEY.md §2.1) — each reference file-shape
   * re-expressed as a declarative Spark read + column expressions, so

@@ -1,12 +1,11 @@
 package graft.streaming
 
 import graft.gen.Vocab
-import graft.mention.MentionDetect
 import graft.extract.TurnExtract
 import graft.schema.{Triple, Turn}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Structured Streaming surface (SURVEY.md §2.9).
   *

@@ -53,6 +53,26 @@ class CanonComponentsSpec extends AnyFunSuite {
     assert(rounds <= bound, s"took $rounds rounds, bound $bound")
   }
 
+  test("pointer-jumping CC takes every round's changed-label count from " +
+    "its cut: no fallback count job on a length-64 chain") {
+    val (ids, es) = chain(64)
+    val (v, e) = toDf(ids, es)
+    // without AQE a count job keeps its action's call site (AQE submits
+    // every stage from its own thread, so the site reads CompletableFuture)
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    val ((labels, rounds), sites) =
+      try JobCount.callSites(spark)(
+        Canonicalize.connectedComponentsWithRounds(spark, v, e))
+      finally spark.conf.set(aqe, prev)
+    assert(rounds > 1)
+    assert(sites.count(_.startsWith("localCheckpoint at ")) >= rounds)
+    assert(!sites.exists(_.startsWith("count at ")),
+      s"CC scheduled a fallback count job: ${sites.mkString(", ")}")
+    assert(labels.collect().forall(_.getString(1) == ids.head))
+  }
+
   test("pointer-jumping CC == local union-find on seeded random graphs " +
     "(including isolated vertices)") {
     val rnd = new scala.util.Random(7)

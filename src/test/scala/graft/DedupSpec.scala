@@ -202,32 +202,6 @@ class DedupSpec extends AnyFunSuite {
     assert(maxCell <= 30, s"salt cells not spreading: max=$maxCell")
   }
 
-  test("SortedIntersectSize == size(array_intersect) on sorted distinct " +
-    "string arrays (the jaccard verify contract)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val rnd = new scala.util.Random(11)
-    val rows = (0 until 200).map { i =>
-      def arr() = rnd.shuffle((0 until 60).toList).take(rnd.nextInt(30) + 1)
-        .map(x => s"tok$x").distinct.sorted
-      (i.toLong, arr(), arr())
-    }
-    val df = rows.toDF("id", "a", "b")
-    val mismatch = df.select(
-        graft.functions.SortedIntersectSize
-          .sorted_intersect_size($"a", $"b").as("fast"),
-        size(array_intersect($"a", $"b")).as("ref"))
-      .filter($"fast" =!= $"ref").count()
-    assert(mismatch == 0)
-    // empty-overlap and identical-array edges
-    val edge = Seq((Seq("a", "b"), Seq("c", "d")), (Seq("a", "b"), Seq("a", "b")))
-      .toDF("a", "b")
-      .select(graft.functions.SortedIntersectSize
-        .sorted_intersect_size($"a", $"b").as("n"))
-      .collect().map(_.getInt(0)).toSeq
-    assert(edge == Seq(0, 2))
-  }
-
   test("SortedIntersectAtLeast: exact count when >= need, -1 otherwise " +
     "(early exit never truncates a qualifying pair)") {
     import spark.implicits._
@@ -238,21 +212,29 @@ class DedupSpec extends AnyFunSuite {
         .map(x => s"tok$x").distinct.sorted
       (i.toLong, arr(), arr(), rnd.nextInt(12)) // need in 0..11
     }
-    val df = rows.toDF("id", "a", "b", "need")
+    // need = 0 rows: the plain intersection size, never -1
+    val rowsAt0 = (0 until 200).map { i =>
+      def arr() = rnd.shuffle((0 until 60).toList).take(rnd.nextInt(30) + 1)
+        .map(x => s"tok$x").distinct.sorted
+      (1000L + i, arr(), arr(), 0)
+    }
+    val df = (rows ++ rowsAt0).toDF("id", "a", "b", "need")
     val bad = df.select(
-        graft.functions.SortedIntersectSize
+        graft.functions.SortedIntersectAtLeast
           .sorted_intersect_at_least($"a", $"b", $"need").as("fast"),
         size(array_intersect($"a", $"b")).as("ref"), $"need")
       .filter($"fast" =!= when($"ref" >= $"need", $"ref").otherwise(-1))
       .count()
     assert(bad == 0)
-    // boundary: count == need exactly must return the exact count
-    val exact = Seq((Seq("a", "b", "c"), Seq("a", "b", "z"), 2))
+    // boundary: count == need exactly must return the exact count; at
+    // need = 0, the empty-overlap and identical-array edges
+    val edge = Seq((Seq("a", "b", "c"), Seq("a", "b", "z"), 2),
+        (Seq("a", "b"), Seq("c", "d"), 0), (Seq("a", "b"), Seq("a", "b"), 0))
       .toDF("a", "b", "need")
-      .select(graft.functions.SortedIntersectSize
+      .select(graft.functions.SortedIntersectAtLeast
         .sorted_intersect_at_least($"a", $"b", $"need"))
-      .collect()(0).getInt(0)
-    assert(exact == 2)
+      .collect().map(_.getInt(0)).toSeq
+    assert(edge == Seq(2, 0, 2))
   }
 
   test("minhashSignatures keeps docs with <2 tokens as NULL-signature " +

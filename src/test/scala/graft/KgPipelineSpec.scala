@@ -273,27 +273,6 @@ class KgPipelineSpec extends AnyFunSuite {
     wide.unpersist()
   }
 
-  test("opt-in LSH banding edges are a subset of the exact edges, and " +
-    "forced salting preserves the LSH pair set") {
-    import spark.implicits._
-    val surfDf = advEntities
-      .map(e => (e.entity_id, e.canonical +: e.aliases))
-      .toDF("entity_id", "surfaces")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val exact = pairs(graft.canon.Canonicalize.candidateEdges(
-      spark, surfDf, 0.3))
-    val lsh = pairs(graft.canon.Canonicalize.candidateEdgesLsh(
-      spark, surfDf, 0.3))
-    assert(lsh.subsetOf(exact),
-      s"LSH emitted non-edges: ${lsh.diff(exact).take(5)}")
-    assert(lsh.nonEmpty, "LSH recall fixture too weak (no pairs at all)")
-    // salt every band bucket (bound = 1): the pair set must not change
-    val salted = pairs(graft.canon.Canonicalize.candidateEdgesLsh(
-      spark, surfDf, 0.3, saltBucketBound = 1, saltFactor = 4))
-    assert(salted == lsh)
-  }
-
   test("output is invariant to shuffle-partition count (2 vs 8)") {
     def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
     val a = KgPipeline.run(spark, turns.toDF(), shufflePartitions = 2)
