@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Flagship: full KG construction (mention detect -> pooled-scorer
-    * entity linking -> triple extraction -> LSH canonicalization ->
-    * relabel) over a deterministic synthetic transcript table
+    * entity linking -> triple extraction -> canonicalization by exact
+    * jaccard plus connected components -> relabel) over a deterministic synthetic transcript table
     * (sf0.001-sized: 60 convs x 8 turns + a hot conversation).
     * Driver smoke-checks rows > 0.
     */

@@ -2,8 +2,10 @@ package graft.canon
 
 import graft.schema.Entity
 import graft.text.TextOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Entity canonicalization (SURVEY.md §4.3.2-3, §7.3).
   *
@@ -316,15 +318,15 @@ object Canonicalize {
   }
 
   /** Full canonicalization: Seq[Entity] -> (entity_id, canonical_id).
-    * The closed-vocabulary entry point (gazetteer contract): the Seq
-    * becomes a LocalRelation and goes through [[canonicalMapDf]]'s one
-    * dispatch. Below `localMaxEntities` that runs with ZERO Spark jobs
-    * (the probe's `limit` over a LocalRelation is a local scan).
-    * CONTRACT: `entity_id` is non-null and unique; the Seq is already
-    * on the driver, so it is checked before dispatch (zero jobs) with
-    * the same IllegalArgumentException as [[canonicalMapDf]]'s local
-    * path — the only check above the cutoff, where the distributed
-    * branch checks nothing.
+    * The closed-vocabulary entry point (gazetteer contract). The Seq is
+    * already on the driver, so its size is the dispatch: up to
+    * `localMaxEntities` it goes straight to the driver all-pairs path
+    * with ZERO Spark jobs and no probe query; above it, it becomes a
+    * LocalRelation and goes through [[canonicalMapDf]].
+    * CONTRACT: `entity_id` is non-null and unique; it is checked here,
+    * before dispatch (zero jobs), with the same IllegalArgumentException
+    * as [[canonicalMapDf]]'s local path — the only check above the
+    * cutoff, where the distributed branch checks nothing.
     */
   def canonicalMap(
       spark: SparkSession,
@@ -334,8 +336,16 @@ object Canonicalize {
     import spark.implicits._
     val surf = entities.map(e => (e.entity_id, e.canonical +: e.aliases))
     requireValidIds(surf.map(_._1), "canonicalMap")
-    canonicalMapDf(spark, surf.toDF("entity_id", "surfaces"),
-      jaccardThreshold, localMaxEntities)
+    // Rows against a fixed schema: deriving the tuple encoder `toDF`
+    // needs by reflection costs ~4 ms per call even warm, this ~0.4 ms
+    if (surf.size <= localMaxEntities)
+      spark.createDataFrame(localAllPairsMap(surf, jaccardThreshold).toSeq
+        .map { case (id, canonical) => Row(id, canonical) }.asJava,
+        StructType(Seq(StructField("entity_id", StringType),
+          StructField("canonical_id", StringType))))
+    else
+      canonicalMapDf(spark, surf.toDF("entity_id", "surfaces"),
+        jaccardThreshold, localMaxEntities)
   }
 
   /** [[canonicalMapDf]]'s result plus the physical path it took —

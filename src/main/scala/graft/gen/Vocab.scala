@@ -7,8 +7,8 @@ import graft.schema.Entity
   * synthesizer and the candidate index (FIXTURES.md §1-2).
   *
   * The index deliberately contains coreferent duplicate entities (e.g.
-  * `ent_spark_a` / `ent_spark_b`) so MinHash/LSH canonicalization has real
-  * merges to find — mirroring the reference's topic-merge step
+  * `ent_spark_a` / `ent_spark_b`) so canonicalization (exact jaccard
+  * plus connected components) has real merges to find — mirroring the reference's topic-merge step
   * (reference: src/pipeline/topic_modeling.py:129-151).
   */
 object Vocab {

@@ -8,7 +8,10 @@ import graft.graph.Materialize
 import graft.link.EntityLink
 import graft.mention.MentionDetect
 import graft.schema._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.util.concurrent.{CompletableFuture, CompletionException, Executors}
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{array, avg, col, concat, count, lit, min}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,7 +32,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (MentionDetect.spanCandidates + TurnExtract.triples) above it; both
   * are tested equivalent. Stage checkpointing, per-partition extraction
   * metrics, and lineage manifests come from graft.ckpt.Checkpoint plus
-  * the CollectionAccumulator wired here.
+  * the CollectionAccumulator wired here. [[run]] commits the corpus-free
+  * stages (entity_index; canonical_map -> nodes) on branch threads beside
+  * the corpus chain, and [[materialize]] commits its two snapshots side
+  * by side; every branch's jobs carry the caller's job group.
   */
 object KgPipeline {
 
@@ -128,114 +134,135 @@ object KgPipeline {
         .digest(desc.getBytes("UTF-8")).map("%02x".format(_)).mkString
     }
 
-    val stats = scala.collection.mutable.ArrayBuffer[Checkpoint.StageStats]()
+    // stage stats land from the calling thread and from the branches;
+    // Result.stats lists them in declared order
+    val stats = scala.collection.concurrent.TrieMap[String, Checkpoint.StageStats]()
     def stage(name: String, inputs: Seq[String])(f: => DataFrame): DataFrame =
       checkpointRoot match {
         case Some(root) =>
           val (df, st) =
             Checkpoint.stage(spark, root, name, inputs, fingerprint)(f)
-          stats += st
+          stats(name) = st
           df
         case None => f
       }
 
-    // Persisted candidate-index table (reference: hnswlib index
-    // save/load, search_pipeline.py:105-124): with checkpointing on,
-    // the index is committed as an `entity_index` stage and LOADED back
-    // on resume (the build is skipped on a matching fingerprint); the
-    // collect is driver-sized by design — this is the broadcast index.
-    // It is sorted on the driver in Spark's string order (UTF-8 bytes),
-    // so the load is the collect's one job, with no range-sort jobs.
-    val index: IndexedSeq[(String, Array[Float])] = checkpointRoot match {
-      case Some(_) =>
+    // The stage DAG is two chains that meet only at the relabel: the
+    // corpus-free entity_index and canonical_map -> nodes never read the
+    // turns, so they run as branches beside the corpus chain turn_spans
+    // -> triples -> triples_canonical -> edges on the calling thread,
+    // and each consumer joins the branch it reads.
+    val branches = new Branches(spark)
+    branches.join {
+      // Persisted candidate-index table (reference: hnswlib index
+      // save/load, search_pipeline.py:105-124): with checkpointing on,
+      // the index is committed as an `entity_index` stage. Only the
+      // triples compute block reads it, so it is forced there: a run
+      // that just committed the stage uses the index it built, and
+      // otherwise the committed table is LOADED back with one collect
+      // (driver-sized by design — this is the broadcast index). A full
+      // resume skips triples and never reads it. Either way it is sorted
+      // on the driver in Spark's string order (UTF-8 bytes), so the load
+      // needs no range-sort jobs.
+      val indexBranch = checkpointRoot.map { _ => branches.fork {
+        var built = Option.empty[IndexedSeq[(String, Array[Float])]]
         val idxDf = stage("entity_index", Seq("entities")) {
-          import spark.implicits._
-          EntityLink.buildIndex(entities)
-            .map { case (id, v) => (id, v.toSeq) }
-            .toDF("entity_id", "vec")
+          val ix = EntityLink.buildIndex(entities)
+          built = Some(ix)
+          ix.map { case (id, v) => (id, v.toSeq) }.toDF("entity_id", "vec")
         }
-        idxDf.collect()
-          .map(r => (r.getString(0), r.getSeq[Float](1).toArray))
-          .sortBy(e => UTF8String.fromString(e._1))
-          .toIndexedSeq
-      case None => EntityLink.buildIndex(entities)
-    }
-
-    val rawTriples = (if (gaz.size <= gazetteerFastPathMax) {
-      // fast path: whole extraction in one shuffle-free pooled
-      // mapPartitions pass (north-star shape; gazetteer as broadcast Set)
-      stage("triples", Seq("turns", "gazetteer", "entity_index")) {
-        import spark.implicits._
-        TurnExtract.timedTriplesFromTurns(spark, turnsP.as[Turn],
-            gaz, entities, minLinkScore, predicates, Some(extractionAcc),
-            prebuiltIndex = Some(index))
-          .drop("ts")
+        (idxDf, built)
+      } }
+      lazy val index: IndexedSeq[(String, Array[Float])] = indexBranch match {
+        case Some(branch) =>
+          val (idxDf, built) = branch()
+          built.getOrElse(idxDf.collect().toIndexedSeq
+              .map(r => (r.getString(0), r.getSeq[Float](1).toArray)))
+            .sortBy(e => UTF8String.fromString(e._1))
+        case None => EntityLink.buildIndex(entities)
       }
-    } else {
-      // scale path: Catalyst side (tokenize once -> one row per token
-      // -> gazetteer JOINs on its unigram and bigram -> per-turn span
-      // groups, no exchange past the entry repartition), then
-      // pooled-scorer resolution/link/pairing; asserted equal to the
-      // fast path in KgPipelineSpec
-      val spans = stage("turn_spans", Seq("turns", "gazetteer")) {
-        MentionDetect.spanCandidates(spark, turnsP, gaz, predicates)
+
+      val canonBranch = branches.fork {
+        val canonMap = stage("canonical_map", Seq("entity_index")) {
+          Canonicalize.canonicalMap(spark, entities)
+        }
+        val nodes = stage("nodes", Seq("canonical_map", "entity_index")) {
+          Materialize.nodes(spark, entities, canonMap).toDF()
+        }.as[NodeRow]
+        (canonMap, nodes)
       }
-      stage("triples", Seq("turn_spans", "entity_index")) {
-        TurnExtract.triples(spark, spans, entities, minLinkScore,
-          predicates, Some(extractionAcc), prebuiltIndex = Some(index))
-          .toDF()
+
+      val rawTriples = (if (gaz.size <= gazetteerFastPathMax) {
+        // fast path: whole extraction in one shuffle-free pooled
+        // mapPartitions pass (north-star shape; gazetteer as broadcast Set)
+        stage("triples", Seq("turns", "gazetteer", "entity_index")) {
+          TurnExtract.timedTriplesFromTurns(spark, turnsP.as[Turn],
+              gaz, entities, minLinkScore, predicates, Some(extractionAcc),
+              prebuiltIndex = Some(index))
+            .drop("ts")
+        }
+      } else {
+        // scale path: Catalyst side (tokenize once -> one row per token
+        // -> gazetteer JOINs on its unigram and bigram -> per-turn span
+        // groups, no exchange past the entry repartition), then
+        // pooled-scorer resolution/link/pairing; asserted equal to the
+        // fast path in KgPipelineSpec
+        val spans = stage("turn_spans", Seq("turns", "gazetteer")) {
+          MentionDetect.spanCandidates(spark, turnsP, gaz, predicates)
+        }
+        stage("triples", Seq("turn_spans", "entity_index")) {
+          TurnExtract.triples(spark, spans, entities, minLinkScore,
+            predicates, Some(extractionAcc), prebuiltIndex = Some(index))
+            .toDF()
+        }
+      }).as[Triple]
+
+      // U-6: observed metrics ride the plan itself (zero extra jobs) —
+      // any first action on the triples also delivers row count + score
+      // stats, complementing the in-task accumulator metrics above
+      val tripleObs = new org.apache.spark.sql.Observation()
+      val relabeled = stage("triples_canonical",
+          Seq("triples", "canonical_map")) {
+        // the canonical map has exactly one row per entity (every id is
+        // mapped), so the relabel broadcast probe is free
+        Materialize.relabel(spark, rawTriples, canonBranch()._1,
+          knownMapSize = Some(entities.size.toLong)).toDF()
+      }.as[Triple]
+        .observe(tripleObs, count(lit(1)).as("triples"),
+          min(col("score")).as("min_score"), avg(col("score")).as("avg_score"))
+
+      val edges = stage("edges", Seq("triples_canonical")) {
+        Materialize.edges(spark, relabeled).toDF()
+      }.as[EdgeRow]
+
+      val metricsFn = () => {
+        import scala.jdk.CollectionConverters._
+        extractionAcc.value.asScala.toSeq.sortBy(_.partition)
       }
-    }).as[Triple]
-
-    val canonMap = stage("canonical_map", Seq("entity_index")) {
-      Canonicalize.canonicalMap(spark, entities)
-    }
-
-    // U-6: observed metrics ride the plan itself (zero extra jobs) —
-    // any first action on the triples also delivers row count + score
-    // stats, complementing the in-task accumulator metrics above
-    val tripleObs = new org.apache.spark.sql.Observation()
-    val relabeled = stage("triples_canonical", Seq("triples", "canonical_map")) {
-      // the canonical map has exactly one row per entity (every id is
-      // mapped), so the relabel broadcast probe is free
-      Materialize.relabel(spark, rawTriples, canonMap,
-        knownMapSize = Some(entities.size.toLong)).toDF()
-    }.as[Triple]
-      .observe(tripleObs, count(lit(1)).as("triples"),
-        min(col("score")).as("min_score"), avg(col("score")).as("avg_score"))
-
-    val nodes = stage("nodes", Seq("canonical_map", "entity_index")) {
-      Materialize.nodes(spark, entities, canonMap).toDF()
-    }.as[NodeRow]
-
-    val edges = stage("edges", Seq("triples_canonical")) {
-      Materialize.edges(spark, relabeled).toDF()
-    }.as[EdgeRow]
-
-    val metricsFn = () => {
-      import scala.jdk.CollectionConverters._
-      extractionAcc.value.asScala.toSeq.sortBy(_.partition)
-    }
-    // extraction metrics land alongside the commits (the triples stage
-    // has already run an action when checkpointing is on)
-    checkpointRoot.foreach { root =>
-      val m = metricsFn()
-      if (m.nonEmpty) {
-        val p = new org.apache.hadoop.fs.Path(root, "extraction_metrics.json")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val os = fs.create(p, true)
-        os.write(m.map(_.json).mkString("[", ",", "]").getBytes("UTF-8"))
-        os.close()
+      // extraction metrics land alongside the commits (the triples stage
+      // has already run an action when checkpointing is on)
+      checkpointRoot.foreach { root =>
+        val m = metricsFn()
+        if (m.nonEmpty) {
+          val p = new org.apache.hadoop.fs.Path(root, "extraction_metrics.json")
+          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val os = fs.create(p, true)
+          os.write(m.map(_.json).mkString("[", ",", "]").getBytes("UTF-8"))
+          os.close()
+        }
       }
+      val declared = Seq("entity_index", "turn_spans", "triples",
+        "canonical_map", "triples_canonical", "nodes", "edges")
+      Result(relabeled, canonBranch()._2, edges, declared.flatMap(stats.get),
+        metricsFn,
+        // non-blocking read of the observed row (Observation.get blocks
+        // until an action; future.value is None before one)
+        () => tripleObs.future.value match {
+          case Some(scala.util.Success(row)) =>
+            row.schema.fieldNames.zip(row.toSeq).toMap
+          case _ => Map.empty
+        })
     }
-    Result(relabeled, nodes, edges, stats.toSeq, metricsFn,
-      // non-blocking read of the observed row (Observation.get blocks
-      // until an action; future.value is None before one)
-      () => tripleObs.future.value match {
-        case Some(scala.util.Success(row)) =>
-          row.schema.fieldNames.zip(row.toSeq).toMap
-        case _ => Map.empty
-      })
   }
 
   final case class OpenResult(
@@ -357,12 +384,60 @@ object KgPipeline {
       dir: String,
       format: graft.io.KgTableFormat = graft.io.ParquetSnapshotFormat)
       : (Long, Long) = {
-    val nv = format.write(spark, result.nodes.toDF(),
-      format.tableName(dir, "nodes"), Nil,
-      Seq("canonical_map", "entity_index"))
-    val ev = format.write(spark, result.edges.toDF(),
-      format.tableName(dir, "edges"), Seq("pred"),
-      Seq("triples_canonical"))
-    (nv, ev)
+    // the two snapshots are independent commits: nodes on a branch,
+    // edges on the calling thread
+    val branches = new Branches(spark)
+    branches.join {
+      val nv = branches.fork(format.write(spark, result.nodes.toDF(),
+        format.tableName(dir, "nodes"), Nil,
+        Seq("canonical_map", "entity_index")))
+      val ev = format.write(spark, result.edges.toDF(),
+        format.tableName(dir, "edges"), Seq("pred"),
+        Seq("triples_canonical"))
+      (nv(), ev)
+    }
+  }
+
+  /** Daemon threads for the branches of [[run]] and [[materialize]]. A
+    * call forks at most two (the width of its stage DAG, never anything
+    * sized by input); idle threads exit after a minute.
+    */
+  private lazy val branchPool = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "kg-pipeline-branch")
+    t.setDaemon(true)
+    t
+  }
+
+  /** The branches one call forks beside its own path. A branch runs
+    * with the caller's session and Spark local properties, its job group
+    * included, so its jobs count as the caller's. [[join]] returns or
+    * throws only after every branch has finished, and throws the first
+    * failure of any of them or of the caller's path, unwrapped.
+    */
+  private final class Branches(spark: SparkSession) {
+    private val forked = scala.collection.mutable.ArrayBuffer[CompletableFuture[_]]()
+    private val firstFailure = new AtomicReference[Throwable]()
+
+    /** starts `body` on a branch thread; the returned function waits for
+      * its value and rethrows its failure unwrapped
+      */
+    def fork[T](body: => T): () => T = {
+      val f = SQLExecution.withThreadLocalCaptured(
+        spark.asInstanceOf[classic.SparkSession], branchPool) {
+        try body
+        catch { case e: Throwable => firstFailure.compareAndSet(null, e); throw e }
+      }
+      forked += f
+      () => try f.join() catch { case e: CompletionException => throw e.getCause }
+    }
+
+    def join[T](body: => T): T = {
+      val r =
+        try Some(body)
+        catch { case e: Throwable => firstFailure.compareAndSet(null, e); None }
+      forked.foreach(f => try f.join() catch { case _: CompletionException => })
+      Option(firstFailure.get).foreach(e => throw e)
+      r.get
+    }
   }
 }
