@@ -27,22 +27,16 @@ import scala.jdk.CollectionConverters._
   */
 object Canonicalize {
 
-  private def withShingles(entitySurfaces: DataFrame): DataFrame =
-    // spread BEFORE the gram projection: a corpus-derived surface table
-    // typically arrives through a distinct whose output AQE coalesced
-    // to ~1 partition, so the char-gram flatten + distinct (and every
-    // downstream per-row stage) would run in ONE task (guide §2.5;
-    // no-op when the input is already wide)
-    graft.plans.Spread.ensure(entitySurfaces, col("entity_id"))
-      .withColumn("shingles",
-        array_distinct(flatten(transform(col("surfaces"),
-          s => TextOps.charShingles(s, 3)))))
-
   /** EXACT similarity edges between entities (src < dst): char-3-gram
-    * surface shingles through the shared prefix-filtered jaccard join
-    * (Dedup.jaccardPairsOnSets). Same result set as exact all-pairs at
-    * any scale; candidate generation is pruned by the rare-first
-    * prefix + length + positional filters, never a cross join.
+    * surface shingles through the shared jaccard operator
+    * (Dedup.jaccardPairsOnSets: driver-local all-pairs up to
+    * Dedup.LocalJaccardMaxDocs entities, else the prefix-filtered join).
+    * Same result set as exact all-pairs at any scale; candidate
+    * generation above the local cutoff is pruned by the rare-first
+    * prefix + length + positional filters, never a cross join. The
+    * operator spreads the table before the gram projection: a
+    * corpus-derived surface table typically arrives through a distinct
+    * whose output AQE coalesced to ~1 partition (guide §2.5).
     */
   def candidateEdges(
       spark: SparkSession,
@@ -50,9 +44,10 @@ object Canonicalize {
       jaccardThreshold: Double,
       cut: graft.plans.LineageCut = graft.plans.LineageCut.Default)
       : DataFrame =
-    graft.dedup.Dedup.jaccardPairsOnSets(
-      withShingles(entitySurfaces).select(col("entity_id"), col("shingles")),
-      "entity_id", "shingles", jaccardThreshold, cut)
+    graft.dedup.Dedup.jaccardPairsOnSets(entitySurfaces, "entity_id",
+      array_distinct(flatten(transform(col("surfaces"),
+        s => TextOps.charShingles(s, 3)))),
+      jaccardThreshold, cut)
       .select(col("src"), col("dst"))
 
   /** Connected components by min-label propagation WITH POINTER JUMPING
@@ -238,13 +233,13 @@ object Canonicalize {
     * The distributed path is forced in tests via localMaxEntities = 0.
     *
     * Cutoff measured by timing both sides (local[4], alias vocabulary
-    * with ~n/5 merge clusters): driver-local all-pairs costs
-    * ~1-3 s at n=1000 and ~5-6 s at n=2000 (single-threaded n^2/2 set
-    * intersections), while the distributed path's floor is its several
-    * fixed-latency jobs (~2-5 s quiet-host). Past ~2k entities the
-    * driver loop is the bottleneck at exactly the scale users stop
-    * noticing — the old 10k cutoff implied ~5*10^7 intersections
-    * (minutes of driver wall).
+    * with ~n/5 merge clusters) when the local pairs came from a Scala
+    * `Set` intersect/union loop: ~1-3 s at n=1000 and ~5-6 s at n=2000
+    * (single-threaded n^2/2 set intersections), while the distributed
+    * path's floor is its several fixed-latency jobs (~2-5 s quiet-host).
+    * The local pairs now come from the shared int-encoded merge-scan
+    * kernel (IntersectSets.allPairs), which is cheaper per pair; the
+    * cutoff has not been re-measured since.
     */
   val LocalCanonMaxEntities = 2000
 
@@ -263,20 +258,19 @@ object Canonicalize {
 
   /** Driver-local exact all-pairs jaccard + union-find over collected
     * (entity_id, surfaces) rows — the physical small-input fast path
-    * of [[canonicalMapDf]].
+    * of [[canonicalMapDf]]. The pairs come from the one driver-local
+    * jaccard kernel that Dedup's local plan also runs
+    * (IntersectSets.allPairs: int-encoded grams, bounded merge scan),
+    * so its |A∩B| / |A∪B| is the same double as every other plan's.
     */
   private def localAllPairsMap(
       surf: Seq[(String, Seq[String])],
       jaccardThreshold: Double): Map[String, String] = {
-    val sh = surf.map { case (id, ss) => id -> localShingles(ss) }.toMap
-    val ids = surf.map(_._1)
-    val edges = for {
-      a <- ids; b <- ids if a < b
-      ja = sh(a); jb = sh(b)
-      if ja.intersect(jb).size.toDouble / ja.union(jb).size >=
-        jaccardThreshold
-    } yield (a, b)
-    localUnionFind(ids, edges)
+    val edges = graft.functions.IntersectSets
+      .of(surf.iterator.map { case (id, ss) => (id, localShingles(ss)) })
+      .allPairs(jaccardThreshold)
+      .map { case (a, b, _, _) => (a.toString, b.toString) }
+    localUnionFind(surf.map(_._1), edges)
   }
 
   /** Distributed canonicalization over an arbitrary (entity_id,
@@ -449,7 +443,8 @@ object Canonicalize {
     * a duplicate, the input contract of the canonicalization entry
     * points; names up to 5 duplicates.
     */
-  private def requireValidIds(ids: Seq[String], caller: String): Unit = {
+  private[graft] def requireValidIds(ids: Seq[String], caller: String)
+      : Unit = {
     val nulls = ids.count(_ == null)
     require(nulls == 0,
       s"$caller: $nulls null entity_id values in the input " +

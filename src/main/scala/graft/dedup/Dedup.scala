@@ -15,9 +15,16 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** distinct token n-gram shingles of a text column. */
+  /** distinct token n-gram shingles of a text column. The n-gram
+    * expression reads the token array 2n+1 times and Catalyst does not
+    * eliminate common subexpressions inside higher-order functions, so
+    * the tokens are bound once as a lambda variable,
+    * `transform(array(tokens), toks => ...)[1]`: the regexp tokenizer
+    * runs once per row.
+    */
   def shingles(text: Column, n: Int = 2): Column =
-    array_distinct(TextOps.tokenNgrams(TextOps.tokens(text), n))
+    element_at(transform(array(TextOps.tokens(text)),
+      toks => array_distinct(TextOps.tokenNgrams(toks, n))), 1)
 
   /** Exact dedup: canonical id = min id among byte-identical texts
     * (reference: URL dedup, documents_dataset.py:71-83).
@@ -35,7 +42,10 @@ object Dedup {
     * Emits one row per distinct id INCLUDING documents with no shingles
     * (< shingleN tokens): their h0..h{n-1} are NULL, matching DuckDB's
     * `list_aggregate(empty, 'min')` — so short/empty docs don't silently
-    * vanish from the signature table.
+    * vanish from the signature table. `explode_outer` keeps such a doc
+    * as one NULL-gram row (a plain explode would also let Catalyst infer
+    * a `size(shingles) > 0` filter and push a second tokenizer copy
+    * under the exchange); a null id keeps NULL signatures too.
     */
   def minhashSignatures(
       df: DataFrame, id: String, text: String,
@@ -43,17 +53,16 @@ object Dedup {
     // spread BEFORE the shingle projection: the numHashes md5s per
     // exploded gram are the operator's dominant CPU and would otherwise
     // run at the scan's parallelism (ONE task on a one-file corpus —
-    // guide §2.5); the id-hash partitioning is then REUSED by both the
-    // signature groupBy and the distinct (guide §2.4), so the plan
-    // gains no additional exchange
-    val dfS = graft.plans.Spread.ensure(df, col(id))
-    val exploded = dfS.select(col(id),
-      explode(shingles(col(text), shingleN)).as("g"))
-    val agg = exploded.groupBy(col(id)).agg(
-      min(md5(concat(lit("0:"), col("g")).cast("binary"))).as("h0"),
-      (1 until numHashes).map(k =>
-        min(md5(concat(lit(s"$k:"), col("g")).cast("binary"))).as(s"h$k")): _*)
-    dfS.select(col(id)).distinct().join(agg, Seq(id), "left")
+    // guide §2.5); the id-hash partitioning is then REUSED by the
+    // signature groupBy (guide §2.4), so the plan gains no additional
+    // exchange
+    graft.plans.Spread.ensure(df, col(id))
+      .select(col(id), explode_outer(when(col(id).isNotNull,
+        shingles(col(text), shingleN))).as("g"))
+      .groupBy(col(id)).agg(
+        min(md5(concat(lit("0:"), col("g")).cast("binary"))).as("h0"),
+        (1 until numHashes).map(k => min(md5(
+          concat(lit(s"$k:"), col("g")).cast("binary"))).as(s"h$k")): _*)
   }
 
   /** LSH banding over signatures -> candidate pairs + estimated
@@ -107,7 +116,10 @@ object Dedup {
         (matches.cast("double") / numHashes).as("est_sim"))
   }
 
-  /** Exact n-gram Jaccard pairs >= threshold via prefix-filtered
+  /** Exact n-gram Jaccard pairs >= threshold, as (src, dst, common,
+    * jaccard) with src < dst. Three physical plans, one result (see
+    * [[jaccardPairsOnSets]] for the dispatch): driver-local all-pairs
+    * under [[LocalJaccardMaxDocs]], else a prefix-filtered
     * inverted-index join (SSJoin/AllPairs-style frequency pruning):
     *
     *   1. global document frequency per shingle;
@@ -136,14 +148,41 @@ object Dedup {
   def jaccardPairs(
       df: DataFrame, id: String, text: String,
       threshold: Double, shingleN: Int = 2,
-      cut: graft.plans.LineageCut = graft.plans.LineageCut.Default): DataFrame =
-    // spread the RAW doc table before the shingle projection: tokenize +
-    // n-gram + distinct is the docs stage's CPU and runs at scan
-    // parallelism otherwise (guide §2.5; no-op at production scale)
-    jaccardPairsOnSets(
-      graft.plans.Spread.ensure(df, col(id))
-        .select(col(id), shingles(col(text), shingleN).as("__sh")),
-      id, "__sh", threshold, cut)
+      cut: graft.plans.LineageCut = graft.plans.LineageCut.Default,
+      localMaxDocs: Long = LocalJaccardMaxDocs): DataFrame =
+    jaccardPairsOnSets(df, id, shingles(col(text), shingleN), threshold,
+      cut, localMaxDocs = localMaxDocs)
+
+  /** Doc-count cutoff of the driver-local jaccard plan: a table of at
+    * most this many documents is collected by the dispatch probe of
+    * [[jaccardPairsOnSets]] and its pairs are computed on the driver
+    * ([[graft.functions.IntersectSets.allPairs]]), with no Spark job
+    * past the probe's one bounded collect. It also bounds what that
+    * probe pulls to the driver: `LocalJaccardMaxDocs + 1` rows.
+    *
+    * Set from timing both plans, not from any benchmark's table size:
+    * median of 3 walls of `jaccardPairs(...).count()` on a one-file
+    * parquet table, local plan vs the distributed (inline) plan, warm
+    * JVM, local[4], 4 shuffle partitions, 4-core host. Documents are
+    * synthesized from the sf0.01 fixture's token frequencies and
+    * lengths (~50 tokens), 10% of them near-duplicates of an earlier
+    * one, with fresh ids per run:
+    *
+    * {{{
+    *   docs   t=0.1 local / dist (pairs)   t=0.7 local / dist (pairs)
+    *    500     0.34 /  0.87 s    (181)      0.20 / 0.61 s   (1)
+    *   1000     0.50 /  1.23 s    (585)      0.28 / 0.86 s   (7)
+    *   2000     1.54 /  2.53 s   (1886)      0.45 / 0.97 s  (11)
+    *   4000     5.06 /  7.75 s   (7402)      0.86 / 1.36 s  (16)
+    *   8000    20.29 / 28.83 s  (28324)      2.40 / 2.96 s  (42)
+    * }}}
+    *
+    * The local plan wins at every measured size, but its margin at
+    * t=0.7 shrinks with n (local/dist 0.33 at 500 docs, 0.81 at 8000)
+    * and its single driver thread reaches 20 s at t=0.1: the cutoff is
+    * the largest size measured, not an extrapolated crossover.
+    */
+  val LocalJaccardMaxDocs = 8000L
 
   /** Broadcast-dispatch knobs for [[jaccardPairsOnSets]] (round 6):
     * when the doc table is executor/driver-small and the prefix-posting
@@ -173,44 +212,68 @@ object Dedup {
   val JaccardInlineMaxPostings = 4000000L
   val JaccardInlineMaxDocs = 200000L
 
-  /** The same exact prefix-filtered join over a PRECOMPUTED shingle-set
-    * column (any element order — deduplicated and sorted internally, so
-    * a caller passing duplicate elements still gets true set jaccard).
-    * This is the shared edge generator: text dedup passes token
-    * n-grams, entity canonicalization passes char-3-gram surface sets
+  /** Exact jaccard pairs over a set-valued expression `sets` of `df`'s
+    * columns (any element order; deduplicated internally, so duplicate
+    * elements still give true set jaccard). This is the shared edge
+    * generator: text dedup passes token n-grams ([[jaccardPairs]]),
+    * entity canonicalization passes char-3-gram surface sets
     * (Canonicalize.candidateEdges), both getting identical exact
-    * semantics. `cut` picks the lineage-cut strategy for the two
-    * internal reused frames (docs, prefixes) — see
-    * [[graft.plans.LineageCut]]; the default localCheckpoint is right
-    * in-sandbox, a cluster run over expensive lineage opts into
-    * Reliable/Replicated.
+    * semantics. Output (src, dst, common, jaccard), src < dst in
+    * Catalyst order; null ids and empty sets pair with nothing.
     *
-    * Physical dispatch: inline-broadcast verification while docs and
-    * prefix postings fit the broadcast knobs, staged join+agg+verify
-    * above them; identical results on both sides of the cutoff. Both
+    * Three-way physical dispatch, identical results on every side:
+    *   - local: one bounded `limit(localMaxDocs + 1).collect()` of
+    *     (id, array_distinct(sets)) rows, read from `df` itself (before
+    *     the Spread exchange, so the probe pays no shuffle). At or under
+    *     the cutoff every pair is computed on the driver
+    *     (IntersectSets.allPairs) and returned as a LocalRelation with
+    *     the distributed plans' schema. The rows are in hand, so a
+    *     duplicate id throws an IllegalArgumentException here.
+    *   - inline: broadcast candidate join with per-row verification,
+    *     while the doc and prefix-posting counts fit `inlineMaxDocs` and
+    *     `inlineMaxPostings` (see [[JaccardInlineMaxDocs]]).
+    *   - staged: shuffled candidate join, pair aggregation, verify joins.
+    * The local probe runs only for string, long and int ids (the key
+    * types IntersectSets holds), as does the inline plan. The distributed
     * counts ride the two frames' lineage cuts (ObservedCount), so the
-    * decision schedules no job, and the doc rows are collected to the
-    * driver only on the inline side.
+    * inline/staged decision schedules no job. `cut` picks the lineage-cut
+    * strategy for those frames — see [[graft.plans.LineageCut]]; the
+    * default localCheckpoint is right in-sandbox, a cluster run over
+    * expensive lineage opts into Reliable/Replicated. Tests force a side
+    * with the three knobs (`localMaxDocs = -1` skips the local plan even
+    * for an empty table).
     */
   def jaccardPairsOnSets(
-      df: DataFrame, id: String, setCol: String,
+      df: DataFrame, id: String, sets: Column,
       threshold: Double,
       cut: graft.plans.LineageCut = graft.plans.LineageCut.Default,
       inlineMaxPostings: Long = JaccardInlineMaxPostings,
-      inlineMaxDocs: Long = JaccardInlineMaxDocs): DataFrame = {
-    val (docs, docCount, prefixes, prefixCount) =
-      jaccardPrefixes(df, id, setCol, threshold, cut)
-    // The frames are eagerly materialized by `cut`, so the collect
-    // below cannot observe a second source evaluation; it runs only
-    // once both counts are known to fit, so no path pulls more than
-    // inlineMaxDocs rows to the driver.
-    if (graft.functions.IntersectSets.supportedKey(
-          docs.schema.head.dataType) &&
-        docCount() <= inlineMaxDocs && prefixCount() <= inlineMaxPostings)
-      jaccardPairsInline(docs.collect(), prefixes, id, threshold)
-    else
-      jaccardVerify(docs, candidatePairs(prefixes, id, threshold),
-        id, threshold)
+      inlineMaxDocs: Long = JaccardInlineMaxDocs,
+      localMaxDocs: Long = LocalJaccardMaxDocs): DataFrame = {
+    val idField = df.select(col(id)).schema.head
+    val probe =
+      if (!graft.functions.IntersectSets.supportedKey(idField.dataType)) None
+      else Some(df.select(col(id), array_distinct(sets))
+        .limit(math.max(0L, math.min(localMaxDocs, Int.MaxValue - 1L) + 1)
+          .toInt)
+        .collect())
+    probe.filter(_.length <= localMaxDocs) match {
+      case Some(rows) =>
+        jaccardPairsLocal(df.sparkSession, rows, idField, threshold)
+      case None =>
+        val (docs, docCount, prefixes, prefixCount) =
+          jaccardPrefixes(df, id, sets, threshold, cut)
+        // The frames are eagerly materialized by `cut`, so the collect
+        // below cannot observe a second source evaluation; it runs only
+        // once both counts are known to fit, so no path pulls more than
+        // inlineMaxDocs rows to the driver.
+        if (probe.isDefined &&
+            docCount() <= inlineMaxDocs && prefixCount() <= inlineMaxPostings)
+          jaccardPairsInline(docs.collect(), prefixes, id, threshold)
+        else
+          jaccardVerify(docs, candidatePairs(prefixes, id, threshold),
+            id, threshold)
+    }
   }
 
   /** Noise-free selectivity evidence for the jaccard operator:
@@ -226,15 +289,13 @@ object Dedup {
       cut: graft.plans.LineageCut = graft.plans.LineageCut.Default)
       : (Long, Long) = {
     // deliberately stays on the STAGED candidate pipeline regardless of
-    // the inline dispatch in jaccardPairsOnSets: the candidate count is
-    // round-over-round selectivity evidence for the in-join filters,
-    // and its definition (distinct pairs surviving the length +
+    // the local and inline dispatch in jaccardPairsOnSets: the candidate
+    // count is round-over-round selectivity evidence for the in-join
+    // filters, and its definition (distinct pairs surviving the length +
     // positional filters) must not move when the query's physical plan
     // does. The verified count is plan-independent (exact).
-    val (docs, _, prefixes, _) = jaccardPrefixes(
-      graft.plans.Spread.ensure(df, col(id))
-        .select(col(id), shingles(col(text), shingleN).as("__sh")),
-      id, "__sh", threshold, cut)
+    val (docs, _, prefixes, _) = jaccardPrefixes(df, id,
+      shingles(col(text), shingleN), threshold, cut)
     val candF = cut.cut(candidatePairs(prefixes, id, threshold))
     (candF.count(), jaccardVerify(docs, candF, id, threshold).count())
   }
@@ -246,20 +307,28 @@ object Dedup {
     * materializations — ObservedCount).
     */
   private def jaccardPrefixes(
-      df: DataFrame, id: String, setCol: String,
+      df: DataFrame, id: String, sets: Column,
       threshold: Double,
       cut: graft.plans.LineageCut)
       : (DataFrame, () => Long, DataFrame, () => Long) = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    // shingle arrays stored SORTED: one sort per document buys the
+    // spread the RAW rows before the set projection: tokenize + n-gram +
+    // distinct is the docs stage's CPU and runs at scan parallelism
+    // otherwise (guide §2.5; no-op at production scale).
+    // Shingle arrays stored SORTED: one sort per document buys the
     // merge-scan intersect (SortedIntersectAtLeast) for every candidate
     // pair the document participates in. array_distinct enforces the
     // set contract (idempotent for already-distinct callers, and the
-    // sizes n feeding every filter must be SET sizes).
-    val (docs, docCount) = graft.plans.ObservedCount.attach(df
-      .select(col(id), sort_array(array_distinct(col(setCol))).as("sh"))
-      .filter(size(col("sh")) > 0), cut)
+    // sizes n feeding every filter must be SET sizes). EvalOnce keeps
+    // the non-empty filter above the projection: pushed down, it would
+    // carry a second copy of the set expression (the tokenizer, for
+    // text) under the Spread exchange.
+    val (docs, docCount) = graft.plans.ObservedCount.attach(
+      graft.plans.Spread.ensure(df, col(id))
+        .select(col(id), graft.functions.EvalOnce.eval_once(
+          sort_array(array_distinct(sets))).as("sh"))
+        .filter(size(col("sh")) > 0), cut)
     val posting = docs.select(col(id), explode(col("sh")).as("g"))
     val dfreq = posting.groupBy(col("g")).agg(count(lit(1)).as("df"))
     // rare-first order per doc; struct sort = (df asc, g asc), one
@@ -422,6 +491,31 @@ object Dedup {
       .agg(min(col("common")).cast("long").as("common"),
         min(col("jaccard")).as("jaccard"))
       .select(col("src"), col("dst"), col("common"), col("jaccard"))
+  }
+
+  /** LOCAL plan: every pair of the probe's collected (id, distinct set)
+    * rows through the shared driver kernel, as a LocalRelation with the
+    * distributed plans' schema — id type and nullability of the input,
+    * then nullable `common: bigint` and `jaccard: double`.
+    */
+  private def jaccardPairsLocal(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: Array[org.apache.spark.sql.Row],
+      idField: org.apache.spark.sql.types.StructField,
+      threshold: Double): DataFrame = {
+    import org.apache.spark.sql.types._
+    def external(k: Any): Any = k match {
+      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
+      case other => other
+    }
+    val out = graft.functions.IntersectSets.fromRows(rows)
+      .allPairs(threshold).map { case (a, b, c, j) =>
+        org.apache.spark.sql.Row(external(a), external(b), c.toLong, j)
+      }
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+      StructField("src", idField.dataType, idField.nullable),
+      StructField("dst", idField.dataType, idField.nullable),
+      StructField("common", LongType), StructField("jaccard", DoubleType))))
   }
 
   /** stage 6 (see [[jaccardPairs]]): bounded merge-scan verification of

@@ -5,8 +5,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
-/** Executor-shared id -> sorted-shingle-array table for
+/** id -> sorted int-encoded gram array table, the one jaccard kernel
+  * of both driver-local plans (Dedup's local plan and canonicalization's
+  * local branch run [[allPairs]]) and the executor-shared table of
   * [[SortedIntersectLookupAtLeast]]: the inline jaccard verify keys into
   * this ONE per-executor structure instead of attaching both shingle
   * arrays to every joined row (measured: materializing two ~51-element
@@ -33,6 +36,64 @@ final class IntersectSets(
       throw new IllegalStateException(
         s"sorted_intersect_lookup: id missing from the doc table: " +
           s"${if (a == null) src else dst}")
+    IntersectSets.common(a, b, need)
+  }
+
+  /** Every pair of entries whose jaccard |A∩B| / |A∪B| is >= `threshold`,
+    * as (src, dst, common, jaccard) with src < dst in Catalyst order
+    * (UTF-8 bytes for string ids, numeric otherwise): the driver-local
+    * all-pairs kernel, and the same pair test the distributed jaccard
+    * plans apply per candidate. The length filter and the bounded scan's
+    * `need` are Dedup's 1e-9-guarded bounds, so they only prune; a pair
+    * is kept on its exact `common` and the identical double
+    * `common / (na + nb - common)`. Empty sets never pair.
+    */
+  def allPairs(threshold: Double): Seq[(Any, Any, Int, Double)] = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0, 1], got $threshold")
+    // ascending set size: na <= nb, so once the length filter
+    // na >= t * nb fails for some j it fails for every later j
+    val es = sets.entrySet.asScala.toArray
+      .filter(_.getValue.length > 0).sortBy(_.getValue.length)
+    val out = Seq.newBuilder[(Any, Any, Int, Double)]
+    var i = 0
+    while (i < es.length) {
+      val a = es(i).getValue; val na = a.length
+      var j = i + 1
+      while (j < es.length &&
+          na >= (threshold - 1e-9) * es(j).getValue.length) {
+        val b = es(j).getValue; val nb = b.length
+        val c = IntersectSets.common(a, b, math.ceil(
+          threshold / (1.0 + threshold) * (na + nb) - 1e-9 * (na + nb)).toInt)
+        if (c >= 0) {
+          val jaccard = c.toDouble / (na + nb - c)
+          if (jaccard >= threshold) {
+            val (x, y) = (es(i).getKey, es(j).getKey)
+            out += (if (x.asInstanceOf[Comparable[Any]].compareTo(y) < 0)
+              (x, y, c, jaccard) else (y, x, c, jaccard))
+          }
+        }
+        j += 1
+      }
+      i += 1
+    }
+    out.result()
+  }
+
+  override def toString: String = s"IntersectSets(n=$n)"
+}
+
+object IntersectSets {
+  /** key datatypes the internal-form conversion below supports */
+  def supportedKey(dt: DataType): Boolean = dt match {
+    case StringType | LongType | IntegerType => true
+    case _ => false
+  }
+
+  /** exact |A ∩ B| of two sorted distinct int arrays when >= need,
+    * else -1, with the early exit of [[SortedIntersectAtLeast]]
+    */
+  def common(a: Array[Int], b: Array[Int], need: Int): Int = {
     val na = a.length; val nb = b.length
     var i = 0; var j = 0; var c = 0
     while (i < na && j < nb) {
@@ -46,46 +107,43 @@ final class IntersectSets(
     if (c >= need) c else -1
   }
 
-  override def toString: String = s"IntersectSets(n=$n)"
-}
+  /** build from collected (id, distinct sh) rows; see [[of]] */
+  def fromRows(rows: Array[org.apache.spark.sql.Row]): IntersectSets =
+    of(rows.iterator.map(r => (r.get(0), r.getSeq[String](1))))
 
-object IntersectSets {
-  /** key datatypes the internal-form conversion below supports */
-  def supportedKey(dt: DataType): Boolean = dt match {
-    case StringType | LongType | IntegerType => true
-    case _ => false
-  }
-
-  /** build from collected (id, sorted sh) rows. Grams are
+  /** build from (id, distinct grams) entries; null ids are skipped (they
+    * pair with nothing in a join either), a null gram set is empty, and
+    * a repeated id throws an IllegalArgumentException. Grams are
     * dictionary-encoded to their rank in the sorted distinct gram
     * vocabulary — an ORDER-PRESERVING, collision-free int encoding, so
-    * the per-doc arrays stay sorted and the merge scan counts exactly
-    * the same intersection while comparing ints instead of UTF8
-    * strings (measured ~6.5 us per ~51-element UTF8 scan over 27M
-    * candidate rows — the whole verify wall; int scans are ~20x
-    * cheaper and shrink the per-executor table to ~4 bytes/gram).
+    * the merge scan counts exactly the same intersection while comparing
+    * ints instead of UTF8 strings (measured ~6.5 us per ~51-element UTF8
+    * scan over 27M candidate rows — the whole verify wall; int scans are
+    * ~20x cheaper and shrink the per-executor table to ~4 bytes/gram).
     */
-  def fromRows(rows: Array[org.apache.spark.sql.Row]): IntersectSets = {
+  def of(entries: Iterator[(Any, Iterable[String])]): IntersectSets = {
+    val rows = entries.collect {
+      case (id, grams) if id != null => (id, Option(grams).getOrElse(Nil))
+    }.toArray
     val vocab = new java.util.TreeSet[String]()
-    rows.foreach(r => r.getSeq[String](1).foreach(vocab.add))
+    rows.foreach(r => r._2.foreach(vocab.add))
     val rank = new java.util.HashMap[String, Integer](vocab.size * 2)
     val it = vocab.iterator()
     var k = 0
     while (it.hasNext) { rank.put(it.next(), k); k += 1 }
     val m = new java.util.HashMap[Any, Array[Int]](rows.length * 2)
-    rows.foreach { r =>
-      val key = r.get(0) match {
+    rows.foreach { case (id, grams) =>
+      val key = id match {
         case s: String => UTF8String.fromString(s)
         case other => other // boxed Long / Int match eval-time values
       }
-      // source arrays are sort_array()ed (UTF8 binary order); ranks are
-      // assigned in java.lang.String order, which differs from UTF8
-      // byte order for supplementary codepoints — sort the int arrays
-      // to re-establish the merge-scan contract regardless
-      val arr = r.getSeq[String](1).iterator
-        .map(s => rank.get(s).intValue()).toArray
+      // ranks follow java.lang.String order, which differs from UTF8
+      // byte order for supplementary codepoints, and callers need not
+      // pass sorted grams: sort the int arrays for the merge scan
+      val arr = grams.iterator.map(s => rank.get(s).intValue()).toArray
       java.util.Arrays.sort(arr)
-      m.put(key, arr)
+      require(m.put(key, arr) == null,
+        s"duplicate id in the jaccard input: $id (contract: unique ids)")
     }
     new IntersectSets(m)
   }

@@ -77,6 +77,10 @@ object KgPipeline {
       checkpointRoot: Option[String] = None,
       shufflePartitions: Int = 32,
       gazetteerFastPathMax: Int = GazetteerFastPathMax): Result = {
+    // canonicalMap's id contract, checked on the driver before any stage
+    // runs (0 jobs): inside the canonical branch its error would surface
+    // only after the corpus chain had committed turn_spans and triples
+    Canonicalize.requireValidIds(entities.map(_.entity_id), "canonicalMap")
     val gaz = MentionDetect.gazetteerOf(entities)
     import spark.implicits._
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.dedup.Dedup
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - prefix-filtered jaccardPairs == naive all-postings join (the
   *     df-ordered prefix join is an exact optimization, not an
   *     approximation);
+  *   - the local, inline and staged jaccard plans return identical
+  *     rows and schemas on every differential input;
   *   - LSH degenerate-bucket salting preserves the candidate-pair set
   *     while bounding per-join-key group sizes;
   *   - minhashSignatures keeps short/empty docs as NULL-signature rows
@@ -56,7 +58,8 @@ class DedupSpec extends AnyFunSuite {
     "(several thresholds, high-df boilerplate shingles present)") {
     val df = corpus()
     for (t <- Seq(0.1, 0.3, 0.5, 0.8)) {
-      val fast = Dedup.jaccardPairs(df, "doc_id", "text", t)
+      val fast = Dedup.jaccardPairs(df, "doc_id", "text", t,
+          localMaxDocs = 0)
         .select("src", "dst", "common")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val naive = naiveJaccard(df, t)
@@ -73,9 +76,10 @@ class DedupSpec extends AnyFunSuite {
       d.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     for (t <- Seq(0.1, 0.5, 0.8)) {
-      val inline = Dedup.jaccardPairsOnSets(sets, "doc_id", "s", t)
-      val staged = Dedup.jaccardPairsOnSets(sets, "doc_id", "s", t,
-        inlineMaxPostings = 0, inlineMaxDocs = 0)
+      val inline = Dedup.jaccardPairsOnSets(sets, "doc_id", col("s"), t,
+        localMaxDocs = 0)
+      val staged = Dedup.jaccardPairsOnSets(sets, "doc_id", col("s"), t,
+        inlineMaxPostings = 0, inlineMaxDocs = 0, localMaxDocs = 0)
       // the dispatch actually took different physical paths
       assert(!inline.queryExecution.executedPlan.toString
         .contains("ShuffledHashJoin"), s"inline plan at t=$t")
@@ -93,10 +97,14 @@ class DedupSpec extends AnyFunSuite {
       d.select("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     def collects(sites: Seq[String]) = sites.filter(_.startsWith("collect "))
+    // localMaxDocs = -1: the local plan's probe is an empty limit, so
+    // it collects nothing either
     val (inline, inlineSites) = JobCount.callSites(spark)(
-      Dedup.jaccardPairsOnSets(sets, "doc_id", "s", 0.5))
+      Dedup.jaccardPairsOnSets(sets, "doc_id", col("s"), 0.5,
+        localMaxDocs = -1))
     val (staged, stagedSites) = JobCount.callSites(spark)(
-      Dedup.jaccardPairsOnSets(sets, "doc_id", "s", 0.5, inlineMaxDocs = 1))
+      Dedup.jaccardPairsOnSets(sets, "doc_id", col("s"), 0.5,
+        inlineMaxDocs = 1, localMaxDocs = -1))
     // the detector sees the inline side's collect of the doc rows
     assert(collects(inlineSites).size == 1, inlineSites)
     assert(collects(stagedSites).isEmpty, stagedSites)
@@ -129,7 +137,8 @@ class DedupSpec extends AnyFunSuite {
     val b = "a b c d e f g h x y z".split(" ")   // 7 shared bigrams
     val df = Seq((1L, a.mkString(" ")), (2L, b.mkString(" ")))
       .toDF("doc_id", "text")
-    val fast = Dedup.jaccardPairs(df, "doc_id", "text", 0.5)
+    val fast = Dedup.jaccardPairs(df, "doc_id", "text", 0.5,
+        localMaxDocs = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fast == Set((1L, 2L)))
   }
@@ -145,7 +154,8 @@ class DedupSpec extends AnyFunSuite {
     val big = toks.mkString(" ")            // 100 distinct bigrams
     val small = toks.take(8).mkString(" ")  // 7 bigrams, all within big's
     val df = Seq((1L, small), (2L, big)).toDF("doc_id", "text")
-    val fast = Dedup.jaccardPairs(df, "doc_id", "text", 0.07)
+    val fast = Dedup.jaccardPairs(df, "doc_id", "text", 0.07,
+        localMaxDocs = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSet
     assert(fast == Set((1L, 2L, 0.07)))
   }
@@ -161,12 +171,14 @@ class DedupSpec extends AnyFunSuite {
     val shared = (1 to 7).map(i => s"s$i").mkString(" ")
     val df = Seq((1L, s"u1 u2 u3 $shared"), (2L, s"v1 v2 v3 $shared"))
       .toDF("doc_id", "text")
-    val fast = Dedup.jaccardPairs(df, "doc_id", "text", 0.5)
+    val fast = Dedup.jaccardPairs(df, "doc_id", "text", 0.5,
+        localMaxDocs = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSet
     assert(fast == Set((1L, 2L, 0.5)))
     // and one the positional filter must PRUNE: raise the threshold so
     // the bound fails (t=0.6 needs ceil(0.6*18/1.6)=7 > ubound 6)
-    assert(Dedup.jaccardPairs(df, "doc_id", "text", 0.6).count() == 0)
+    assert(Dedup.jaccardPairs(df, "doc_id", "text", 0.6, localMaxDocs = 0)
+      .count() == 0)
   }
 
   test("lshCandidatePairs salting engages on degenerate buckets and " +
@@ -250,5 +262,138 @@ class DedupSpec extends AnyFunSuite {
     assert(sig(2).isNullAt(1))
     val pairs = Dedup.lshCandidatePairs(df, "doc_id", "text", 4, 2).count()
     assert(pairs == 0) // no shared bands among the 3; nulls never pair
+  }
+
+  /** jaccardPairsOnSets forced onto each of its three plans (local,
+    * inline, staged), each checked to have taken it
+    */
+  private def threeWays(df: DataFrame, id: String, sets: Column,
+      t: Double): Seq[DataFrame] = {
+    val local = Dedup.jaccardPairsOnSets(df, id, sets, t,
+      localMaxDocs = Long.MaxValue)
+    val inline = Dedup.jaccardPairsOnSets(df, id, sets, t, localMaxDocs = -1)
+    // -1, not 0: an empty table fits every cutoff of 0
+    val staged = Dedup.jaccardPairsOnSets(df, id, sets, t,
+      inlineMaxPostings = -1, inlineMaxDocs = -1, localMaxDocs = -1)
+    assert(local.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    // the planned (pre-AQE) plans: at run time AQE drops the joins of an
+    // empty input
+    assert(!inline.queryExecution.sparkPlan.toString
+      .contains("ShuffledHashJoin"))
+    assert(staged.queryExecution.sparkPlan.toString
+      .contains("ShuffledHashJoin"))
+    Seq(local, inline, staged)
+  }
+
+  private def sameOnEveryPlan(name: String, df: DataFrame, id: String,
+      sets: Column, t: Double): Set[Seq[Any]] = {
+    val Seq(local, inline, staged) = threeWays(df, id, sets, t)
+    def rows(d: DataFrame) = d.collect().map(_.toSeq).toSet
+    assert(local.schema == inline.schema && inline.schema == staged.schema,
+      s"$name t=$t schemas: ${local.schema} / ${inline.schema} / " +
+        staged.schema)
+    val l = rows(local)
+    assert(l == rows(inline), s"$name t=$t local vs inline")
+    assert(l == rows(staged), s"$name t=$t local vs staged")
+    l
+  }
+
+  test("local, inline and staged jaccard plans give identical rows and " +
+    "schemas on every differential input") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(12)
+    val vocab = (0 until 12).map(i => s"g$i")
+    // threshold-straddling: random 3-8 element subsets of 12 grams
+    // crowd every pair's jaccard around the thresholds below; two rows
+    // sit exactly at 0.5 (6 of 12) and at 1/3
+    val straddle = (0 until 60).map(i =>
+      (i.toLong, rnd.shuffle(vocab).take(3 + rnd.nextInt(6)))) ++ Seq(
+      (100L, (0 until 9).map(i => s"x$i")),
+      (101L, (0 until 6).map(i => s"x$i") ++ (0 until 3).map(i => s"y$i")),
+      (102L, Seq("z0", "z1")), (103L, Seq("z1", "z2")))
+    val longIds = straddle.toDF("id", "s")
+    for (t <- Seq(0.1, 1.0 / 3, 0.5, 0.8, 1.0)) {
+      val out = sameOnEveryPlan("straddle", longIds, "id", col("s"), t)
+      if (t == 0.5) assert(out.exists(r => r(3) == 0.5))
+      if (t == 1.0 / 3) assert(out.contains(Seq(102L, 103L, 1L, 1.0 / 3)))
+    }
+    // the same sets keyed by strings and by ints
+    sameOnEveryPlan("string ids",
+      straddle.map { case (i, s) => (f"d$i%03d", s) }.toDF("id", "s"),
+      "id", col("s"), 0.3)
+    sameOnEveryPlan("int ids",
+      straddle.map { case (i, s) => (i.toInt, s) }.toDF("id", "s"),
+      "id", col("s"), 0.3)
+    // text corpus through the bigram shingle expression
+    for (t <- Seq(0.1, 0.5))
+      sameOnEveryPlan("corpus", corpus(), "doc_id",
+        Dedup.shingles(col("text")), t)
+    // empty and null sets, duplicate grams, and null ids that share
+    // grams with real rows: none of them pairs
+    val sparse = Seq[(Option[Long], Seq[String])](
+      (Some(1L), Seq("a", "b", "c")), (Some(2L), Seq("a", "b", "c", "c")),
+      (Some(3L), Seq()), (Some(4L), null), (None, Seq("a", "b", "c")),
+      (None, Seq("a", "b")), (Some(5L), Seq("a", "b"))).toDF("id", "s")
+    assert(sameOnEveryPlan("sparse", sparse, "id", col("s"), 0.5) == Set(
+      Seq(1L, 2L, 3L, 1.0), Seq(1L, 5L, 2L, 2.0 / 3),
+      Seq(2L, 5L, 2L, 2.0 / 3)))
+    // empty table
+    assert(sameOnEveryPlan("empty", longIds.limit(0), "id", col("s"), 0.5)
+      .isEmpty)
+    // non-BMP ids and grams: U+FB01 sorts BEFORE U+1F600 in UTF-8 bytes
+    // (Catalyst's order) but after it in UTF-16 (java.lang.String's)
+    val fi = "\uFB01"; val smile = "\uD83D\uDE00"; val gA = "\uD835\uDD38"
+    val nonBmp = Seq(
+      (s"${smile}x", Seq(s"$gA$gA", "b", s"c$smile", "d")),
+      (s"${fi}x", Seq(s"$gA$gA", "b", s"c$smile", "e")),
+      (s"a$gA", Seq(s"$gA$gA", "b", s"c$fi", "d")),
+      ("ab", Seq("b", s"c$smile", "d", s"$fi"))).toDF("id", "s")
+    val out = sameOnEveryPlan("non-BMP", nonBmp, "id", col("s"), 0.4)
+    assert(out.contains(Seq(s"${fi}x", s"${smile}x", 3L, 0.6)), out)
+  }
+
+  test("the local jaccard plan rejects a duplicate id with an " +
+    "IllegalArgumentException") {
+    import spark.implicits._
+    val dup = Seq((1L, Seq("a", "b")), (2L, Seq("a", "c")), (1L, Seq("b")))
+      .toDF("id", "s")
+    val e = intercept[IllegalArgumentException](
+      Dedup.jaccardPairsOnSets(dup, "id", col("s"), 0.3))
+    assert(e.getMessage.contains("duplicate id"), e.getMessage)
+  }
+
+  test("the local plan's probe collects at most localMaxDocs + 1 rows and " +
+    "hands a larger table to the distributed plans") {
+    import org.apache.spark.sql.execution.CollectLimitExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // a parquet scan: over an in-memory table the optimizer folds the
+    // probe's limit into a local relation and no plan collects
+    val dir = java.nio.file.Files.createTempDirectory("graft_probe").toString
+    corpus().write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    val sets = Dedup.shingles(col("text"))
+    val (above, plans) = ExecutedPlans(spark)(
+      Dedup.jaccardPairsOnSets(df, "doc_id", sets, 0.5, localMaxDocs = 5))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val limits = plans.flatMap(p =>
+      helper.collect(p) { case c: CollectLimitExec => c.limit })
+    assert(limits == Seq(6), limits)
+    assert(!above.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    def rows(d: DataFrame) = d.collect().map(_.toSeq).toSet
+    assert(rows(above) == rows(Dedup.jaccardPairsOnSets(df, "doc_id", sets,
+      0.5)))
+  }
+
+  test("q_dedup_jaccard on the sf0.001 fixture takes the local plan: " +
+    "3 Spark jobs, where the distributed plans ran 12") {
+    val q = graft.SparkEntry.queries("q_dedup_jaccard")
+    val sf = "/root/testdata/sf0.001"
+    val warm = q(spark, sf).count()
+    val (n, sites) = JobCount.callSites(spark)(q(spark, sf).count())
+    assert(n == warm)
+    // the probe's collect, then the count's two jobs
+    assert(sites.size == 3, sites)
   }
 }

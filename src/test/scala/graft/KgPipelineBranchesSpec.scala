@@ -95,13 +95,16 @@ class KgPipelineBranchesSpec extends AnyFunSuite {
   test("a duplicated entity id makes run throw canonicalMap's " +
     "IllegalArgumentException, with no job left running") {
     val dup = Vocab.entities :+ Vocab.entities.head
-    val e = intercept[IllegalArgumentException](
-      run(tmp("graft_branches_dup"), dup))
+    val root = tmp("graft_branches_dup")
+    val e = intercept[IllegalArgumentException](run(root, dup))
     assert(e.getMessage.contains(
       "canonicalMap: duplicate entity_id values in the input"), e.getMessage)
     assert(e.getMessage.contains(Vocab.entities.head.entity_id))
     ListenerBusDrain(spark.sparkContext)
     val active = spark.sparkContext.statusTracker.getActiveJobIds()
     assert(active.isEmpty, s"jobs still running: ${active.mkString(",")}")
+    // the ids are checked before any stage runs: nothing was committed
+    val left = new java.io.File(root).list().toSeq
+    assert(left.intersect(declared).isEmpty, s"stages committed: $left")
   }
 }

@@ -63,7 +63,8 @@ class LineageCutSpec extends AnyFunSuite {
   test("jaccardPairs: Reliable strategy produces the identical pair set " +
     "(and the checkpoint dir actually received data)") {
     def run(cut: LineageCut) =
-      graft.dedup.Dedup.jaccardPairs(docs, "doc_id", "text", 0.5, cut = cut)
+      graft.dedup.Dedup.jaccardPairs(docs, "doc_id", "text", 0.5, cut = cut,
+          localMaxDocs = 0)
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
         .toSet

@@ -197,4 +197,35 @@ class PlanGuardSpec extends AnyFunSuite {
         s"open=$open: (RegExpReplace, shuffle, broadcast) counts")
     }
   }
+
+  test("dedup's distributed plans tokenize each document once: the " +
+    "jaccard doc frame and the MinHash signatures hold one RegExpReplace " +
+    "and shuffle once") {
+    import graft.dedup.Dedup
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // one parquet file: a single-split scan, so Spread adds its exchange
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val helper = new AdaptiveSparkPlanHelper {}
+    def counts(p: SparkPlan): (Int, Int) = (
+      helper.collect(p) { case n =>
+        n.expressions.flatMap(_.collect { case r: RegExpReplace => r }).size
+      }.sum,
+      helper.collect(p) { case s: ShuffleExchangeExec => s }.size)
+    // every execution of the distributed jaccard plans: two read the
+    // text, the local plan's probe (before the Spread exchange, so it
+    // shuffles nothing) and the doc frame's cut (after it)
+    val (_, plans) = ExecutedPlans(spark)(
+      Dedup.jaccardPairs(docs, "doc_id", "text", 0.5, localMaxDocs = 0)
+        .count())
+    val reading = plans.map(counts).filter(_._1 > 0)
+    assert(reading == Seq((1, 0), (1, 1)),
+      s"(RegExpReplace, shuffle) per plan: ${plans.map(counts)}")
+    val sig = Dedup.minhashSignatures(docs, "doc_id", "text", 8)
+    sig.collect()
+    assert(counts(sig.queryExecution.executedPlan) == ((1, 1)),
+      "minhashSignatures (RegExpReplace, shuffle)")
+  }
 }
