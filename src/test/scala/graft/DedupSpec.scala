@@ -265,10 +265,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   /** jaccardPairsOnSets forced onto each of its three plans (local,
-    * inline, staged), each checked to have taken it
+    * inline, staged), each checked to have taken it; asserts equal
+    * schemas and rows and returns the rows
     */
-  private def threeWays(df: DataFrame, id: String, sets: Column,
-      t: Double): Seq[DataFrame] = {
+  private def sameOnEveryPlan(name: String, df: DataFrame, id: String,
+      sets: Column, t: Double): Set[Seq[Any]] = {
     val local = Dedup.jaccardPairsOnSets(df, id, sets, t,
       localMaxDocs = Long.MaxValue)
     val inline = Dedup.jaccardPairsOnSets(df, id, sets, t, localMaxDocs = -1)
@@ -283,12 +284,6 @@ class DedupSpec extends AnyFunSuite {
       .contains("ShuffledHashJoin"))
     assert(staged.queryExecution.sparkPlan.toString
       .contains("ShuffledHashJoin"))
-    Seq(local, inline, staged)
-  }
-
-  private def sameOnEveryPlan(name: String, df: DataFrame, id: String,
-      sets: Column, t: Double): Set[Seq[Any]] = {
-    val Seq(local, inline, staged) = threeWays(df, id, sets, t)
     def rows(d: DataFrame) = d.collect().map(_.toSeq).toSet
     assert(local.schema == inline.schema && inline.schema == staged.schema,
       s"$name t=$t schemas: ${local.schema} / ${inline.schema} / " +
