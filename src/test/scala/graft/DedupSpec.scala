@@ -380,15 +380,4 @@ class DedupSpec extends AnyFunSuite {
     assert(rows(above) == rows(Dedup.jaccardPairsOnSets(df, "doc_id", sets,
       0.5)))
   }
-
-  test("q_dedup_jaccard on the sf0.001 fixture takes the local plan: " +
-    "3 Spark jobs, where the distributed plans ran 12") {
-    val q = graft.SparkEntry.queries("q_dedup_jaccard")
-    val sf = "/root/testdata/sf0.001"
-    val warm = q(spark, sf).count()
-    val (n, sites) = JobCount.callSites(spark)(q(spark, sf).count())
-    assert(n == warm)
-    // the probe's collect, then the count's two jobs
-    assert(sites.size == 3, sites)
-  }
 }

@@ -228,4 +228,14 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(counts(sig.queryExecution.executedPlan) == ((1, 1)),
       "minhashSignatures (RegExpReplace, shuffle)")
   }
+
+  test("q_dedup_jaccard on the sf0.001 fixture takes the local jaccard " +
+    "plan: 3 Spark jobs, where the distributed plans ran 12") {
+    val q = graft.SparkEntry.queries("q_dedup_jaccard")
+    val warm = q(spark, sfDir).count()
+    val (n, sites) = JobCount.callSites(spark)(q(spark, sfDir).count())
+    assert(n == warm)
+    // the probe's collect, then the count's two jobs
+    assert(sites.size == 3, sites)
+  }
 }
