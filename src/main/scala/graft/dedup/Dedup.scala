@@ -242,6 +242,15 @@ object Dedup {
     * expensive lineage opts into Reliable/Replicated. Tests force a side
     * with the three knobs (`localMaxDocs = -1` skips the local plan even
     * for an empty table).
+    *
+    * Ids must be unique. They are checked wherever the rows are already
+    * on the driver: the local plan and the inline plan (whose lookup
+    * table IntersectSets.fromRows builds from collected rows) throw an
+    * IllegalArgumentException on a duplicate. The staged plan does not
+    * check: it groups a duplicate's postings under one id and verifies
+    * each duplicate row on its own. A check there would cost a
+    * corpus-scale shuffle to police a precondition every caller meets
+    * by construction (distinct doc ids, distinct entity surfaces).
     */
   def jaccardPairsOnSets(
       df: DataFrame, id: String, sets: Column,

@@ -81,9 +81,9 @@ object TurnExtract {
     }
   }
 
-  /** Core per-turn semantics, shared by the batch (span-group) and
-    * streaming (per-row) entry points; the sequential restatement lives
-    * independently in graft.oracle.ReferenceOracle.
+  /** Core per-turn semantics, shared by the span-group ([[triples]])
+    * and per-row ([[triplesFromTurns]]) entry points; the sequential
+    * restatement lives independently in graft.oracle.ReferenceOracle.
     */
   private def extract(
       convId: String,
@@ -152,15 +152,11 @@ object TurnExtract {
     }
   }
 
-  final case class TimedTriple(
-      conv_id: String, turn_idx: Int, subj: String, pred: String,
-      obj: String, score: Double, ts: java.sql.Timestamp)
-
-  /** Per-row (shuffle-free, stream-safe) variant: candidate detection,
-    * resolution, linking and pairing all inside one mapPartitions over
-    * raw turns — no aggregation state, so it runs unchanged on a
-    * streaming Dataset in append mode. Uses the shared plain-Scala
-    * tokenizer spec (graft.text.TextOps.tokenizeString).
+  /** Per-row (shuffle-free) variant: candidate detection, resolution,
+    * linking and pairing all inside one mapPartitions over raw turns —
+    * no exchange and no aggregation state, the gazetteer held as
+    * per-executor broadcast Sets. Uses the shared plain-Scala tokenizer
+    * spec (graft.text.TextOps.tokenizeString).
     *
     * `openShapePattern` (the OPEN fast path, KgPipeline.runOpen): when
     * set, every token matching the pattern that is not a token of any
@@ -170,7 +166,7 @@ object TurnExtract {
     * gazetteer cutoff, so shape detection and open linking stay inside
     * this one pooled pass.
     */
-  def timedTriplesFromTurns(
+  def triplesFromTurns(
       spark: SparkSession,
       turns: Dataset[graft.schema.Turn],
       gazetteer: Seq[String],
@@ -180,7 +176,7 @@ object TurnExtract {
       metrics: Option[org.apache.spark.util.CollectionAccumulator[PartitionMetrics]] = None,
       prebuiltIndex: Option[IndexedSeq[(String, Array[Float])]] = None,
       openShapePattern: Option[String] = None)
-      : Dataset[TimedTriple] = {
+      : Dataset[Triple] = {
     import spark.implicits._
     val bcIndex = spark.sparkContext.broadcast(
       prebuiltIndex.getOrElse(EntityLink.buildIndex(entities)))
@@ -231,8 +227,6 @@ object TurnExtract {
           i += 1
         }
         extract(t.conv_id, t.turn_idx, spans.result(), scorer, preds, rec)
-          .map(tr => TimedTriple(tr.conv_id, tr.turn_idx, tr.subj, tr.pred,
-            tr.obj, tr.score, t.ts))
       } ++ rec.sentinel
     }
   }

@@ -1,75 +1,12 @@
 package graft.multimodal
 
-import graft.score.Embed
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Multimodal-column plumbing for a training-data pipeline: media as
-  * opaque `binary` columns with typed metadata, batched feature
-  * extraction via `mapPartitions` with a pooled decoder.
-  *
-  * The actual image/audio decode is a STUB (no codec libraries in this
-  * container — see `StubDecoder.decode`): a deterministic fake that maps
-  * bytes to a feature vector. Everything AROUND it — schema, batch
-  * shape, per-partition pooling, partitioning, metadata extraction — is
-  * the real Spark plumbing, tested in MultimodalSpec.
+/** Media as opaque `binary` columns: typed metadata read straight off
+  * the bytes, with no decode (`q_media_meta`).
   */
 object Multimodal {
-
-  final case class MediaRow(
-      doc_id: Long,
-      media: Array[Byte],
-      mime: String)
-
-  final case class MediaFeatures(
-      doc_id: Long,
-      byte_len: Int,
-      features: Array[Float])
-
-  /** Batch size mirrors the reference encoder geometry (bs=16,
-    * src/configurations/config.py:32).
-    */
-  val BatchSize = 16
-
-  /** STUB decoder — replace with a real codec binding in production.
-    * Deterministic: features are a hashed-byte-window embedding, so
-    * tests and resume runs reproduce bit-identically.
-    */
-  final class StubDecoder extends Serializable {
-    def decode(media: Array[Byte]): Array[Float] = {
-      // ??? real decode goes here (libjpeg/ffmpeg binding); the fake
-      // hashes fixed-width byte windows into Embed.Dim buckets
-      val v = new Array[Float](Embed.Dim)
-      var i = 0
-      while (i < media.length) {
-        val h = scala.util.hashing.MurmurHash3.bytesHash(
-          java.util.Arrays.copyOfRange(media, i,
-            math.min(i + 8, media.length)), 42)
-        v(math.floorMod(h, Embed.Dim)) += (if ((h & 1) == 0) 1f else -1f)
-        i += 8
-      }
-      Embed.l2Normalize(v)
-    }
-  }
-
-  /** Batched feature extraction: decoder instantiated once per
-    * partition (pooled, like the reference's reused ONNX session),
-    * rows drained in BatchSize groups — the batch boundary is where a
-    * real vectorized decode (or GPU transfer) would happen.
-    */
-  def extractFeatures(
-      spark: SparkSession,
-      media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.mapPartitions { it =>
-      val decoder = new StubDecoder
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.map { m =>
-          MediaFeatures(m.doc_id, m.media.length, decoder.decode(m.media))
-        }
-      }
-    }
-  }
 
   /** Columnar metadata over the opaque binary — no decode needed, stays
     * in whole-stage codegen: byte length, 4-byte magic header, md5.
@@ -80,17 +17,4 @@ object Multimodal {
       length(col("media")).as("byte_len"),
       hex(substring(col("media"), 1, 4)).as("header_hex"),
       md5(col("media")).as("media_md5"))
-
-  /** Deterministic frame sampling: n evenly-spaced 4-byte windows from
-    * the blob (the shape of video frame-sampling without a codec).
-    */
-  def frameSample(media: DataFrame, n: Int): DataFrame = {
-    val stride = greatest(
-      (length(col("media")) - 4) / math.max(n - 1, 1), lit(1))
-    media.select(
-      col("doc_id"),
-      transform(sequence(lit(0), lit(n - 1)), i =>
-        hex(col("media").substr((i * stride + 1).cast("int"), lit(4))))
-        .as("frames"))
-  }
 }

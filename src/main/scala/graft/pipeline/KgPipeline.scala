@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (search_pipeline.py:192-194). Extraction has exactly one plan per
   * side of the gazetteer-size cutoff (see GazetteerFastPathMax), shared
   * by [[run]] and [[runOpen]]: the per-row pass
-  * (TurnExtract.timedTriplesFromTurns) below it, the span-group plan
+  * (TurnExtract.triplesFromTurns) below it, the span-group plan
   * (MentionDetect.spanCandidates + TurnExtract.triples) above it; both
   * are tested equivalent. Stage checkpointing, per-partition extraction
   * metrics, and lineage manifests come from graft.ckpt.Checkpoint plus
@@ -200,10 +200,10 @@ object KgPipeline {
         // fast path: whole extraction in one shuffle-free pooled
         // mapPartitions pass (north-star shape; gazetteer as broadcast Set)
         stage("triples", Seq("turns", "gazetteer", "entity_index")) {
-          TurnExtract.timedTriplesFromTurns(spark, turnsP.as[Turn],
+          TurnExtract.triplesFromTurns(spark, turnsP.as[Turn],
               gaz, entities, minLinkScore, predicates, Some(extractionAcc),
               prebuiltIndex = Some(index))
-            .drop("ts")
+            .toDF()
         }
       } else {
         // scale path: Catalyst side (tokenize once -> one row per token
@@ -251,8 +251,8 @@ object KgPipeline {
           val p = new org.apache.hadoop.fs.Path(root, "extraction_metrics.json")
           val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           val os = fs.create(p, true)
-          os.write(m.map(_.json).mkString("[", ",", "]").getBytes("UTF-8"))
-          os.close()
+          try os.write(m.map(_.json).mkString("[", ",", "]").getBytes("UTF-8"))
+          finally os.close()
         }
       }
       val declared = Seq("entity_index", "turn_spans", "triples",
@@ -296,8 +296,8 @@ object KgPipeline {
     * through: while the gazetteer fits a per-executor Set
     * (`gazetteerFastPathMax`), the whole extraction — gazetteer spans,
     * shape detection, open linking, pairing — runs in ONE pooled
-    * shuffle-free mapPartitions pass (TurnExtract.timedTriplesFromTurns
-    * with openShapePattern); above it, the span-group plan
+    * shuffle-free mapPartitions pass (TurnExtract.triplesFromTurns with
+    * openShapePattern); above it, the span-group plan
     * (MentionDetect.spanCandidates with openShapePattern, then
     * TurnExtract.triples). Open tokens ride both as `open:<token>`
     * mention spans. Both paths are pinned equal in KgPipelineSpec and
@@ -322,6 +322,9 @@ object KgPipeline {
       cut: graft.plans.LineageCut = graft.plans.LineageCut.Default,
       relabelBroadcastMax: Long = Materialize.RelabelBroadcastMaxEntities)
       : OpenResult = {
+    // the closed ids are on the driver: check them before any job, as
+    // [[run]] does (the open ids come from distinct surfaces)
+    Canonicalize.requireValidIds(entities.map(_.entity_id), "canonicalMap")
     import spark.implicits._
     val gaz = MentionDetect.gazetteerOf(entities)
     val turnsP = turns.repartition(shufflePartitions,
@@ -329,10 +332,9 @@ object KgPipeline {
 
     val rawTriples =
       if (gaz.size <= gazetteerFastPathMax)
-        TurnExtract.timedTriplesFromTurns(spark, turnsP.as[Turn],
-            gaz, entities, minLinkScore, predicates,
-            openShapePattern = Some(shapePattern))
-          .drop("ts").as[Triple]
+        TurnExtract.triplesFromTurns(spark, turnsP.as[Turn],
+          gaz, entities, minLinkScore, predicates,
+          openShapePattern = Some(shapePattern))
       else
         TurnExtract.triples(spark,
           MentionDetect.spanCandidates(spark, turnsP, gaz, predicates,

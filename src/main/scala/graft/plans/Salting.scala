@@ -1,35 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew salting utilities (SURVEY.md §4.3.2, north rule: "AQE plus
-  * salting for hot-conversation skew").
-  *
-  * Two-phase salted aggregation: a hot grouping key that would pin one
-  * reducer is split across `saltBuckets` partial groups keyed by
-  * (key, salt = pmod(hash(rowSalt), S)), partially aggregated, then the
-  * partials merge in a second (tiny) aggregation on the bare key.
-  * AQE's skew-join splitting handles the JOIN side of skew at runtime;
-  * this handles the AGGREGATION side, which AQE does not split.
+/** Skew salting (SURVEY.md §4.3.2, north rule: "AQE plus salting for
+  * hot-conversation skew"). One operator remains: the salted self-join
+  * behind `q_dedup_lsh_pairs`' degenerate band buckets. AQE's
+  * skew-join splitting handles skewed JOIN partitions at runtime, but a
+  * self-join key of B rows emits B^2/2 pairs from one reducer, which
+  * only salting the key splits.
   */
 object Salting {
-
-  /** Salted count per key: groupBy(key+salt).count -> groupBy(key).sum.
-    * Result is identical to a direct groupBy(key).count by associativity.
-    */
-  def saltedCount(
-      df: DataFrame,
-      keys: Seq[Column],
-      rowSalt: Column,
-      saltBuckets: Int): DataFrame = {
-    val salted = df
-      .withColumn("__salt", pmod(hash(rowSalt), lit(saltBuckets)))
-      .groupBy(keys :+ col("__salt"): _*)
-      .agg(count(lit(1)).as("__partial"))
-    salted.groupBy(keys: _*)
-      .agg(sum(col("__partial")).as("n"))
-  }
 
   /** Salted self-join pair generation over (id, key) rows — the
     * degenerate-bucket treatment for Dedup.lshCandidatePairs' band keys
@@ -72,21 +53,5 @@ object Salting {
           col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("src"), col(s"b.$idCol").as("dst"))
       .distinct()
-  }
-
-  /** Salted LONG sum — same shape for any associative+commutative agg. */
-  def saltedSum(
-      df: DataFrame,
-      keys: Seq[Column],
-      value: Column,
-      rowSalt: Column,
-      saltBuckets: Int): DataFrame = {
-    val salted = df
-      .withColumn("__salt", pmod(hash(rowSalt), lit(saltBuckets)))
-      .withColumn("__v", value)
-      .groupBy(keys :+ col("__salt"): _*)
-      .agg(sum(col("__v")).as("__partial"))
-    salted.groupBy(keys: _*)
-      .agg(sum(col("__partial")).as("sum"))
   }
 }

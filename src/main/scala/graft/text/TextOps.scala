@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Column-level text functions (SURVEY.md §2.8 F1-F10).
+/** Column-level text functions (SURVEY.md §2.8).
   *
   * All derived — the carried `text` column is never mutated (per-turn text
   * equality invariant, BASELINE.json input_hint). Everything here is a
@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
 object TextOps {
 
   /** Plain-Scala tokenizer spec — MUST stay semantically identical to
-    * `tokens` below (asserted by TextOpsSpec). Used by the streaming
-    * per-row extraction path and available to callers outside Catalyst.
+    * `tokens` below (asserted by TextOpsSpec). Used by the per-row
+    * extraction pass (TurnExtract.triplesFromTurns) and available to
+    * callers outside Catalyst.
     */
   def tokenizeString(s: String): Array[String] =
     s.toLowerCase.replaceAll("[^a-z0-9]+", " ").trim
@@ -31,30 +32,12 @@ object TextOps {
   def normalized(text: Column): Column =
     trim(regexp_replace(lower(text), "[^a-z0-9]+", " "))
 
-  /** HTML strip (reference: src/utils/utils.py:69-72). */
-  def stripHtml(text: Column): Column =
-    regexp_replace(text, "<[^>]*>", "")
-
-  /** F3: punctuation padding (reference: src/utils/utils.py:74-77) —
-    * one space either side of every ASCII punctuation char, mirroring
-    * Python's string.punctuation translate table (ASCII 33-47, 58-64,
-    * 91-96, 123-126). Spaces are NOT collapsed afterwards: the
-    * reference's split(" ") keeps the resulting empty tokens, and
-    * GWSC span indexes count them.
-    */
-  def padPunctuation(text: Column): Column =
-    regexp_replace(text, """([!-/:-@\[-`{-~])""", " $1 ")
-
   /** Wordpunct-style tokenization into a non-empty token array
     * (reference: src/utils/tokenizers.py:6-15,
     *  custom_pyspark_transformer.py:40-50).
     */
   def tokens(text: Column): Column =
     filter(split(normalized(text), " "), t => length(t) > 0)
-
-  /** Sentence split (reference: src/utils/tokenizers.py:9,13-15). */
-  def sentences(text: Column): Column =
-    filter(split(text, "[.!?]+"), s => length(trim(s)) > 0)
 
   /** Token n-grams as space-joined strings
     * (reference: spark_topic_modeling.py:55-60).
@@ -88,10 +71,4 @@ object TextOps {
           i => padded.substr(i, lit(k))),
         s => length(s) === k))
   }
-
-  /** Stopword removal via array_except (reference:
-    * spark_topic_modeling.py:39-53 uses StopWordsCleaner; built-in here).
-    */
-  def removeStopwords(toks: Column, stopwords: Seq[String]): Column =
-    array_except(toks, lit(stopwords.toArray))
 }

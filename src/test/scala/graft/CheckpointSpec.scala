@@ -279,27 +279,36 @@ class CheckpointSpec extends AnyFunSuite {
   test("manifest rows, per_partition and schema agree with the committed " +
     "parquet for every pipeline stage") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_ckpt_meta").toString
     val turns = TranscriptGen.transcripts(spark, nConvs = 10,
       turnsPerConv = 4, hotTurns = 0, partitions = 2).toDF()
-    val result = KgPipeline.run(spark, turns, checkpointRoot = Some(root),
-      shufflePartitions = 2, gazetteerFastPathMax = 0)
-    assert(result.stats.map(_.name).contains("entity_index"))
-    result.stats.foreach { st =>
-      val m = manifest(root, st.name)
-      val out = spark.read.parquet(s"$root/${st.name}")
-      val pp = m.get("per_partition").elements.asScala.toSeq
-      val tasks = pp.map(_.get("partition").asInt)
-      assert(tasks == tasks.distinct.sorted, s"${st.name}: $tasks")
-      val n = out.count()
-      assert(m.get("rows").asLong == n && st.rows == n &&
-        pp.map(_.get("rows").asLong).sum == n, st.name)
-      assert(DataType.fromJson(m.get("schema").toString) == out.schema,
-        st.name)
+    // the span-group plan (gazetteerFastPathMax = 0) and the per-row
+    // fast path (the default cutoff)
+    val roots = Seq(0, KgPipeline.GazetteerFastPathMax).map { fastMax =>
+      val root = Files.createTempDirectory("graft_ckpt_meta").toString
+      val result = KgPipeline.run(spark, turns, checkpointRoot = Some(root),
+        shufflePartitions = 2, gazetteerFastPathMax = fastMax)
+      assert(result.stats.map(_.name).contains("entity_index"))
+      result.stats.foreach { st =>
+        val m = manifest(root, st.name)
+        val out = spark.read.parquet(s"$root/${st.name}")
+        val pp = m.get("per_partition").elements.asScala.toSeq
+        val tasks = pp.map(_.get("partition").asInt)
+        assert(tasks == tasks.distinct.sorted, s"${st.name}: $tasks")
+        val n = out.count()
+        assert(m.get("rows").asLong == n && st.rows == n &&
+          pp.map(_.get("rows").asLong).sum == n, st.name)
+        assert(DataType.fromJson(m.get("schema").toString) == out.schema,
+          st.name)
+      }
+      assert(DataType.fromJson(manifest(root, "entity_index").get("schema")
+        .toString) == StructType(Seq(StructField("entity_id", StringType),
+          StructField("vec", ArrayType(FloatType)))))
+      root
     }
-    assert(DataType.fromJson(manifest(root, "entity_index").get("schema")
-      .toString) == StructType(Seq(StructField("entity_id", StringType),
-        StructField("vec", ArrayType(FloatType)))))
+    // both extraction plans commit the same triples schema
+    val Seq(staged, fast) = roots.map(r =>
+      DataType.fromJson(manifest(r, "triples").get("schema").toString))
+    assert(fast == staged, s"fast path $fast, span-group path $staged")
   }
 
   test("the recorded schema and fingerprint survive JSON escaping") {

@@ -106,5 +106,10 @@ class KgPipelineBranchesSpec extends AnyFunSuite {
     // the ids are checked before any stage runs: nothing was committed
     val left = new java.io.File(root).list().toSeq
     assert(left.intersect(declared).isEmpty, s"stages committed: $left")
+    // runOpen checks the same closed ids on the driver, before any job
+    val (eOpen, openJobs) = JobCount(spark)(intercept[IllegalArgumentException](
+      KgPipeline.runOpen(spark, turns, dup, shufflePartitions = 2)))
+    assert(openJobs == 0, s"runOpen scheduled $openJobs jobs before it threw")
+    assert(eOpen.getMessage == e.getMessage)
   }
 }
