@@ -46,4 +46,15 @@ object EntityLink {
     entities.sortBy(_.entity_id)
       .map(e => (e.entity_id, Embed.meanEmbed(e.canonical +: e.aliases)))
       .toIndexedSeq
+
+  /** ST1: incremental index maintenance (reference: add_to_index /
+    * remove_from_index, search_pipeline.py:154-175) — append/remove
+    * candidate rows, rebuild the sorted broadcastable index.
+    */
+  def updateIndex(
+      index: IndexedSeq[(String, Array[Float])],
+      add: Seq[Entity],
+      removeIds: Set[String] = Set.empty): IndexedSeq[(String, Array[Float])] =
+    (index.filterNot { case (id, _) => removeIds.contains(id) } ++
+      buildIndex(add)).sortBy(_._1).distinctBy(_._1).toIndexedSeq
 }

@@ -98,4 +98,16 @@ class TextOpsSpec extends AnyFunSuite {
       s"astral-name variants did not merge: $local")
     assert(local("e3") == "e3")
   }
+
+  test("stopword removal and html strip behave") {
+    import spark.implicits._
+    val df = Seq("<b>the</b> spark engine runs the job").toDF("text")
+    val cleaned = df.select(
+      TextOps.tokens(TextOps.stripHtml($"text")).as("t"))
+    val toks = cleaned.as[Seq[String]].head()
+    assert(toks == Seq("the", "spark", "engine", "runs", "the", "job"))
+    val noStop = cleaned.select(
+      TextOps.removeStopwords($"t", Seq("the"))).as[Seq[String]].head()
+    assert(!noStop.contains("the") && noStop.contains("spark"))
+  }
 }
