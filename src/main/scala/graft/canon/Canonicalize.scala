@@ -326,19 +326,30 @@ object Canonicalize {
       spark: SparkSession,
       entities: Seq[Entity],
       jaccardThreshold: Double = 0.5,
-      localMaxEntities: Int = LocalCanonMaxEntities): DataFrame = {
+      localMaxEntities: Int = LocalCanonMaxEntities): DataFrame =
+    canonicalMapTracked(spark, entities, jaccardThreshold,
+      localMaxEntities).map
+
+  /** [[canonicalMap]] plus the branch it took (see [[CanonResult]]). */
+  private[graft] def canonicalMapTracked(
+      spark: SparkSession,
+      entities: Seq[Entity],
+      jaccardThreshold: Double = 0.5,
+      localMaxEntities: Int = LocalCanonMaxEntities): CanonResult = {
     import spark.implicits._
     val surf = entities.map(e => (e.entity_id, e.canonical +: e.aliases))
     requireValidIds(surf.map(_._1), "canonicalMap")
     // Rows against a fixed schema: deriving the tuple encoder `toDF`
     // needs by reflection costs ~4 ms per call even warm, this ~0.4 ms
     if (surf.size <= localMaxEntities)
-      spark.createDataFrame(localAllPairsMap(surf, jaccardThreshold).toSeq
-        .map { case (id, canonical) => Row(id, canonical) }.asJava,
-        StructType(Seq(StructField("entity_id", StringType),
-          StructField("canonical_id", StringType))))
+      CanonResult(
+        spark.createDataFrame(localAllPairsMap(surf, jaccardThreshold).toSeq
+          .map { case (id, canonical) => Row(id, canonical) }.asJava,
+          StructType(Seq(StructField("entity_id", StringType),
+            StructField("canonical_id", StringType)))),
+        "local", Some(surf.size.toLong))
     else
-      canonicalMapDf(spark, surf.toDF("entity_id", "surfaces"),
+      canonicalMapDfTracked(spark, surf.toDF("entity_id", "surfaces"),
         jaccardThreshold, localMaxEntities)
   }
 
@@ -366,8 +377,8 @@ object Canonicalize {
     * open pipeline builds it from `distinct` surfaces). Ids are checked
     * wherever the rows are already on the driver: the LOCAL path FAILS
     * FAST on null or duplicate ids, with the same
-    * IllegalArgumentException as [[canonicalMap]], and
-    * KgPipeline.run/runOpen check their closed ids before any job. The
+    * IllegalArgumentException as [[canonicalMap]], and KgPipeline.run
+    * checks its closed ids before any job. The
     * distributed branches do not check: they emit duplicate rows for a
     * duplicate id (undefined behavior), because a uniqueness pass would
     * cost a corpus-scale shuffle per call to police a precondition the

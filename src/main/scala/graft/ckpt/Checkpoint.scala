@@ -123,10 +123,4 @@ object Checkpoint {
         else Some(DataType.fromJson(schema.toString).asInstanceOf[StructType])
       }
     } catch { case _: Exception => None }
-
-  def wasCommitted(spark: SparkSession, root: String, name: String): Boolean = {
-    val dir = new Path(root, name)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(dir, "_manifest.json")) && fs.exists(new Path(dir, "_SUCCESS"))
-  }
 }

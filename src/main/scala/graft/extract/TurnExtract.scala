@@ -158,7 +158,8 @@ object TurnExtract {
     * per-executor broadcast Sets. Uses the shared plain-Scala tokenizer
     * spec (graft.text.TextOps.tokenizeString).
     *
-    * `openShapePattern` (the OPEN fast path, KgPipeline.runOpen): when
+    * `openShapePattern` (the OPEN fast path, KgPipeline.run's open
+    * mode): when
     * set, every token matching the pattern that is not a token of any
     * gazetteer surface additionally becomes an open mention span
     * `open:<token>`, linked to itself at score 1.0 — the same spans

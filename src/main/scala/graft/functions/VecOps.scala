@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Column-level vector functions over Array[Float/Double] columns
-  * (SURVEY.md §2.8 F11-F14, A10-A11) — pure higher-order-function
+  * (SURVEY.md §2.8 F11-F12, A10-A11) — pure higher-order-function
   * expressions, no UDFs. The hot-path scorer (graft.score.Embed inside mapPartitions)
   * stays the primary implementation; these are the declarative forms for
   * relational pipelines (used by the similarity queries).
@@ -28,22 +28,6 @@ object VecOps {
   /** F11: cosine similarity. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** F13: |a-b| ++ concat feature vector (reference:
-    * sentence_encoder.py:112-113 builds [u, v, |u-v|] pair features).
-    */
-  def pairFeatures(a: Column, b: Column): Column =
-    concat(a.cast("array<double>"), b.cast("array<double>"),
-      zip_with(a, b, (x, y) => abs(x.cast("double") - y.cast("double"))))
-
-  /** F14: pad with `fill` or truncate to exactly n elements (reference:
-    * src/utils/utils.py:126-129, ner_dataset.py:37-51).
-    */
-  def padTruncate(a: Column, n: Int, fill: Double): Column =
-    slice(
-      concat(a.cast("array<double>"),
-        array_repeat(lit(fill), greatest(lit(n) - size(a), lit(0)))),
-      lit(1), lit(n))
 
   /** elementwise sum over an array<array<float|double>> column (the
     * shared core of A10/A11); null on an empty outer array.

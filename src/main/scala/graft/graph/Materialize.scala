@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.mention.MentionDetect
 import graft.schema.{EdgeRow, Entity, NodeRow, Triple}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,12 +46,7 @@ object Materialize {
       knownMapSize: Option[Long] = None)
       : Dataset[Triple] = {
     import spark.implicits._
-    // plain parallel count, NOT limit(knob+1).count(): the limit probe
-    // planned LocalLimit -> single-partition GlobalLimit, funnelling up
-    // to knob rows through ONE task before the relabel joins even
-    // started (r5 ADVICE). Callers hand in a lineage-cut map, so the
-    // count is a cheap fully-parallel job over the checkpointed frame —
-    // and is skipped outright when the size is already known.
+    // the probe (see RelabelBroadcastMaxEntities), unless the size is known
     val useBroadcast = maxBroadcastEntities > 0 &&
       knownMapSize.getOrElse(canonicalMap.count()) <= maxBroadcastEntities
     def hinted(df: DataFrame): DataFrame =
@@ -71,6 +67,11 @@ object Materialize {
       .as[Triple]
   }
 
+  /** One node per canonical id of `canonicalMap`, which holds every
+    * entity id; an id not in `entities` is an open one (`open:<surface>`),
+    * whose one surface is the id without the prefix. Only the driver-side
+    * `entities` are broadcast, never the (open mode: corpus-sized) map.
+    */
   def nodes(
       spark: SparkSession,
       entities: Seq[Entity],
@@ -79,7 +80,12 @@ object Materialize {
     val ent = entities
       .map(e => (e.entity_id, e.canonical, e.canonical +: e.aliases))
       .toDF("entity_id", "canonical", "surfaces")
-    ent.join(broadcast(canonicalMap), Seq("entity_id"))
+    val openSurface =
+      $"entity_id".substr(MentionDetect.OpenPrefix.length + 1, Int.MaxValue)
+    canonicalMap.join(broadcast(ent), Seq("entity_id"), "left")
+      .select($"entity_id", $"canonical_id",
+        coalesce($"canonical", openSurface).as("canonical"),
+        coalesce($"surfaces", array(openSurface)).as("surfaces"))
       .groupBy($"canonical_id")
       .agg(
         // canonical surface = the canonical of the representative

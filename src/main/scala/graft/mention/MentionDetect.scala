@@ -47,13 +47,14 @@ object MentionDetect {
     * it below the caller's exchange, so every turn would be tokenized
     * three times.
     *
-    * With `openShapePattern` set (KgPipeline.runOpen), a unigram that
-    * matches the pattern and is not a token of any gazetteer surface
-    * ([[openMentions]]' rule) also yields an OPEN mention span whose
-    * surface is its provisional entity id `open:<token>` (TurnExtract
-    * links it to itself at score 1.0); the same probe row carries it,
-    * so the corpus is scanned once. An open token is never a
-    * gazetteer token, so no gazetteer span sits at its position.
+    * With `openShapePattern` set (KgPipeline.run's open mode), a
+    * unigram that matches the pattern and is not a token of any
+    * gazetteer surface ([[openMentions]]' rule) also yields an OPEN
+    * mention span whose surface is its provisional entity id
+    * `open:<token>` (TurnExtract links it to itself at score 1.0); the
+    * same probe row carries it, so the corpus is scanned once. An open
+    * token is never a gazetteer token, so no gazetteer span sits at its
+    * position.
     *
     * Output: (conv_id, turn_idx,
     *          spans: array<struct<token_pos, token_len, surface,
@@ -128,8 +129,8 @@ object MentionDetect {
     * word_sense_pipeline.py:241-252 — entities come from the data, not
     * a fixed vocabulary). Unigram tokens matching `shapePattern` that
     * are not a token of ANY gazetteer surface become provisional
-    * mentions; the caller assigns them `open:<surface>` entity ids and
-    * canonicalizes them with Canonicalize.canonicalMapDf. Pure
+    * mentions; KgPipeline.run's open mode assigns them `open:<surface>`
+    * entity ids and canonicalizes them with the closed entities. Pure
     * Catalyst: tokenize -> posexplode -> rlike filter -> broadcast
     * anti-join (the gazetteer-token table is driver-small by the same
     * contract as the gazetteer broadcast).

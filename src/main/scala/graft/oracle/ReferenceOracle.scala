@@ -71,7 +71,7 @@ object ReferenceOracle {
   /** Open-entity extraction oracle: [[triples]] plus provisional
     * mentions for every token matching `shapePattern` that is not a
     * token of any gazetteer surface (entity id `open:<token>`, link
-    * score 1.0) — the sequential restatement of KgPipeline.runOpen's
+    * score 1.0) — the sequential restatement of KgPipeline.run's open-mode
     * detection/linking/pairing (BEFORE canonical relabeling; relabel
     * with [[openCanonicalMap]]).
     */

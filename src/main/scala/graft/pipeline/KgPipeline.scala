@@ -7,6 +7,7 @@ import graft.gen.Vocab
 import graft.graph.Materialize
 import graft.link.EntityLink
 import graft.mention.MentionDetect
+import graft.plans.{LineageCut, ObservedCount}
 import graft.schema._
 import java.util.concurrent.{CompletableFuture, CompletionException, Executors}
 import java.util.concurrent.atomic.AtomicReference
@@ -26,16 +27,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * imperative region is the pooled scorer inside `mapPartitions`
   * (TurnExtract), mirroring the reference's reused inference session
   * (search_pipeline.py:192-194). Extraction has exactly one plan per
-  * side of the gazetteer-size cutoff (see GazetteerFastPathMax), shared
-  * by [[run]] and [[runOpen]]: the per-row pass
-  * (TurnExtract.triplesFromTurns) below it, the span-group plan
-  * (MentionDetect.spanCandidates + TurnExtract.triples) above it; both
-  * are tested equivalent. Stage checkpointing, per-partition extraction
-  * metrics, and lineage manifests come from graft.ckpt.Checkpoint plus
-  * the CollectionAccumulator wired here. [[run]] commits the corpus-free
-  * stages (entity_index; canonical_map -> nodes) on branch threads beside
-  * the corpus chain, and [[materialize]] commits its two snapshots side
-  * by side; every branch's jobs carry the caller's job group.
+  * side of the gazetteer-size cutoff (see GazetteerFastPathMax): the
+  * per-row pass (TurnExtract.triplesFromTurns) below it, the span-group
+  * plan (MentionDetect.spanCandidates + TurnExtract.triples) above it;
+  * both are tested equivalent. Stage checkpointing, per-partition
+  * extraction metrics, and lineage manifests come from
+  * graft.ckpt.Checkpoint plus the CollectionAccumulator wired here;
+  * independent stages and snapshots commit on [[Branches]].
   */
 object KgPipeline {
 
@@ -53,7 +51,13 @@ object KgPipeline {
         * (row count + link-score stats), collected for free by whatever
         * action the caller runs first; empty before any action
         */
-      tripleStats: () => Map[String, Any])
+      tripleStats: () => Map[String, Any],
+      /** (entity_id, canonical_id) over every entity, open ones included */
+      canonicalMap: DataFrame,
+      /** the branch that built the map (Canonicalize.CanonResult.path),
+        * or "resumed" when the canonical_map stage was read back
+        */
+      canonPath: String)
 
   /** Gazetteer-size cutoff for the per-row fast path: below it the whole
     * extraction (candidate spans + gazetteer probe + resolution + link +
@@ -68,6 +72,18 @@ object KgPipeline {
     */
   val GazetteerFastPathMax = 100000
 
+  /** Builds the KG from `turns`, resuming every stage `checkpointRoot`
+    * holds for the same inputs and parameters.
+    *
+    * Open mode (`openShapePattern` set, part of the fingerprint): a token
+    * matching the pattern that is no gazetteer token also becomes an
+    * entity `open:<token>` linked to itself at score 1.0, on both
+    * extraction plans. canonical_map then canonicalizes the closed
+    * surfaces together with the distinct open ones, scanned from the
+    * corpus, through Canonicalize.canonicalMapDfTracked, with `cut` for
+    * its reused frames. The relabel broadcasts the map only up to
+    * `relabelBroadcastMax` entries.
+    */
   def run(
       spark: SparkSession,
       turns: DataFrame,
@@ -76,7 +92,11 @@ object KgPipeline {
       predicates: Map[String, String] = Vocab.predicates,
       checkpointRoot: Option[String] = None,
       shufflePartitions: Int = 32,
-      gazetteerFastPathMax: Int = GazetteerFastPathMax): Result = {
+      gazetteerFastPathMax: Int = GazetteerFastPathMax,
+      openShapePattern: Option[String] = None,
+      cut: LineageCut = LineageCut.Default,
+      relabelBroadcastMax: Long = Materialize.RelabelBroadcastMaxEntities)
+      : Result = {
     // canonicalMap's id contract, checked on the driver before any stage
     // runs (0 jobs): inside the canonical branch its error would surface
     // only after the corpus chain had committed turn_spans and triples
@@ -126,14 +146,14 @@ object KgPipeline {
           val fs = turns.inputFiles
           s"${fs.length}:${fs.sorted.toSeq.hashCode}"
         } catch { case _: Exception => "na" }
-      val desc = Seq(
+      val desc = (Seq(
         s"gaz:${gaz.size}:${gaz.hashCode}",
         s"entities:${entities.size}:${entities.hashCode}",
         s"minLinkScore:$minLinkScore",
         s"predicates:${predicates.hashCode}",
         s"turnsSchema:${turns.schema.map(f => f.name + ":" + f.dataType.sql)}",
         s"turnsFiles:$inputSig"
-      ).mkString("|")
+      ) ++ openShapePattern.map(p => s"openShapePattern:$p")).mkString("|")
       java.security.MessageDigest.getInstance("MD5")
         .digest(desc.getBytes("UTF-8")).map("%02x".format(_)).mkString
     }
@@ -151,11 +171,11 @@ object KgPipeline {
         case None => f
       }
 
-    // The stage DAG is two chains that meet only at the relabel: the
-    // corpus-free entity_index and canonical_map -> nodes never read the
-    // turns, so they run as branches beside the corpus chain turn_spans
-    // -> triples -> triples_canonical -> edges on the calling thread,
-    // and each consumer joins the branch it reads.
+    // The stage DAG is two chains that meet only at the relabel:
+    // entity_index and canonical_map -> nodes read no stage of the
+    // corpus chain turn_spans -> triples -> triples_canonical -> edges
+    // (in open mode canonical_map scans the turns itself), so they run
+    // as branches beside it, and each consumer joins the branch it reads.
     val branches = new Branches(spark)
     branches.join {
       // Persisted candidate-index table (reference: hnswlib index
@@ -186,14 +206,50 @@ object KgPipeline {
         case None => EntityLink.buildIndex(entities)
       }
 
+      // open mode's entity table. Raw `turns`, not turnsP: the surface
+      // scan is a separate action, so a turnsP lineage would RE-EXECUTE
+      // the full-corpus entry repartition; the distinct's own exchange
+      // moves only the matching tokens
+      def entitySurfaces(pattern: String): DataFrame =
+        entities.map(e => (e.entity_id, e.canonical +: e.aliases))
+          .toDF("entity_id", "surfaces")
+          .unionByName(MentionDetect.openMentions(spark, turns, gaz, pattern)
+            .select($"surface").distinct()
+            .select(concat(lit(MentionDetect.OpenPrefix), $"surface")
+                .as("entity_id"),
+              array($"surface").as("surfaces")))
+
       val canonBranch = branches.fork {
-        val canonMap = stage("canonical_map", Seq("entity_index")) {
-          Canonicalize.canonicalMap(spark, entities)
+        var built = Option.empty[Canonicalize.CanonResult]
+        val committed = stage("canonical_map",
+            Seq("entity_index") ++ openShapePattern.map(_ => "turns")) {
+          val res = openShapePattern match {
+            case None => Canonicalize.canonicalMapTracked(spark, entities)
+            case Some(p) => Canonicalize.canonicalMapDfTracked(spark,
+              entitySurfaces(p), cut = cut)
+          }
+          built = Some(res)
+          res.map
         }
+        // the map's size for the relabel, at no job of its own: one row per
+        // closed entity, the committed footers' rows, the local branch's
+        // rows, or the count OBSERVED during the distributed map's cut. A
+        // resumed map's is unknown: the relabel counts it if it runs.
+        val (canonMap, mapSize) =
+          if (openShapePattern.isEmpty) (committed, Some(entities.size.toLong))
+          else if (checkpointRoot.isDefined)
+            (committed, stats.get("canonical_map").filterNot(_.skipped)
+              .map(_.rows))
+          else built.flatMap(_.localRows) match {
+            case Some(n) => (committed, Some(n))
+            case None =>
+              val (m, n) = ObservedCount.attach(committed, cut)
+              (m, Some(n()))
+          }
         val nodes = stage("nodes", Seq("canonical_map", "entity_index")) {
           Materialize.nodes(spark, entities, canonMap).toDF()
         }.as[NodeRow]
-        (canonMap, nodes)
+        (canonMap, mapSize, nodes, built.fold("resumed")(_.path))
       }
 
       val rawTriples = (if (gaz.size <= gazetteerFastPathMax) {
@@ -202,7 +258,7 @@ object KgPipeline {
         stage("triples", Seq("turns", "gazetteer", "entity_index")) {
           TurnExtract.triplesFromTurns(spark, turnsP.as[Turn],
               gaz, entities, minLinkScore, predicates, Some(extractionAcc),
-              prebuiltIndex = Some(index))
+              prebuiltIndex = Some(index), openShapePattern = openShapePattern)
             .toDF()
         }
       } else {
@@ -212,7 +268,8 @@ object KgPipeline {
         // pooled-scorer resolution/link/pairing; asserted equal to the
         // fast path in KgPipelineSpec
         val spans = stage("turn_spans", Seq("turns", "gazetteer")) {
-          MentionDetect.spanCandidates(spark, turnsP, gaz, predicates)
+          MentionDetect.spanCandidates(spark, turnsP, gaz, predicates,
+            openShapePattern)
         }
         stage("triples", Seq("turn_spans", "entity_index")) {
           TurnExtract.triples(spark, spans, entities, minLinkScore,
@@ -227,10 +284,9 @@ object KgPipeline {
       val tripleObs = new org.apache.spark.sql.Observation()
       val relabeled = stage("triples_canonical",
           Seq("triples", "canonical_map")) {
-        // the canonical map has exactly one row per entity (every id is
-        // mapped), so the relabel broadcast probe is free
-        Materialize.relabel(spark, rawTriples, canonBranch()._1,
-          knownMapSize = Some(entities.size.toLong)).toDF()
+        val (canonMap, mapSize, _, _) = canonBranch()
+        Materialize.relabel(spark, rawTriples, canonMap, relabelBroadcastMax,
+          knownMapSize = mapSize).toDF()
       }.as[Triple]
         .observe(tripleObs, count(lit(1)).as("triples"),
           min(col("score")).as("min_score"), avg(col("score")).as("avg_score"))
@@ -257,7 +313,8 @@ object KgPipeline {
       }
       val declared = Seq("entity_index", "turn_spans", "triples",
         "canonical_map", "triples_canonical", "nodes", "edges")
-      Result(relabeled, canonBranch()._2, edges, declared.flatMap(stats.get),
+      val (canonMap, _, nodes, canonPath) = canonBranch()
+      Result(relabeled, nodes, edges, declared.flatMap(stats.get),
         metricsFn,
         // non-blocking read of the observed row (Observation.get blocks
         // until an action; future.value is None before one)
@@ -265,115 +322,16 @@ object KgPipeline {
           case Some(scala.util.Success(row)) =>
             row.schema.fieldNames.zip(row.toSeq).toMap
           case _ => Map.empty
-        })
+        },
+        canonMap, canonPath)
     }
   }
 
-  final case class OpenResult(
-      triples: Dataset[Triple],
-      canonicalMap: DataFrame,
-      /** distinct provisional (open) entity ids detected in the corpus */
-      openEntities: DataFrame,
-      /** which Canonicalize.canonicalMapDfTracked branch ran — "local",
-        * "distributed-edge-local-uf", or "distributed-cc"; bench/ops
-        * evidence that a run exercised the intended scale path
-        */
-      canonPath: String)
-
-  /** OPEN-entity-set pipeline variant (the untrodden scale path of
-    * VERDICT r3: corpus-DERIVED entity tables): gazetteer mentions are
-    * detected and linked as in [[run]], and additionally every token
-    * matching `shapePattern` (service/resource-style names outside the
-    * gazetteer) becomes a PROVISIONAL entity `open:<surface>` with link
-    * score 1.0. The provisional entity table — whose size is
-    * corpus-dependent and therefore can never be a driver Seq — joins
-    * the closed entities in ONE (entity_id, surfaces) DataFrame routed
-    * through the DataFrame-native Canonicalize.canonicalMapDfTracked, so
-    * near-identical spellings of the same open name (and open/closed
-    * coreferences) merge by the same exact-jaccard semantics.
-    *
-    * Extraction takes [[run]]'s two plans with `shapePattern` passed
-    * through: while the gazetteer fits a per-executor Set
-    * (`gazetteerFastPathMax`), the whole extraction — gazetteer spans,
-    * shape detection, open linking, pairing — runs in ONE pooled
-    * shuffle-free mapPartitions pass (TurnExtract.triplesFromTurns with
-    * openShapePattern); above it, the span-group plan
-    * (MentionDetect.spanCandidates with openShapePattern, then
-    * TurnExtract.triples). Open tokens ride both as `open:<token>`
-    * mention spans. Both paths are pinned equal in KgPipelineSpec and
-    * P/R-gated against ReferenceOracle.openTriples.
-    *
-    * Scale contracts (closed r4): iterative/reused frames cut via the
-    * pluggable `cut` (a cluster run passes LineageCut.Reliable);
-    * relabel falls back from broadcast to shuffle joins past
-    * `relabelBroadcastMax` map entries (an unbounded open vocabulary
-    * must not be broadcast).
-    */
-  def runOpen(
-      spark: SparkSession,
-      turns: DataFrame,
-      entities: Seq[Entity] = Vocab.entities,
-      minLinkScore: Double = Vocab.minLinkScore,
-      predicates: Map[String, String] = Vocab.predicates,
-      shufflePartitions: Int = 32,
-      jaccardThreshold: Double = 0.5,
-      shapePattern: String = MentionDetect.OpenShapePattern,
-      gazetteerFastPathMax: Int = GazetteerFastPathMax,
-      cut: graft.plans.LineageCut = graft.plans.LineageCut.Default,
-      relabelBroadcastMax: Long = Materialize.RelabelBroadcastMaxEntities)
-      : OpenResult = {
-    // the closed ids are on the driver: check them before any job, as
-    // [[run]] does (the open ids come from distinct surfaces)
-    Canonicalize.requireValidIds(entities.map(_.entity_id), "canonicalMap")
-    import spark.implicits._
-    val gaz = MentionDetect.gazetteerOf(entities)
-    val turnsP = turns.repartition(shufflePartitions,
-      turns("conv_id"), turns("turn_idx"))
-
-    val rawTriples =
-      if (gaz.size <= gazetteerFastPathMax)
-        TurnExtract.triplesFromTurns(spark, turnsP.as[Turn],
-          gaz, entities, minLinkScore, predicates,
-          openShapePattern = Some(shapePattern))
-      else
-        TurnExtract.triples(spark,
-          MentionDetect.spanCandidates(spark, turnsP, gaz, predicates,
-            Some(shapePattern)),
-          entities, minLinkScore, predicates)
-    // the entity table needs the distinct open surfaces — a
-    // Catalyst-only scan (tokenize -> explode -> rlike -> anti-join ->
-    // distinct), no scorer, no span grouping. Raw `turns`, not turnsP:
-    // the surface scan is a separate action, so a turnsP lineage would
-    // RE-EXECUTE the full-corpus entry repartition (shuffle deps are not
-    // reused across jobs); the output is partitioning-invariant and the
-    // distinct's own exchange moves only the matching tokens
-    val openSurf = MentionDetect.openMentions(spark, turns, gaz,
-        shapePattern).select($"surface").distinct()
-      .select(concat(lit(MentionDetect.OpenPrefix), $"surface")
-          .as("entity_id"),
-        array($"surface").as("surfaces"))
-    val closedSurf = entities
-      .map(e => (e.entity_id, e.canonical +: e.aliases))
-      .toDF("entity_id", "surfaces")
-    val canonRes = Canonicalize.canonicalMapDfTracked(spark,
-      closedSurf.unionByName(openSurf), jaccardThreshold, cut = cut)
-    // the map is consumed twice by relabel; on the local path its size
-    // is the row count the local branch already holds, and on the
-    // distributed paths it is OBSERVED during the map's own cut —
-    // relabel never schedules a separate probe job
-    val (canonMap, mapSize) = canonRes.localRows match {
-      case Some(n) => (canonRes.map, Some(n))
-      case None =>
-        val (m, n) = graft.plans.ObservedCount.attach(canonRes.map, cut)
-        (m, Some(n()))
-    }
-    OpenResult(
-      Materialize.relabel(spark, rawTriples, canonMap, relabelBroadcastMax,
-        knownMapSize = mapSize),
-      canonMap,
-      openSurf.select($"entity_id"),
-      canonRes.path)
-  }
+  /** [[run]] in open mode with the default shape pattern. */
+  def runOpen(spark: SparkSession, turns: DataFrame,
+      shufflePartitions: Int = 32): Result =
+    run(spark, turns, shufflePartitions = shufflePartitions,
+      openShapePattern = Some(MentionDetect.OpenShapePattern))
 
   /** Materialize the graph into snapshot-committed node/edge tables.
     * The format binding is pluggable (graft.io.KgTableFormat): the

@@ -32,10 +32,6 @@ object TextOps {
   def normalized(text: Column): Column =
     trim(regexp_replace(lower(text), "[^a-z0-9]+", " "))
 
-  /** HTML strip (reference: src/utils/utils.py:69-72). */
-  def stripHtml(text: Column): Column =
-    regexp_replace(text, "<[^>]*>", "")
-
   /** Wordpunct-style tokenization into a non-empty token array
     * (reference: src/utils/tokenizers.py:6-15,
     *  custom_pyspark_transformer.py:40-50).
@@ -75,10 +71,4 @@ object TextOps {
           i => padded.substr(i, lit(k))),
         s => length(s) === k))
   }
-
-  /** Stopword removal via array_except (reference:
-    * spark_topic_modeling.py:39-53 uses StopWordsCleaner; built-in here).
-    */
-  def removeStopwords(toks: Column, stopwords: Seq[String]): Column =
-    array_except(toks, lit(stopwords.toArray))
 }

@@ -5,6 +5,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.ckpt.Checkpoint
 import graft.gen.TranscriptGen
 import graft.io.TableIO
+import graft.mention.MentionDetect
 import graft.pipeline.KgPipeline
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,8 +51,10 @@ class CheckpointSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root, "edges"), true)
-    assert(!Checkpoint.wasCommitted(spark, root, "edges"))
-    assert(Checkpoint.wasCommitted(spark, root, "turn_spans"))
+    def committed(stage: String) = Seq("_SUCCESS", "_manifest.json")
+      .forall(f => fs.exists(new org.apache.hadoop.fs.Path(s"$root/$stage", f)))
+    assert(!committed("edges"))
+    assert(committed("turn_spans"))
 
     val second = KgPipeline.run(spark, turns, checkpointRoot = Some(root),
       shufflePartitions = 2, gazetteerFastPathMax = 0)
@@ -232,6 +235,74 @@ class CheckpointSpec extends AnyFunSuite {
       minLinkScore = 0.99)
     assert(second.stats.forall(!_.skipped),
       s"stale reuse: ${second.stats.filter(_.skipped).map(_.name)}")
+  }
+
+  private val declared = Seq("entity_index", "turn_spans", "triples",
+    "canonical_map", "triples_canonical", "nodes", "edges")
+
+  test("an open root is reused by no run with another shape pattern or " +
+    "none") {
+    val root = Files.createTempDirectory("graft_ckpt_open_fp").toString
+    val turns = TranscriptGen.transcripts(spark, nConvs = 10,
+      turnsPerConv = 4, hotTurns = 0, partitions = 2).toDF()
+      .unionByName(TranscriptGen.openTranscripts(spark, nConvs = 10,
+        turnsPerConv = 4, nBases = 4, partitions = 2).toDF())
+    def run(pattern: Option[String]) = KgPipeline.run(spark, turns,
+      checkpointRoot = Some(root), shufflePartitions = 2,
+      gazetteerFastPathMax = 0, openShapePattern = pattern)
+    val first = run(Some(MentionDetect.OpenShapePattern))
+    assert(first.stats.map(_.name) == declared)
+    assert(first.stats.forall(!_.skipped))
+    for (pattern <- Seq(Some("[0-9]{2}"), None)) {
+      val again = run(pattern)
+      assert(again.stats.map(_.name) == declared)
+      assert(again.stats.forall(!_.skipped),
+        s"$pattern: stale reuse of ${again.stats.filter(_.skipped).map(_.name)}")
+    }
+  }
+
+  test("an open run resumes: every stage and the extraction metrics " +
+    "commit, a rerun schedules no job and returns the same tables, and " +
+    "every edge endpoint is a node") {
+    val root = Files.createTempDirectory("graft_ckpt_open").toString
+    // wide enough (> LocalCanonMaxEntities open names) that the map is
+    // built by the distributed canonicalization
+    val turns = TranscriptGen.openTranscriptsWide(spark, nConvs = 1500,
+      turnsPerConv = 8, nBases = 1200, partitions = 4).toDF().cache()
+    def run() = KgPipeline.run(spark, turns, checkpointRoot = Some(root),
+      shufflePartitions = 4, gazetteerFastPathMax = 0,
+      openShapePattern = Some(MentionDetect.OpenShapePattern))
+    def tables(r: KgPipeline.Result) = (r.triples.collect().toSet,
+      r.canonicalMap.collect().map(x => x.getString(0) -> x.getString(1)).toMap,
+      r.nodes.collect().map(n => (n.entity_id, n.canonical,
+        n.surface_forms.toSeq)).toSet,
+      r.edges.collect().toSet)
+    val first = run()
+    assert(first.canonPath.startsWith("distributed"),
+      s"canon path was '${first.canonPath}' — fixture too small")
+    assert(first.stats.map(_.name) == declared)
+    assert(first.stats.forall(!_.skipped))
+    assert(Files.exists(Paths.get(root, "extraction_metrics.json")))
+    val firstTables = tables(first)
+
+    val (again, jobs) = JobCount(spark)(run())
+    assert(jobs == 0, s"resume scheduled $jobs jobs")
+    assert(again.stats.forall(_.skipped))
+    assert(again.canonPath == "resumed")
+    assert(tables(again) == firstTables)
+
+    // one node per canonical id, open ones included
+    val (_, canon, nodes, _) = firstTables
+    assert(nodes.map(_._1) == canon.values.toSet)
+    val closed = KgPipeline.run(spark, turns, shufflePartitions = 4)
+    for ((name, r) <- Seq("open" -> again, "closed" -> closed)) {
+      val ids = r.nodes.collect().map(_.entity_id).toSet
+      val ends = r.edges.collect().flatMap(e => Seq(e.src, e.dst)).toSet
+      assert(ends.nonEmpty, s"$name: no edges")
+      assert(ends.subsetOf(ids), s"$name: edge endpoints without a node: " +
+        ends.diff(ids).take(5))
+    }
+    turns.unpersist()
   }
 
   private val mapper = new ObjectMapper()

@@ -1,6 +1,7 @@
 package graft
 
 import graft.gen.{TranscriptGen, Vocab}
+import graft.mention.MentionDetect
 import graft.pipeline.KgPipeline
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
@@ -106,10 +107,24 @@ class KgPipelineBranchesSpec extends AnyFunSuite {
     // the ids are checked before any stage runs: nothing was committed
     val left = new java.io.File(root).list().toSeq
     assert(left.intersect(declared).isEmpty, s"stages committed: $left")
-    // runOpen checks the same closed ids on the driver, before any job
+    // open mode checks the same closed ids on the driver, before any job
     val (eOpen, openJobs) = JobCount(spark)(intercept[IllegalArgumentException](
-      KgPipeline.runOpen(spark, turns, dup, shufflePartitions = 2)))
-    assert(openJobs == 0, s"runOpen scheduled $openJobs jobs before it threw")
+      KgPipeline.run(spark, turns, dup, shufflePartitions = 2,
+        openShapePattern = Some(MentionDetect.OpenShapePattern))))
+    assert(openJobs == 0, s"open run scheduled $openJobs jobs before it threw")
     assert(eOpen.getMessage == e.getMessage)
+  }
+
+  test("runOpen is run in open mode with the default shape pattern") {
+    val mixed = turns.unionByName(TranscriptGen.openTranscripts(spark,
+      nConvs = 20, turnsPerConv = 6, nBases = 4, partitions = 2).toDF())
+    val viaRunOpen = KgPipeline.runOpen(spark, mixed, shufflePartitions = 2)
+    val viaRun = KgPipeline.run(spark, mixed, shufflePartitions = 2,
+      openShapePattern = Some(MentionDetect.OpenShapePattern))
+    assert(viaRunOpen.canonPath == viaRun.canonPath)
+    val triples = viaRunOpen.triples.collect().toSet
+    assert(triples.exists(_.subj.startsWith(MentionDetect.OpenPrefix)),
+      "no open triple in fixture")
+    assert(triples == viaRun.triples.collect().toSet)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.gen.{TranscriptGen, Vocab}
+import graft.mention.MentionDetect
 import graft.oracle.ReferenceOracle
 import graft.pipeline.KgPipeline
 import graft.schema.{Triple, Turn}
@@ -12,6 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class KgPipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
+  /** the default open shape every open test but one runs with */
+  private val openShape = MentionDetect.OpenShapePattern
 
   private lazy val turns = {
     import spark.implicits._
@@ -157,9 +160,9 @@ class KgPipelineSpec extends AnyFunSuite {
         jaccardThreshold = 0.3, localMaxEntities = Int.MaxValue)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(local == expected)
-    // end-to-end, KgPipeline.runOpen routes its entity table through
-    // canonicalMapDf; the open-entity tests below pin its map against
-    // the oracle on its local and its distributed branch
+    // end-to-end, KgPipeline.run's open mode routes its entity table
+    // through canonicalMapDfTracked; the open-entity tests below pin its
+    // map against the oracle on its local and its distributed branch
   }
 
   test("open-entity pipeline: provisional entities (shape-detected, " +
@@ -169,7 +172,8 @@ class KgPipelineSpec extends AnyFunSuite {
     val openTurns = TranscriptGen.openTranscripts(spark, nConvs = 150,
       turnsPerConv = 8, nBases = 6, partitions = 4)
     val allTurns = turns.toDF().unionByName(openTurns.toDF())
-    val result = KgPipeline.runOpen(spark, allTurns, shufflePartitions = 4)
+    val result = KgPipeline.run(spark, allTurns, shufflePartitions = 4,
+      openShapePattern = Some(openShape))
     val got = result.triples.collect().toSeq
 
     val collectedAll = allTurns
@@ -208,9 +212,10 @@ class KgPipelineSpec extends AnyFunSuite {
       turnsPerConv = 8, nBases = 6, partitions = 4)
     val allTurns = turns.toDF().unionByName(openTurns.toDF())
     def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
-    val fused = KgPipeline.runOpen(spark, allTurns, shufflePartitions = 4)
-    val composed = KgPipeline.runOpen(spark, allTurns,
-      shufflePartitions = 4, gazetteerFastPathMax = 0)
+    val fused = KgPipeline.run(spark, allTurns, shufflePartitions = 4,
+      openShapePattern = Some(openShape))
+    val composed = KgPipeline.run(spark, allTurns, shufflePartitions = 4,
+      gazetteerFastPathMax = 0, openShapePattern = Some(openShape))
     val fusedT = fused.triples.collect()
     val composedT = composed.triples.collect()
     assert(fusedT.map(key).toSet == composedT.map(key).toSet)
@@ -223,8 +228,8 @@ class KgPipelineSpec extends AnyFunSuite {
     // relabel forced off broadcast: identical triples, and the relabel
     // joins carry NO broadcast hint (the physical join is then free to
     // shuffle — the only shape that holds for an unbounded vocabulary)
-    val shuffled = KgPipeline.runOpen(spark, allTurns,
-      shufflePartitions = 4, relabelBroadcastMax = 0)
+    val shuffled = KgPipeline.run(spark, allTurns, shufflePartitions = 4,
+      openShapePattern = Some(openShape), relabelBroadcastMax = 0)
     assert(shuffled.triples.collect().map(key).toSet ==
       fusedT.map(key).toSet)
     val hints = shuffled.triples.queryExecution.optimizedPlan.collect {
@@ -234,6 +239,16 @@ class KgPipelineSpec extends AnyFunSuite {
     }
     assert(hints.isEmpty,
       s"relabel with knob=0 still planned ${hints.size} hinted join(s)")
+    // the open nodes join broadcasts the driver-side closed entities
+    // only, never the map, whatever the knob
+    val mapHints = shuffled.nodes.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+        Seq(j.left -> j.hint.leftHint, j.right -> j.hint.rightHint)
+    }.flatten.collect {
+      case (side, Some(h)) if h.strategy.isDefined &&
+          side.output.exists(_.name == "canonical_id") => side
+    }
+    assert(mapHints.isEmpty, s"open nodes broadcast the map: $mapHints")
   }
 
   test("wide open vocabulary (> LocalCanonMaxEntities distinct names) " +
@@ -241,13 +256,15 @@ class KgPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val wide = TranscriptGen.openTranscriptsWide(spark, nConvs = 3000,
       turnsPerConv = 8, nBases = 1500, partitions = 8).cache()
-    val result = KgPipeline.runOpen(spark, wide.toDF(), shufflePartitions = 8)
+    val result = KgPipeline.run(spark, wide.toDF(), shufflePartitions = 8,
+      openShapePattern = Some(openShape))
     val got = result.triples.collect().toSeq
     // the scale branch must actually have run (r4's bench pool of 16
     // names always fell into the driver-local branch)
     assert(result.canonPath.startsWith("distributed"),
       s"canon path was '${result.canonPath}' — fixture too small")
-    val openCount = result.openEntities.count()
+    val openCount = result.canonicalMap
+      .filter(col("entity_id").startsWith(MentionDetect.OpenPrefix)).count()
     assert(openCount > graft.canon.Canonicalize.LocalCanonMaxEntities,
       s"only $openCount open names detected")
 
@@ -301,20 +318,21 @@ class KgPipelineSpec extends AnyFunSuite {
     // (uses, queries, updates) and "-ly" fillers all become open tokens
     val pattern = "[0-9]{2}|es$|ly"
     def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
-    val perRowRes = KgPipeline.runOpen(spark, openTurns,
-      shufflePartitions = 4, shapePattern = pattern)
+    val perRowRes = KgPipeline.run(spark, openTurns,
+      shufflePartitions = 4, openShapePattern = Some(pattern))
     val perRow = perRowRes.triples.collect()
-    val spanGroup = KgPipeline.runOpen(spark, openTurns,
-      shufflePartitions = 4, shapePattern = pattern,
-      gazetteerFastPathMax = 0).triples.collect()
+    val spanGroup = KgPipeline.run(spark, openTurns,
+      shufflePartitions = 4, gazetteerFastPathMax = 0,
+      openShapePattern = Some(pattern)).triples.collect()
     assert(perRow.nonEmpty, "fixture produced no triples")
     assert(perRow.map(key).toSet == spanGroup.map(key).toSet)
     assert(perRow.length == spanGroup.length)
     // the pattern must reach past the default anchored shape
-    val defaultShape = graft.mention.MentionDetect.OpenShapePattern.r
-    val open = perRowRes.openEntities.as[String].collect()
-    assert(open.exists(id => !defaultShape.matches(id.stripPrefix("open:"))),
-      s"no open entity outside the default shape: ${open.take(5).toSeq}")
+    val defaultShape = openShape.r
+    val openIds = perRowRes.canonicalMap.select($"entity_id").as[String]
+      .filter(_.startsWith(MentionDetect.OpenPrefix)).collect()
+    assert(openIds.exists(id => !defaultShape.matches(id.stripPrefix("open:"))),
+      s"no open entity outside the default shape: ${openIds.take(5).toSeq}")
   }
 
   test("hot conversation is present and yields triples (skew path)") {

@@ -93,8 +93,10 @@ class LineageCutSpec extends AnyFunSuite {
       .toDF().cache()
     def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
     def run(cut: LineageCut) = {
-      val r = graft.pipeline.KgPipeline.runOpen(spark, turns,
-        shufflePartitions = 4, cut = cut)
+      val r = graft.pipeline.KgPipeline.run(spark, turns,
+        shufflePartitions = 4,
+        openShapePattern = Some(graft.mention.MentionDetect.OpenShapePattern),
+        cut = cut)
       assert(r.canonPath.startsWith("distributed"),
         s"canon path was '${r.canonPath}' — fixture too small")
       r.triples.collect().map(key).toSet

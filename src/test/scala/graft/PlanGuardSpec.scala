@@ -92,18 +92,24 @@ class PlanGuardSpec extends AnyFunSuite {
     val openTurns = graft.gen.TranscriptGen
       .openTranscripts(spark, nConvs = 30, turnsPerConv = 8, nBases = 4,
         partitions = 2).toDF()
+    // the open runs' node and edge tables too, on both extraction paths
+    def open(name: String, fastPathMax: Int): Seq[String] = {
+      val r = graft.pipeline.KgPipeline.run(spark,
+        turns.unionByName(openTurns), shufflePartitions = 2,
+        gazetteerFastPathMax = fastPathMax,
+        openShapePattern = Some(graft.mention.MentionDetect.OpenShapePattern))
+      audit(name, r.triples.toDF()) ++
+        audit(s"${name}_nodes", r.nodes.toDF()) ++
+        audit(s"${name}_edges", r.edges.toDF())
+    }
     val failures =
       audit("kg_fast", graft.pipeline.KgPipeline
         .run(spark, turns, shufflePartitions = 2).triples.toDF()) ++
         audit("kg_staged", graft.pipeline.KgPipeline
           .run(spark, turns, shufflePartitions = 2,
             gazetteerFastPathMax = 0).triples.toDF()) ++
-        audit("kg_open", graft.pipeline.KgPipeline
-          .runOpen(spark, turns.unionByName(openTurns),
-            shufflePartitions = 2).triples.toDF()) ++
-        audit("kg_open_staged", graft.pipeline.KgPipeline
-          .runOpen(spark, turns.unionByName(openTurns),
-            shufflePartitions = 2, gazetteerFastPathMax = 0).triples.toDF())
+        open("kg_open", graft.pipeline.KgPipeline.GazetteerFastPathMax) ++
+        open("kg_open_staged", 0)
     assert(failures.isEmpty,
       s"pipeline plan regressions:\n  ${failures.mkString("\n  ")}")
   }

@@ -1,43 +1,22 @@
 package graft
 
 import graft.functions.VecOps
-import graft.gen.Vocab
-import graft.link.EntityLink
-import graft.schema.Entity
 import org.scalatest.funsuite.AnyFunSuite
 
 class VecMetricsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  test("VecOps: cosine/l2/pairFeatures/padTruncate agree with plain Scala") {
+  test("VecOps: cosine/l2 agree with plain Scala") {
     import spark.implicits._
     val df = Seq((Seq(3.0f, 4.0f), Seq(4.0f, 3.0f))).toDF("a", "b")
     val r = df.select(
       VecOps.cosine($"a", $"b").as("cos"),
-      VecOps.l2Norm($"a").as("na"),
-      VecOps.pairFeatures($"a", $"b").as("pf"),
-      VecOps.padTruncate($"a", 4, 0.0).as("pad"),
-      VecOps.padTruncate($"a", 1, 0.0).as("trunc")).head()
+      VecOps.l2Norm($"a").as("na")).head()
     assert(math.abs(r.getDouble(0) - 24.0 / 25.0) < 1e-12)
     assert(math.abs(r.getDouble(1) - 5.0) < 1e-12)
-    assert(r.getSeq[Double](2) == Seq(3.0, 4.0, 4.0, 3.0, 1.0, 1.0))
-    assert(r.getSeq[Double](3) == Seq(3.0, 4.0, 0.0, 0.0))
-    assert(r.getSeq[Double](4) == Seq(3.0))
     // l2Normalize yields unit norm
     val n = df.select(VecOps.l2Norm(VecOps.l2Normalize($"a"))).head().getDouble(0)
     assert(math.abs(n - 1.0) < 1e-12)
-  }
-
-  test("ST1: incremental index add/remove then link") {
-    val base = EntityLink.buildIndex(Vocab.entities)
-    val updated = EntityLink.updateIndex(base,
-      add = Seq(Entity("ent_new", "flink", Seq("apache flink"))),
-      removeIds = Set("ent_redis"))
-    assert(updated.exists(_._1 == "ent_new"))
-    assert(!updated.exists(_._1 == "ent_redis"))
-    assert(updated.map(_._1) == updated.map(_._1).sorted)
-    val hit = graft.score.Embed.top1("apache flink", updated, 0.3)
-    assert(hit.exists(_._1 == "ent_new"))
   }
 
   test("A10 spanMeanPool / A11 combineLayers agree with plain Scala") {
